@@ -9,473 +9,57 @@ All real logic lives in ``politicamente_etl_spark``; this module only
 adapts the query catalog (plans/catalog.py + plans/extended.py) to the
 driver's three-function surface.
 
-Driver-window rotation (VERDICT r1/r2): the driver emits correctness rows
-for exactly the first 50 dict entries. ``queries()`` therefore orders by
-verification priority: (a) everything without a green driver row from any
-prior round, plus (b) verified queries whose OPERATOR CODE was refactored
-this round (a regression there must surface as a driver row, not only in
-local parity tests), then (c) the parked verified-and-untouched queries —
-still covered by tests/driver_sim.py + tests/test_oracle_parity.py every
-round. Goal: every catalog entry keeps ≥1 driver row across rounds and no
-refactor ships unwatched.
+Driver-window rotation: the driver emits correctness rows for exactly the
+first 50 dict entries, so ``queries()`` orders by verification priority.
+The CORRECTNESS_r{N}.json files beside this module are the only record of
+which names passed (``verified``); nothing is kept by hand except
+``REFACTORED_THIS_ROUND``, the verified queries whose operator code
+changed this round (a regression there must surface as a driver row, not
+only in local parity tests). Every name is still covered each round by
+tests/driver_sim.py + tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from politicamente_etl_spark.plans.catalog import CATALOG
 
-# Names with a green driver CORRECTNESS row: CORRECTNESS_r01.json (46
-# hash-match + by-design rows-only ml_minhash_lsh_pairs) ∪
-# CORRECTNESS_r02.json (48 hash-match + by-design rows-only approx_aggs) ∪
-# CORRECTNESS_r03.json (all 50 rows hash-match, incl. the re-checked
-# json_props_map_explode after the HUGEINT oracle fix) ∪
-# CORRECTNESS_r04.json (all 50 rows hash-match: 47 first-time queries +
-# 3 refactor re-checks) ∪ CORRECTNESS_r05.json (all 50 rows hash-match,
-# all first-time checks) ∪ CORRECTNESS_r06.json (all 50 rows hash-match,
-# all first-time checks, led by the six weakest-signal registrations).
-VERIFIED: frozenset[str] = frozenset(
-    {
-        # --- round 1 ---
-        "flagship_revenue_rollup",
-        "project_cast",
-        "distinct_projection",
-        "dedup_keep_first",
-        "union_all_scan",
-        "join_dim_single_key",
-        "join_composite_key_missdrop",
-        "join_derived_key_elections",
-        "anti_join_absent",
-        "sum_status_by_key",
-        "join_update_acctbal",
-        "update_match_accounting",
-        "election_date_derive",
-        "key_synthesis_concat",
-        "upsert_merge",
-        "insert_if_absent",
-        "text_stats",
-        "token_count_regex",
-        "lang_id_heuristic",
-        "doc_fingerprint",
-        "winnowing_fingerprints",
-        "winnowing_overlap_pairs",
-        "top_terms",
-        "repetition_ratio",
-        "tfidf_top_terms",
-        "exact_dedup_docs",
-        "minhash_signatures",
-        "minhash_near_dup_pairs",
-        "ngram_jaccard_pairs",
-        "jaccard_pairs_prefix_filter",
-        "near_dup_clusters",
-        "dedup_cluster_report",
-        "train_test_contamination",
-        "chunk_documents",
-        "redact_pii_docs",
-        "pack_sequences",
-        "dataset_hash_split",
-        "stratified_sample_docs",
-        "simhash_signatures",
-        "simhash_near_dup_pairs",
-        "ml_minhash_lsh_pairs",
-        "rollup_orders",
-        "cube_customer_segments",
-        "profile_orders",
-        "multimodal_features",
-        "cosine_topk",
-        "embedding_group_centroids",
-        # --- round 2 ---
-        "asof_join_purchases",
-        "range_join_value_bands",
-        "pivot_event_counts",
-        "cosine_topk_lsh",
-        "cosine_topk_ivf",
-        "embedding_cosine_near_dup",
-        "embedding_cosine_near_dup_lsh",
-        "retention_cohorts",
-        "json_props_extract",
-        "events_tumbling_window",
-        "events_sessionization",
-        "window_running_totals",
-        "customer_value_deciles",
-        "intersect_active_rich_customers",
-        "except_rich_inactive_customers",
-        "date_math_orders",
-        "funnel_signup_purchase",
-        "window_topk_orders",
-        "streaming_tumbling_window",
-        "streaming_sliding_window",
-        "streaming_session_window",
-        "streaming_dedup_count",
-        "quality_score_docs",
-        "streaming_enrich_join",
-        "streaming_stateful_counts",
-        "semi_join_fulfilled_orders",
-        "full_outer_nation_reconcile",
-        "salted_join_segment_counts",
-        "grouping_sets_orders",
-        "exact_percentiles_quantity",
-        "text_normalize",
-        "small_quantity_orders",
-        "large_order_customers",
-        "pricing_summary",
-        "shipping_priority_top10",
-        "approx_aggs",
-        "grouped_moments",
-        "argmax_order_per_customer",
-        "doc_length_histogram",
-        "bigram_top_terms",
-        "zscore_outlier_events",
-        "inverted_index_postings",
-        "rolling_7day_order_totals",
-        "unpivot_lineitem_metrics",
-        "incremental_dedup_new_docs",
-        "corpus_admission_report",
-        "streaming_interval_join",
-        "unigram_logprob_quality",
-        "minhash_incremental_pairs",
-        # --- round 3 ---
-        "json_props_map_explode",
-        "hybrid_search_rrf",
-        "consistent_sample_k",
-        "oov_rate_new_sources",
-        "length_bucketed_batches",
-        "gopher_quality_report",
-        "top_bigram_repetition",
-        "dedup_rate_by_source",
-        "near_dup_edit_distance",
-        "temperature_mix_weights",
-        "discounted_revenue",
-        "promo_revenue_share",
-        "order_priority_followups",
-        "small_quantity_revenue",
-        "top_supplier_revenue",
-        "local_supplier_volume",
-        "returned_items_top_customers",
-        "customer_order_gaps",
-        "orders_yoy_growth",
-        "events_ohlc_bars",
-        "user_activity_profile",
-        "mips_topk",
-        "knn_label_vote",
-        "ann_recall_report",
-        "semdedup_keep_list",
-        "boilerplate_shingle_score",
-        "vocab_growth_curve",
-        "scd2_customer_history",
-        "equi_depth_histogram_prices",
-        "mad_outlier_events",
-        "rfm_customer_segments",
-        "click_conversion_attribution",
-        "markov_event_transitions",
-        "dense_rank_supplier_parts",
-        "epoch_sample_realized",
-        "kmeans_refined_centroids",
-        "cross_source_dup_matrix",
-        "funnel_three_step_ordered",
-        "events_hourly_seasonality",
-        "customer_ltv_curve",
-        "token_fertility_by_source",
-        "langid_confusion_matrix",
-        "incremental_agg_merge",
-        "bigram_logprob_quality",
-        "bigram_backoff_score_batch",
-        "variant_props_extract",
-        "variant_schema_profile",
-        # --- round 4 ---
-        "benford_first_digit",
-        "bitflag_order_profile",
-        "bootstrap_replicate_totals",
-        "bracketed_discount_revenue",
-        "brand_supplier_counts",
-        "bytes_per_token_by_source",
-        "centroid_drift_by_label",
-        "chunk_dedup_report",
-        "class_rebalance_realized",
-        "cogroup_conversion_stats",
-        "data_quality_orders",
-        "decile_lift_table",
-        "dominant_supplier_share",
-        "dsir_importance_weights",
-        "embedding_norm_outliers",
-        "event_key_skew_report",
-        "frame_sample_plan",
-        "gap_fill_daily_revenue",
-        "gini_spend_by_nation",
-        "greedy_pack_stats",
-        "idle_rich_customers",
-        "kmv_distinct_users",
-        "knn_graph_degree_hist",
-        "min_unit_price_supplier",
-        "minhash_calibration_report",
-        "nation_product_margin",
-        "order_count_distribution",
-        "pq_code_assignment",
-        "priority_mode_by_segment",
-        "recursive_user_ancestry",
-        "regional_market_share",
-        "rolling_zscore_events",
-        "running_distinct_users",
-        "snapshot_diff_cdc",
-        "source_vocab_jaccard",
-        "stratified_kfold_assign",
-        "streaming_complete_totals",
-        "streaming_left_outer_join",
-        "streaming_windowed_topk",
-        "supplier_revenue_share_gate",
-        "template_chunks_cross_source",
-        "tfidf_query_similarity",
-        "token_entropy_quality",
-        "token_pmi_pairs",
-        "two_nation_trade_volume",
-        "user_activity_streaks",
-        "waiting_supplier_audit",
-        "weighted_median_freight",
-        # --- round 5 ---
-        "basket_lift_pairs",
-        "basket_lift_pairs_rel",
-        "copurchase_triangles",
-        "copurchase_communities",
-        "pareto_frontier_orders",
-        "event_sequence_regex",
-        "session_bounce_rate",
-        "conversion_latency_histogram",
-        "ewma_user_value",
-        "theil_sen_revenue_trend",
-        "hist2d_price_quantity",
-        "orders_dow_seasonality",
-        "customer_status_runs",
-        "embedding_dim_variance_rank",
-        "streaming_cdc_changelog",
-        "top_tokens_per_source",
-        "txlog_merge_report",
-        "txlog_time_travel_counts",
-        "bloom_prefiltered_join",
-        "copurchase_pagerank",
-        "streaming_txlog_exactly_once",
-        "per_source_doc_cap",
-        "txlog_zonemap_scan",
-        "txlog_cdf_changes",
-        "ivf_pq_topk",
-        "blocklist_filter_report",
-        "hard_negative_mining",
-        "personalized_pagerank_parts",
-        "zipf_octave_profile",
-        "pit_training_features",
-        "except_all_net_shipments",
-        "weighted_median_udaf",
-        "streaming_txlog_source_tail",
-        "cms_heavy_hitters",
-        "txlog_restore_report",
-        "streaming_lakehouse_roundtrip",
-        "dedup_savings_report",
-        "provenance_commit_rollup",
-        "txlog_optimize_invariance",
-        "bm25_topk_docs",
-        "dup_ngram_costing",
-        "epoch_shuffle_shards",
-        "hashed_classifier_gate",
-        "token_budget_selection",
-        "mmr_diverse_topk",
-        "ndcg_ann_eval",
-        "hll_register_merge",
-        "daily_revenue_autocorr",
-        "k_anonymity_report",
-        "kcore_peeling_rounds",
-        # --- round 6 ---
-        "zorder_skipping_model",
-        "ab_srm_check",
-        "weekly_decomposition_profile",
-        "markov_entropy_rate",
-        "growth_accounting_weekly",
-        "txlog_zorder_storage_report",
-        "bpe_pair_counts",
-        "source_unigram_kl",
-        "txlog_schema_evolution",
-        "weighted_sample_topk",
-        "ols_revenue_trend_by_nation",
-        "streaming_hll_merge",
-        "cosine_topk_lsh_multiprobe",
-        "dim_label_mutual_info",
-        "kaplan_meier_retention",
-        "revenue_changepoint_cusum",
-        "rbo_ann_comparison",
-        "bpe_one_merge_recount",
-        "l_diversity_report",
-        "dedup_method_pr",
-        "embedding_dim_robust_scale",
-        "mix_schedule_realized",
-        "char_coverage_curve",
-        "ab_test_sufficient_stats",
-        "heldout_perplexity_by_source",
-        "jsonl_roundtrip_stats",
-        "cms_merge_proof",
-        "trimmed_mean_revenue_by_segment",
-        "dup_span_extraction",
-        "dedup_spans_applied",
-        "unigram_viterbi_segmentation",
-        "u_shaped_attribution",
-        "seasonal_decomposition_hourly",
-        "ipw_telemetry_estimates",
-        "consistent_hash_rebalance",
-        "corpus_datasheet",
-        "geo_neighbor_pairs",
-        "seq_pattern_support",
-        "unigram_mstep_piece_counts",
-        "geo_density_clusters",
-        "jl_projection_distance_pairs",
-        "item_item_cooccurrence_sim",
-        "txlog_right_to_erasure",
-        "window_funnel_levels",
-        "adamic_adar_link_pred",
-        "mutual_knn_pairs",
-        "loo_target_encoding_segment",
-        "holt_winters_daily_revenue",
-        "hbos_event_outliers",
-        "classifier_auc_report",
-        # --- round 7 --- (CORRECTNESS_r07.json: all 50 rows full-pass;
-        # 44 first-time greens below + 6 refactor re-checks already listed)
-        "bfs_hop_histogram",
-        "bootstrap_auc_replicates",
-        "business_day_latency_profile",
-        "canonical_keep_best_report",
-        "classifier_calibration_bins",
-        "classifier_pr_report",
-        "clustering_coefficient_top",
-        "conformal_coverage_report",
-        "consistent_sample_k_per_source",
-        "copurchase_skipgram_pairs",
-        "copurchase_walk_corpus",
-        "degree_assortativity",
-        "domain_weights_mw_update",
-        "embedding_dim_covariance_top",
-        "eval_ngram_decontamination",
-        "events_hourly_uniformity_chi2",
-        "hash_bucket_collision_profile",
-        "hill_tail_index",
-        "histogram_quantile_merge_proof",
-        "holt_backtest_report",
-        "hub_removal_robustness",
-        "intersect_all_quantities",
-        "isotonic_calibration_gate",
-        "ivm_join_delta_proof",
-        "label_propagation_parts",
-        "langid_kappa_agreement",
-        "linkage_fs_weights",
-        "lsh_near_dup_recall_report",
-        "markov_heldout_accuracy",
-        "mutual_knn_pairs_lsh",
-        "orc_roundtrip_stats",
-        "partition_pruning_report",
-        "quantile_normalization_scores",
-        "segment_nation_association",
-        "spearman_quality_vs_logit",
-        "streaming_holt_user_value",
-        "supplier_hhi_by_region",
-        "t_closeness_report",
-        "txlog_bloom_point_scan",
-        "txlog_constraint_gate_report",
-        "txlog_deletion_vector_report",
-        "txlog_history_report",
-        "txlog_vacuum_erasure_proof",
-        "wordpiece_greedy_segmentation",
-        # --- round 8 --- (CORRECTNESS_r08.json: 49 hash-match rows — 42
-        # first-time greens below + 7 txlog refactor re-checks already
-        # listed above — plus the by-design rows-only KLL decile query,
-        # which got its one weak driver row per VERDICT r7 item 5)
-        "bucketed_colocated_join",
-        "lateral_topk_orders",
-        "collation_aware_dedup",
-        "soft_dedup_weights",
-        "contiguous_id_assignment",
-        "harmonic_centrality_seeds",
-        "kneser_ney_bigram_scores",
-        "ccnet_lang_buckets_report",
-        "linkage_entity_resolution",
-        "replica_divergence_buckets",
-        "lsh_index_cdf_maintenance",
-        "mrl_truncation_recall",
-        "gmm_em_one_step",
-        "huber_mean_revenue_by_segment",
-        "kalman_local_level_daily",
-        "wav_decode_stats",
-        "png_decode_stats",
-        "bmp_decode_stats",
-        "xml_roundtrip_stats",
-        "codec_roundtrip_matrix",
-        "txlog_auto_optimize_policy",
-        "txlog_incremental_mv",
-        "txlog_layout_evolution_proof",
-        "txlog_null_key_tombstone_proof",
-        "txlog_sync_report",
-        "txlog_time_travel_timestamp",
-        "txlog_vacuum_lifecycle_report",
-        "price_psi_by_year",
-        "gate_vs_length_mcnemar",
-        "doc_length_ks_by_source",
-        "logrank_building_vs_rest",
-        "kmv_set_ops_users",
-        "retrieval_mrr_report",
-        "streaming_cusum_user_alerts",
-        "txlog_concurrent_writers_audit",
-        "dau_mau_stickiness",
-        "neyman_allocation_plan",
-        "brier_decomposition_gate",
-        "sssp_weighted_histogram",
-        "source_lang_diversity",
-        "lang_char_js_divergence",
-        "hits_order_part_scores",
-        "equi_depth_histogram_prices_approx",
-        # --- round 9 --- (CORRECTNESS_r09.json: all 50 rows full-pass —
-        # the 35 never-sim-checked leads + 15 txlog/stat/stream re-checks)
-        "txlog_rowindex_delete_proof",
-        "txlog_dv_vs_cow_report",
-        "txlog_dv_cdf_feed",
-        "pipe_syntax_revenue_report",
-        "sql_udf_price_bands",
-        "group_by_all_priority_matrix",
-        "offset_pagination_orders",
-        "parameterized_sql_filter",
-        "lateral_alias_margin_chain",
-        "mann_whitney_u_segments",
-        "benjamini_hochberg_fdr_gates",
-        "curriculum_schedule_by_difficulty",
-        "csv_quarantine_report",
-        "equi_depth_histogram_hashsketch",
-        "anova_oneway_segments",
-        "levene_brown_forsythe_segments",
-        "hash_randomization_test",
-        "tost_equivalence_gate",
-        "jsonl_quarantine_report",
-        "sentence_split_stats",
-        "identifier_clause_scan",
-        "try_arithmetic_audit",
-        "price_cume_dist_by_segment",
-        "numeric_mentions_stats",
-        "order_line_array_metrics",
-        "txlog_dv_restore_proof",
-        "jarque_bera_normality_gate",
-        "grubbs_max_outlier_gate",
-        "bleu2_pair_precision",
-        "twap_daily_value",
-        "pinball_loss_eval",
-        "split_gain_candidates",
-        "streaming_txlog_ignore_deletes",
-        "txlog_generated_column_proof",
-        "txlog_column_rename_proof",
-        "interval_union_coverage",
-        "ivm_agg_under_deletes",
-        "streaming_custom_sessions",
-        "getis_ord_hotspots",
-        "int8_quantization_recall",
-        "purged_walkforward_folds",
-        "negative_sampling_weights",
-        "txlog_shallow_clone_proof",
-    }
-)
+_HERE = os.path.dirname(os.path.abspath(__file__))
+
+
+def verified(root: str = _HERE) -> dict[str, tuple[int, int]]:
+    """Names whose latest driver row passed → (first passing round,
+    latest round), read from the CORRECTNESS_r{N}.json files in ``root``
+    in integer round order (r10 after r9). A row passes on
+    ``hash_match``, or on ``err == "no_oracle"`` for a catalog entry that
+    has no oracle SQL by design (rows-only)."""
+    rounds = sorted(
+        (int(m.group(1)), os.path.join(root, f))
+        for f in os.listdir(root)
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f))
+    )
+    first: dict[str, int] = {}
+    latest: dict[str, tuple[int, bool]] = {}
+    for rnd, path in rounds:
+        with open(path) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            ok = row.get("hash_match") is True or (
+                row.get("err") == "no_oracle"
+                and name in CATALOG
+                and CATALOG[name].sql is None
+            )
+            if ok:
+                first.setdefault(name, rnd)
+            latest[name] = (rnd, ok)
+    return {n: (first[n], rnd) for n, (rnd, ok) in latest.items() if ok}
+
 
 # Verified queries whose operator implementation changed THIS round —
 # parked status is 'verified AND untouched since'; these stay in the front
@@ -547,54 +131,24 @@ REFACTORED_THIS_ROUND: frozenset[str] = frozenset(
     }
 )
 
-# Queries that jump the oldest-first catalog queue for the next driver
-# window. The round-9 batch (35 never-sim-checked leads) all earned green
-# rows in CORRECTNESS_r09.json and moved to VERIFIED; round 10 is an
-# optimization round with no new registrations, so the lead list is
-# empty and the window is spent on the refactor re-checks (below) plus
-# the oldest still-unverified registrations.
-NEVER_SIM_CHECKED: tuple[str, ...] = ()
-
 
 def _ordered_names() -> list[str]:
-    """Never-verified + refactored-this-round first (catalog order
-    preserved within each group, except the never-sim-checked entries,
-    which lead the front group — weakest verification signal goes
-    first), then never-verified rows-only entries (sql=None — a driver
-    row is only a weak rows-count check, so they must not consume an
-    oracle-bearing window slot while the parity queue drains; VERDICT
-    r4 #6), then the parked verified queries."""
-    lead = [
-        n
-        for n in NEVER_SIM_CHECKED
-        if n in CATALOG and n not in VERIFIED
-    ]
-    # refactor re-checks go immediately after the leads: under plain
-    # catalog order they can land past slot 50 (round 8: positions
-    # 112-113, verified) and the regression row would never be emitted
-    refac = [
-        n for n in CATALOG if n in REFACTORED_THIS_ROUND and n not in lead
-    ]
-    front = lead + refac + [
-        n
-        for n in CATALOG
-        if n not in lead
-        and n not in REFACTORED_THIS_ROUND
-        and n not in VERIFIED
-        and CATALOG[n].sql is not None
-    ]
-    rows_only = [
-        n
-        for n in CATALOG
-        if n not in VERIFIED
-        and n not in lead
-        and CATALOG[n].sql is None
-        and n not in REFACTORED_THIS_ROUND
-    ]
-    back = [
-        n for n in CATALOG if n in VERIFIED and n not in REFACTORED_THIS_ROUND
-    ]
-    return front + rows_only + back
+    """One stable sort over CATALOG (ties keep catalog order):
+    REFACTORED_THIS_ROUND first; then never-verified names with oracle
+    SQL; then never-verified rows-only names (a rows-only driver row is a
+    weak check, so it must not take an oracle-bearing slot while the
+    parity queue drains); then verified names, longest-unseen (oldest
+    latest green round) first."""
+    green = verified()
+
+    def key(name: str) -> tuple[int, int]:
+        if name in REFACTORED_THIS_ROUND:
+            return (0, 0)
+        if name not in green:
+            return (1 if CATALOG[name].sql is not None else 2, 0)
+        return (3, green[name][1])
+
+    return sorted(CATALOG, key=key)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -21,11 +21,6 @@ def project_rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     return df.select(*[F.col(src).alias(dst) for src, dst in mapping.items()])
 
 
-def with_casts(df: DataFrame, casts: dict[str, str]) -> DataFrame:
-    """P7 — type-cast expressions (`load.py:16,61,75,80-81,111`)."""
-    return df.withColumns({c: F.col(c).cast(t) for c, t in casts.items()})
-
-
 def distinct_rows(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """A2/A3 — DISTINCT over a projection (`load.py:33,59`). Spark plans a
     hash aggregate with a map-side partial, so the shuffle carries only the
@@ -65,14 +60,6 @@ def union_all(*dfs: DataFrame, allow_missing: bool = False) -> DataFrame:
     return reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing), dfs
     )
-
-
-def nonnull_filter(df: DataFrame, cols: list[str]) -> DataFrame:
-    """P6 — join-miss drop (`load.py:77`). The reference uses Python
-    truthiness (would also drop id 0 / ''); the intent is NOT NULL
-    (SURVEY.md §2.9.3), which is what inner-join semantics give."""
-    cond = reduce(lambda a, c: a & F.col(c).isNotNull(), cols, F.lit(True))
-    return df.filter(cond)
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

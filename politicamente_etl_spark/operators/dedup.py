@@ -49,7 +49,9 @@ def minhash_expr(shingle_col: Column, perm: int) -> Column:
 def with_minhash_signature(
     df: DataFrame, text_col: str = "text", n_perm: int = N_MINHASH
 ) -> DataFrame:
-    """MinHash signature columns mh_0..mh_{n-1} from 3-gram token shingles.
+    """MinHash signature columns mh_0..mh_{n-1} from SHINGLE_N-gram token
+    shingles (shingles_regex's default, the width has_shingle pre-filters
+    on: mh_0 is NULL exactly when has_shingle is not TRUE).
     Per-row expressions only — the plan stays narrow until a consumer
     groups or joins.
 

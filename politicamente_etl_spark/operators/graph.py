@@ -183,15 +183,16 @@ def cooccurrence_pairs(
     afterwards. Result-identical: collect_set dedups (key, item) the way
     distinct did, and each pair is emitted once per containing key.
 
-    r10: the input is spread() on the GROUP KEY first — the fan-out
-    repartition hash-partitions by `key` with shuffle.partitions
-    partitions, which satisfies the groupBy's distribution requirement,
-    so Catalyst plans NO second exchange (the hashed_classifier_gate
-    absorption pattern): the partial collect_set and the HOF pair
-    generation run fanned out instead of on the single bench-SF scan
-    partition, for the same one-shuffle plan. A/B at sf0.1
-    (copurchase edge set): 1.62 s → 0.88 s; no-op at production split
-    counts."""
+    r10: the input is spread() on the GROUP KEY first. When the scan has
+    fewer splits than defaultParallelism, spread() hash-repartitions by
+    `key` into defaultParallelism partitions; any hash partitioning on
+    `key` satisfies the groupBy's ClusteredDistribution, so Catalyst
+    absorbs it and plans no second exchange (the hashed_classifier_gate
+    pattern): the partial collect_set and the HOF pair generation run
+    fanned out instead of on the single bench-SF scan partition. A/B at
+    sf0.1 (copurchase edge set): 1.62 s → 0.88 s. At production split counts spread() is a
+    no-op, and the groupBy plans its own single exchange — the same
+    one-shuffle plan, without the fan-out."""
     from politicamente_etl_spark.operators.core import spread
 
     return (

@@ -24,6 +24,11 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 # BPE-ish pretokenizer: letter runs, digit runs, single non-space symbols.
 TOKEN_REGEX = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
+# Token width of the minhash shingle set: the shared default of
+# shingles_regex and has_shingle (dedup.with_minhash_signature shingles
+# through shingles_regex's default), so the has_shingle pre-filter admits
+# exactly the docs that get a signature.
+SHINGLE_N = 3
 
 
 def tokens(col: str = "text") -> Column:
@@ -413,7 +418,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 5, col: str = "text") -> DataFrame:
     )
 
 
-def shingles_regex(col: str = "text", n: int = 3) -> Column:
+def shingles_regex(col: str = "text", n: int = SHINGLE_N) -> Column:
     """Token n-gram shingles via one regex pass: a lookahead captures the
     n-token window at every token start, so the scan is a single
     linear sweep with no array machinery. Higher-order-function
@@ -432,7 +437,7 @@ def shingles_regex(col: str = "text", n: int = 3) -> Column:
     )
 
 
-def has_shingle(col: str = "text", n: int = 3) -> Column:
+def has_shingle(col: str = "text", n: int = SHINGLE_N) -> Column:
     """TRUE iff `shingles_regex(col, n)` is non-empty — the cheap
     text-level twin of `size(shingles_regex(col, n)) > 0`: the lookahead
     in shingles_regex matches somewhere iff the plain n-token window

@@ -19,8 +19,6 @@ Semantic fidelity notes (SURVEY.md §2.9):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,17 +30,6 @@ from politicamente_etl_spark.operators.joins import (
     update_match_accounting,
 )
 from politicamente_etl_spark.sources.sinks import insert_if_absent, upsert
-
-
-@dataclass
-class Warehouse:
-    """The four sink tables (`load.py:20,40,63,88,120`) as DataFrames.
-    Callers persist via sources.sinks.write_managed; pipelines are pure."""
-
-    parties: DataFrame
-    politicians: DataFrame
-    elections: DataFrame
-    candidacies: DataFrame
 
 
 def seed_parties(cand: DataFrame, parties: DataFrame) -> DataFrame:

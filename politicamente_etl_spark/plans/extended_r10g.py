@@ -5,7 +5,7 @@ churned per week).
 
 Registers beyond the round-5 driver window; parity-checked locally and
 rotated into later windows. NOTE: registered after this round's final
-full driver-sim snapshot — covered by per-query parity_check + unit
+full driver-sim snapshot — covered by `driver_sim.py <name>` + unit
 tests until next round's sim."""
 
 from __future__ import annotations

@@ -7,7 +7,7 @@ table clustered the same way and asserts the storage layer skips
 exactly the modeled file set.
 
 Registered after this round's final driver-sim snapshot — covered by
-parity_check + unit tests until next round's sim."""
+`driver_sim.py <name>` + unit tests until next round's sim."""
 
 from __future__ import annotations
 

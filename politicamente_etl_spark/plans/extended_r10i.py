@@ -3,7 +3,7 @@ hash-split experiment assignment — the first gate every A/B platform
 runs before reading any metric.
 
 Registered after this round's final driver-sim snapshot — covered by
-parity_check + unit tests until next round's sim."""
+`driver_sim.py <name>` + unit tests until next round's sim."""
 
 from __future__ import annotations
 

@@ -31,11 +31,11 @@ def _basket_lift(
     Floor modes (exactly one must be set):
     - ``min_both`` — ABSOLUTE count floor. Oracle-pinned mode; does NOT
       scale (a fixed floor stops pruning as data grows — measured ×598k
-      surviving pairs at ×8 data, tools/r4_scale_probe.py).
+      surviving pairs at ×8 data, tools/scale_probe.py --x 8).
     - ``min_support_ppm`` — RELATIVE floor: keep a pair iff
       n_both · 1e6 ≥ ppm · n_orders. The at-scale default: the floor
       rises with the corpus, so surviving-pair growth stays ~linear
-      (tools/r5_scale_probe.py). Integer arithmetic only — no float
+      (tools/scale_probe.py). Integer arithmetic only — no float
       threshold drift between engines.
     """
     if (min_both is None) == (min_support_ppm is None):
@@ -127,7 +127,7 @@ def _register():
         floor applied IN the aggregate so low-support pairs never reach
         the scoring joins. All ratios are integer ppm.
 
-        Measured (tools/r4_scale_probe.py, 8× sf0.1): join time ×3.0 for
+        Measured (tools/scale_probe.py --x 8, sf0.1): join time ×3.0 for
         ×8 input — the pair join scales; what does NOT is the ABSOLUTE
         support floor (n_both ≥ 3), whose surviving-pair count exploded
         598,000× because replicated data multiplies every count. This
@@ -175,8 +175,8 @@ def _register():
         n_both · 1e6 ≥ 180 ppm · n_orders, i.e. the floor RISES with the
         corpus so surviving pairs grow ~linearly instead of the ×598k
         blow-up measured for the absolute floor at ×8 data
-        (tools/r4_scale_probe.py → tools/r5_scale_probe.py documents the
-        fixed growth curve). 180 ppm of sf0.01's ~15k orders ≈ the same
+        (`tools/scale_probe.py --queries basket_lift_pairs,basket_lift_pairs_rel`
+        measures both growth curves). 180 ppm of sf0.01's ~15k orders ≈ the same
         n_both ≥ 3 cut, so the oracle pins real rows at test scale while
         the semantics stay scale-invariant. Integer ppm arithmetic on
         both engines — no float-threshold drift."""

@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from politicamente_etl_spark.operators.joins import anti_join_absent, join_update
+from politicamente_etl_spark.operators.joins import anti_join_absent
 
 
 def upsert(existing: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
@@ -41,14 +41,6 @@ def insert_if_absent(existing: DataFrame, new: DataFrame, keys: list[str]) -> Da
     fresh = anti_join_absent(new, existing, keys)
     fresh = dedup_keep_first(fresh, keys, [F.col(c) for c in fresh.columns])
     return existing.unionByName(fresh.select(*existing.columns))
-
-
-def keyed_update(
-    target: DataFrame, updates: DataFrame, keys: list[str], set_cols: list[str]
-) -> DataFrame:
-    """K5 — batched keyed UPDATE (`load.py:113-127`) — see
-    operators.joins.join_update; re-exported here as the sink-level verb."""
-    return join_update(target, updates, keys, set_cols)
 
 
 def merge_upsert(

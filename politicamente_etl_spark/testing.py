@@ -64,16 +64,16 @@ def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str)
     return problems
 
 
-def run_parity(name: str, spark, sf_dir: str) -> list[str]:
+def run_parity(
+    name: str, spark, sf_dir: str, con: duckdb.DuckDBPyConnection
+) -> list[str]:
+    """Run catalog query ``name`` on Spark and, when it has oracle SQL, on
+    DuckDB through ``con`` (an open ``duckdb_connection(sf_dir)``); returns
+    ``compare_frames`` problems (rows-only queries just have to execute)."""
     from politicamente_etl_spark.plans.catalog import CATALOG
 
     q = CATALOG[name]
     spark_pdf = q.fn(spark, sf_dir).toPandas()
     if q.sql is None:
-        return [] if len(spark_pdf) >= 0 else [f"{name}: spark query failed"]
-    con = duckdb_connection(sf_dir)
-    try:
-        oracle_pdf = con.execute(q.sql).df()
-    finally:
-        con.close()
-    return compare_frames(spark_pdf, oracle_pdf, name)
+        return []
+    return compare_frames(spark_pdf, con.execute(q.sql).df(), name)

@@ -1,55 +1,60 @@
-"""Simulate the driver: plain SparkSession (no custom conf), import the
-contract module, run entry() + every queries() entry vs oracle_sql() via
-DuckDB at sf0.01. Run with a hostile TZ to probe timezone sensitivity."""
+"""Simulate the driver: a plain SparkSession (no custom conf) on every core,
+the contract module's entry() smoke check, then each name of queries(), in
+order, through testing.run_parity against its DuckDB oracle.
+
+    TZ=America/Sao_Paulo python tests/driver_sim.py [SF_DIR] [FILTER ...]
+
+An argument starting with "/" is the sf directory (default: SF, the
+driver's sf0.01 set). Any other argument is a filter: only names equal to
+or containing one of the filters run (e.g. `txlog dedup`); none = the full
+sweep. The hostile TZ probes timezone sensitivity. Exits 0 only if every
+compared query matches."""
+
+from __future__ import annotations
+
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession  # noqa: E402
 
-spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
-spark.sparkContext.setLogLevel("ERROR")
-print("session tz conf:", spark.conf.get("spark.sql.session.timeZone"))
-
-import __spark_entry__ as e
-
-df = e.entry(spark)
-rows = df.collect()
-print(f"entry(): {len(rows)} rows, schema={[f.name for f in df.schema.fields]}")
-assert len(rows) > 0
-
-import duckdb
-import math
+import __spark_entry__ as e  # noqa: E402
+from politicamente_etl_spark.testing import duckdb_connection, run_parity  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
 
-qs, sqls = e.queries(), e.oracle_sql()
-bad = []
-for name, fn in sorted(qs.items()):
-    sdf = fn(spark, SF).toPandas()
-    if name not in sqls:
-        print(f"  {name}: rows-only, {len(sdf)} rows")
-        continue
-    odf = con.execute(sqls[name]).df()
-    s = sdf[sorted(sdf.columns)].sort_values(by=sorted(sdf.columns), kind="mergesort").reset_index(drop=True)
-    o = odf[sorted(odf.columns)].sort_values(by=sorted(odf.columns), kind="mergesort").reset_index(drop=True)
-    ok = list(s.columns) == list(o.columns) and len(s) == len(o)
-    if ok:
-        for c in s.columns:
-            for a, b in zip(s[c].tolist(), o[c].tolist()):
-                if isinstance(a, float) and isinstance(b, float) and math.isnan(a) and math.isnan(b):
-                    continue
-                if a != b:
-                    ok = False
-                    bad.append((name, c, a, b))
-                    break
-            if not ok:
-                break
-    else:
-        bad.append((name, "shape", (list(s.columns), len(s)), (list(o.columns), len(o))))
-    print(f"  {name}: {'OK' if ok else 'MISMATCH'} ({len(s)} rows)")
-print("RESULT:", "ALL OK" if not bad else f"MISMATCHES: {bad[:5]}")
-sys.exit(0 if not bad else 1)
+
+def main(argv: list[str]) -> int:
+    sf = next((a for a in argv if a.startswith("/")), SF)
+    pats = [a for a in argv if not a.startswith("/")]
+    cores = len(os.sched_getaffinity(0))
+    spark = (
+        SparkSession.builder.master(f"local[{cores}]")
+        .appName("driver-sim")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    print("session tz conf:", spark.conf.get("spark.sql.session.timeZone"))
+
+    df = e.entry(spark)
+    rows = df.collect()
+    print(f"entry(): {len(rows)} rows, schema={df.columns}")
+    assert rows
+
+    sqls = e.oracle_sql()
+    names = [n for n in e.queries() if not pats or any(p in n for p in pats)]
+    print(f"comparing {len(names)} queries at {sf}")
+    bad: list[str] = []
+    with duckdb_connection(sf) as con:
+        for name in names:
+            problems = run_parity(name, spark, sf, con)
+            bad += problems
+            kind = "oracle" if name in sqls else "rows-only"
+            print(f"  {name}: {'MISMATCH' if problems else 'OK'} ({kind})")
+    print("RESULT:", "ALL OK" if not bad else f"MISMATCHES: {bad[:5]}")
+    return 0 if not bad else 1
+
+
+if __name__ == "__main__":
+    raise SystemExit(main(sys.argv[1:]))

@@ -107,21 +107,34 @@ def test_scale_probes_compute_from_input(spark, sf_dir):
 
 
 def test_has_shingle_equals_nonempty_shingles(spark, sf_dir):
+    from politicamente_etl_spark.operators.dedup import with_minhash_signature
     from politicamente_etl_spark.operators.text import (
+        SHINGLE_N,
         has_shingle,
         shingles_regex,
     )
 
     docs = _docs(spark, sf_dir).withColumn(
         "text",
-        # exercise the edge cases too: empty, 1-token, 2-token, NULL
+        # exercise the edge cases too: empty, 1..SHINGLE_N tokens, NULL
         F.when(F.col("doc_id") % 17 == 0, F.lit(""))
         .when(F.col("doc_id") % 17 == 1, F.lit("one"))
         .when(F.col("doc_id") % 17 == 2, F.lit("two tokens"))
         .when(F.col("doc_id") % 17 == 3, F.lit(None).cast("string"))
+        .when(F.col("doc_id") % 17 == 4, F.lit(" ".join(["tok"] * SHINGLE_N)))
         .otherwise(F.col("text")),
     )
-    for n in (2, 3, 5):
+    # the default-width pre-filter admits exactly the docs that get a
+    # minhash signature (_signature_table relies on this)
+    sig = with_minhash_signature(docs, n_perm=1)
+    assert (
+        sig.filter(
+            F.col("mh_0").isNotNull()
+            != F.coalesce(has_shingle("text"), F.lit(False))
+        ).count()
+        == 0
+    )
+    for n in (2, SHINGLE_N, 5):
         # NULL text: has_shingle is NULL, size() form is NULL > 0 = NULL
         # — both filter-false; compare via coalesce to FALSE
         mism2 = docs.filter(

@@ -1,6 +1,6 @@
 """Round-6 batch 1 operator tests: BM25 retrieval, duplicated-n-gram
-costing, epoch-shuffle shards. Oracle parity is covered by driver_sim /
-parity_check; these pin semantics the oracle can't see (rank ordering
+costing, epoch-shuffle shards. Oracle parity is covered by driver_sim.py
+(name filters); these pin semantics the oracle can't see (rank ordering
 causes, exact costing on a constructed corpus, epoch invariance)."""
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Round-6 batch 2 operator tests: MMR diversification, NDCG eval
 weights, HLL register semantics, autocorrelation terms, k-anonymity.
-Oracle parity is covered by driver_sim / parity_check; these pin the
+Oracle parity is covered by driver_sim.py (name filters); these pin the
 semantics the oracle can't see (diversification actually trades off
 relevance, register merge associativity on adversarial splits, ACF sign
 on a constructed seasonal series, suppression accounting)."""

@@ -1,6 +1,6 @@
 """Round-6 batch 3 operator tests: k-core peeling, BPE pair counting,
 source KL drift, txlog schema evolution. Oracle parity is covered by
-driver_sim / parity_check; these pin semantics on constructed inputs
+driver_sim.py (name filters); these pin semantics on constructed inputs
 (known peel sequence, overlapping-pair counting, KL sign/zero
 behavior, null-fill on evolved reads)."""
 

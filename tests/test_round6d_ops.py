@@ -1,5 +1,5 @@
 """Round-6 batch 4 operator tests: A-ES weighted sampling and grouped
-OLS terms. Oracle parity via driver_sim / parity_check; these pin the
+OLS terms. Oracle parity via driver_sim.py (name filters); these pin the
 statistical semantics (weight monotonicity in expectation surrogates,
 merge associativity, exact OLS on a constructed line)."""
 

@@ -1,5 +1,5 @@
 """Round-6 batch 5 operator tests: multi-probe LSH, dimension-label MI,
-Kaplan-Meier terms. Oracle parity via driver_sim / parity_check; these
+Kaplan-Meier terms. Oracle parity via driver_sim.py (name filters); these
 pin the semantics on constructed inputs (multi-probe recall strictly
 superset of single-probe candidates, MI separates informative from
 random dims, KM handles censoring and gaps)."""

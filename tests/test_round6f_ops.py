@@ -1,5 +1,5 @@
 """Round-6 batch 6 operator tests: CUSUM change point and rank-biased
-overlap. Oracle parity via driver_sim / parity_check; these pin the
+overlap. Oracle parity via driver_sim.py (name filters); these pin the
 detection/metric semantics on constructed inputs."""
 
 from __future__ import annotations

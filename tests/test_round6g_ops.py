@@ -1,5 +1,5 @@
 """Round-6 batch 7 operator tests: BPE merge application. Oracle parity
-via driver_sim / parity_check; these pin the leftmost-greedy fold
+via driver_sim.py (name filters); these pin the leftmost-greedy fold
 semantics on constructed vocabularies."""
 
 from __future__ import annotations

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Regenerate QUERIES.md — the full query-catalog inventory, grouped by
 tag, with each entry's verification mode (DuckDB oracle vs rows-only),
-its driver-row status (has a green CORRECTNESS row from a past round vs
-pending in the current 50-slot window), and bench membership. Run after
-adding catalog entries:
+its driver-row status (first green round from the CORRECTNESS records,
+in the current 50-slot window, or queued behind it), and bench
+membership. Run after adding catalog entries or a CORRECTNESS file:
 
     python tools/gen_query_inventory.py
 """
@@ -17,7 +17,7 @@ from collections import defaultdict
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from politicamente_etl_spark.plans.catalog import CATALOG  # noqa: E402
-from __spark_entry__ import VERIFIED, _ordered_names  # noqa: E402
+from __spark_entry__ import _ordered_names, verified  # noqa: E402
 
 GROUPS = [
     ("Reference surface (SURVEY.md §2)", lambda tags: not any(t.startswith("ext-") for t in tags)),
@@ -63,38 +63,19 @@ def main() -> None:
         "  runs both at sf0.01 and compares row count + schema + every value.",
         "  *rows-only* = no SQL equivalent exists (engine-seeded randomness /",
         "  streaming state) and the driver checks execution + row count only.",
-        "- **driver row**: *green rN* = a passing CORRECTNESS_r{N}.json row",
-        "  exists from round N (the independent driver run, not local tests).",
-        "  *window* = no green row yet; the query sits in the current round's",
-        "  50-slot driver window awaiting its first row. *red r2* = the r2 row",
-        "  hash-failed (since fixed) and the query re-enters the window.",
+        "- **driver row**: *green rN* = the latest CORRECTNESS_r{N}.json row",
+        "  passes and the first passing row is from round N (the independent",
+        "  driver run, not local tests). *window* = no passing latest row; the",
+        "  query sits in the current round's 50-slot driver window. *queued* =",
+        "  no passing latest row, behind the window.",
         "",
     ]
-    # Rounds in which each name first went green (from the VERIFIED split
-    # documented in __spark_entry__.py; r1 names listed there first).
-    import __spark_entry__ as entry_mod
-    import inspect
-
-    src = inspect.getsource(entry_mod)
-    # every round section present in the VERIFIED frozenset, in order
-    # (review r9, fourth pass: hardcoding r2/r3 stamped every later
-    # green as r3, publishing false provenance for 5 rounds of rows)
-    import re as _re
-
-    markers = [
-        (m.start(), f"r{m.group(1)}")
-        for m in _re.finditer(r"--- round (\d+) ---", src)
-    ]
+    green = verified()
 
     def driver_status(name: str) -> str:
-        if name in VERIFIED:
-            pos = src.find(f'"{name}"')
-            rnd = "r1"
-            for mpos, label in markers:
-                if pos > mpos:
-                    rnd = label
-            return f"green {rnd}"
-        return "window"
+        if name in green:
+            return f"green r{green[name][0]}"
+        return "window" if name in window else "queued"
 
     seen: set[str] = set()
     for title, pred in GROUPS:
@@ -127,15 +108,15 @@ def main() -> None:
             )
         lines.append("")
     n_oracle = sum(1 for q in CATALOG.values() if q.sql)
-    n_green = sum(1 for name in CATALOG if name in VERIFIED)
-    n_window = sum(1 for name in CATALOG if name not in VERIFIED)
-    n_covered = sum(1 for name in CATALOG if name in VERIFIED or name in window)
+    n_green = sum(1 for name in CATALOG if name in green)
+    n_window = sum(1 for name in CATALOG if name not in green)
+    n_covered = sum(1 for name in CATALOG if name in green or name in window)
     lines += [
         "## Totals",
         "",
         f"- has oracle SQL: {n_oracle} (rows-only: {len(CATALOG) - n_oracle})",
         f"- green driver row from a past round: {n_green}",
-        f"- awaiting first driver row (in current window): {n_window}",
+        f"- awaiting a passing driver row: {n_window}",
         f"- covered this round (green or in window): {n_covered} / {len(CATALOG)}",
         f"- bench headline: {sum(1 for q in CATALOG.values() if q.bench)}",
         "",

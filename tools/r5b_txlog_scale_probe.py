@@ -1,31 +1,19 @@
 #!/usr/bin/env python
-"""Round-5 lakehouse/txlog + basket-floor scale probe (VERDICT r4 #2/#5):
-same K×-replicated sf0.1 corpus as tools/r4_scale_probe.py (imported),
-covering the commit-log family end-to-end plus the relative-support
-market-basket fix.
+"""Right-to-erasure file-count probe on the K×-replicated sf0.1 corpus
+of tools/scale_probe.py (imported): a direct erasure on the documents
+table, at 1× and K×, reports files rewritten / preserved /
+zonemap-skipped from the commit manifest. Bytes rewritten is the
+at-scale cost of a delete, so this is the txlog family's scaling signal
+beyond wall time.
 
-Timed catalog queries at 1× vs K× (time + result rows):
+The round-5 txlog + basket-floor timings (1× vs K×, time + result rows)
+are a scale_probe.py run:
 
-- txlog_right_to_erasure     — compliance delete through the commit log;
-  cost ∝ files containing the erased keys, not table size.
-- txlog_cdf_changes          — change-data-feed read over the log;
-  cost ∝ changed files per version, not table size.
-- streaming_txlog_exactly_once — micro-batched txn-idempotent appends;
-  staging IO ~linear in rows, the duplicate offers stay no-ops.
-- streaming_cdc_changelog    — the r5 rework (view state in a txlog
-  table, per VERDICT r4 #3): per-batch cost = one distributed agg over
-  the table's parquet + two txn appends; no driver-held state.
-- basket_lift_pairs_rel      — RELATIVE (ppm-of-orders) support floor:
-  survivor growth must be ~linear at K×, versus the measured ×598k
-  blow-up of the absolute floor (r4 probe). Both variants timed so the
-  table shows the fix, not asserts it.
+    python tools/scale_probe.py --x 8 --queries txlog_right_to_erasure,txlog_cdf_changes,streaming_txlog_exactly_once,streaming_cdc_changelog,basket_lift_pairs,basket_lift_pairs_rel
 
-File-count signal (bytes rewritten is the at-scale cost, per the merge
-probe): a direct erasure run on the K× documents table reports files
-rewritten / preserved / zonemap-skipped from the commit manifest.
-
-Writes nothing to the repo; probe data lands in /tmp. Results recorded
-in SURVEY.md (run manually, not in CI).
+Writes nothing to the repo; probe data lands in a temp dir that is
+removed afterwards. Results recorded in SURVEY.md (run manually, not in
+CI).
 
 Usage: python tools/r5b_txlog_scale_probe.py [K]
 """
@@ -42,26 +30,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from politicamente_etl_spark.plans.catalog import CATALOG  # noqa: E402
 from politicamente_etl_spark.session import get_spark  # noqa: E402
 from politicamente_etl_spark.sources.txlog import TxLogTable  # noqa: E402
-from tools.r4_scale_probe import SRC, replicate  # noqa: E402
-
-PROBE_QUERIES = [
-    "txlog_right_to_erasure",
-    "txlog_cdf_changes",
-    "streaming_txlog_exactly_once",
-    "streaming_cdc_changelog",
-    "basket_lift_pairs",
-    "basket_lift_pairs_rel",
-]
-
-
-def time_one(fn) -> tuple[float, int]:
-    fn().write.format("noop").mode("overwrite").save()  # warm
-    t0 = time.monotonic()
-    n = fn().count()
-    return (time.monotonic() - t0, n)
+from tools.scale_probe import SRC, replicate  # noqa: E402
 
 
 def erasure_file_counts(spark, sf_dir: str, n_files: int = 64) -> dict:
@@ -94,31 +65,18 @@ def erasure_file_counts(spark, sf_dir: str, n_files: int = 64) -> dict:
 
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    spark = get_spark(app_name="r5b-txlog-scale-probe", cpus="32")
+    spark = get_spark(
+        app_name="r5b-erasure-probe", cpus=len(os.sched_getaffinity(0))
+    )
     spark.sparkContext.setLogLevel("ERROR")
     big = tempfile.mkdtemp(prefix="r5bprobe_")
     try:
         replicate(spark, k, big)
-        # replicate() writes the fact tables; dimension tables stay 1x
-        # (the right probe semantics — dims don't grow with volume)
-        for name in os.listdir(SRC):
-            if name.endswith(".parquet") and not os.path.exists(
-                os.path.join(big, name)
-            ):
-                os.symlink(os.path.join(SRC, name), os.path.join(big, name))
-        print(f"\n== r5b txlog scale probe: 1x vs {k}x (sf0.1 base) ==")
-        for name in PROBE_QUERIES:
-            t1, n1 = time_one(lambda: CATALOG[name].fn(spark, SRC))
-            tk, nk = time_one(lambda: CATALOG[name].fn(spark, big))
-            print(
-                f"{name:30s} 1x {t1:6.2f}s ({n1:>8} rows)   "
-                f"{k}x {tk:6.2f}s ({nk:>8} rows)   "
-                f"time x{tk / t1:5.1f}  rows x{nk / max(n1, 1):7.1f}"
-            )
+        print(f"\n== erasure file counts: 1x vs {k}x (src {SRC}) ==")
         for label, d in (("1x", SRC), (f"{k}x", big)):
             st = erasure_file_counts(spark, d)
             print(
-                f"{'erasure file counts':30s} {label} {st['sec']:6.2f}s  "
+                f"{label:>4} {st['sec']:6.2f}s  "
                 f"rewrote {st['files_rewritten']} / preserved "
                 f"{st['files_preserved']} / zonemap-skipped "
                 f"{st['files_skipped_by_stats']}  "

@@ -1,31 +1,26 @@
 #!/usr/bin/env python
-"""Round-4 operator scale probe: replicate the sf0.1 tables K× (documents
+"""Operator scale probe: replicate the sf0.1 fact tables K× (documents
 with fresh ids + perturbed text, lineitem/orders with shifted keys,
-embeddings with jittered vectors), then time the new operator families at
-1× vs K×:
+embeddings with shifted ids, events with shifted event/user ids), link
+the remaining tables in unscaled (dimensions grow far slower than facts
+at 100 TB), then time each named catalog query at 1× vs K×:
 
-- chunk_dedup_report       — span-grain dedup (hash window; ~linear)
-- basket_lift_pairs        — inverted-index pair join (Σ k² per order,
-                             k constant ⇒ ~linear in orders)
-- pq_code_assignment       — broadcast codebook join (~linear in vectors)
-- rolling_zscore_events    — bounded-frame window (~linear in events)
-- pareto_frontier_orders   — two-level sweep (local pass parallel;
-                             global pass over survivors only)
+    python tools/scale_probe.py --queries chunk_dedup_report,bm25_topk_docs --x 8
 
-What this demonstrates for 100 TB design: none of these plans contain an
-unbounded self-product or a corpus-sized global sort, so runtime should
-scale ~linearly with input. The one quadratic audit query
-(knn_graph_degree_hist) is deliberately EXCLUDED — its own docstring
-routes the scale path to the LSH pair generator.
+Each timing is one warm-up run (noop write) followed by a timed count;
+the table reports seconds and result rows at both sizes and their
+ratios. A plan with no unbounded self-product or corpus-sized global
+sort should show time ×≈K; quadratic audit twins (e.g.
+knn_graph_degree_hist) show their blow-up here by design.
 
-Writes nothing to the repo; probe data lands in /tmp. Results recorded in
-SURVEY.md (run manually, not in CI).
-
-Usage: python tools/r4_scale_probe.py [K]
+Writes nothing to the repo; probe data lands in a temp dir that is
+removed afterwards. Source tables: session.DEFAULT_SF_DIR
+($SPARK_GRAFT_SF_DIR, default sf0.1).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import shutil
 import sys
@@ -37,17 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from politicamente_etl_spark.plans.catalog import CATALOG  # noqa: E402
-from politicamente_etl_spark.session import get_spark  # noqa: E402
+from politicamente_etl_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
 
-PROBE_QUERIES = [
-    "chunk_dedup_report",
-    "basket_lift_pairs",
-    "pq_code_assignment",
-    "rolling_zscore_events",
-    "pareto_frontier_orders",
-]
-
-SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+SRC = DEFAULT_SF_DIR
 
 
 def replicate(spark, k: int, out_dir: str) -> None:
@@ -103,34 +90,41 @@ def replicate(spark, k: int, out_dir: str) -> None:
             "event_id", F.col("event_id") + i * (max_eid + 1)
         ).withColumn("user_id", F.col("user_id") + i * 1_000_000),
     ).write.mode("overwrite").parquet(f"{out_dir}/events.parquet")
+    for name in os.listdir(SRC):
+        if name.endswith(".parquet") and not os.path.exists(
+            os.path.join(out_dir, name)
+        ):
+            os.symlink(os.path.join(SRC, name), os.path.join(out_dir, name))
 
 
-def time_queries(spark, sf_dir: str) -> dict[str, tuple[float, int]]:
-    out = {}
-    for name in PROBE_QUERIES:
-        df = CATALOG[name].fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm
-        t0 = time.monotonic()
-        n = CATALOG[name].fn(spark, sf_dir).count()
-        out[name] = (time.monotonic() - t0, n)
-    return out
+def time_one(fn) -> tuple[float, int]:
+    fn().write.format("noop").mode("overwrite").save()  # warm
+    t0 = time.monotonic()
+    n = fn().count()
+    return (time.monotonic() - t0, n)
 
 
 def main() -> None:
-    k = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    spark = get_spark(app_name="r4-scale-probe", cpus="32")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--queries", required=True, help="comma-separated catalog names")
+    ap.add_argument("--x", type=int, default=8, help="replication factor K")
+    args = ap.parse_args()
+    names = args.queries.split(",")
+    unknown = [n for n in names if n not in CATALOG]
+    if unknown:
+        ap.error(f"not in the catalog: {', '.join(unknown)}")
+    k = args.x
+    spark = get_spark(app_name="scale-probe", cpus=len(os.sched_getaffinity(0)))
     spark.sparkContext.setLogLevel("ERROR")
-    big = tempfile.mkdtemp(prefix="r4probe_")
+    big = tempfile.mkdtemp(prefix="scaleprobe_")
     try:
         replicate(spark, k, big)
-        base = time_queries(spark, SRC)
-        scaled = time_queries(spark, big)
-        print(f"\n== r4 scale probe: 1x vs {k}x (sf0.1 base) ==")
-        for name in PROBE_QUERIES:
-            t1, n1 = base[name]
-            tk, nk = scaled[name]
+        print(f"\n== scale probe: 1x vs {k}x (src {SRC}) ==")
+        for name in names:
+            t1, n1 = time_one(lambda: CATALOG[name].fn(spark, SRC))
+            tk, nk = time_one(lambda: CATALOG[name].fn(spark, big))
             print(
-                f"{name:28s} 1x {t1:6.2f}s ({n1:>8} rows)   "
+                f"{name:30s} 1x {t1:6.2f}s ({n1:>8} rows)   "
                 f"{k}x {tk:6.2f}s ({nk:>8} rows)   "
                 f"time x{tk / t1:5.1f}  rows x{nk / max(n1, 1):5.1f}"
             )
