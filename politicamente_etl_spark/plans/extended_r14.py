@@ -101,7 +101,7 @@ def _register():
         t = TxLogTable.create(
             spark, os.path.join(base, "t"), o, cluster_file_col="cl"
         )
-        rels = t._live_files()
+        rels = t._state().files
         basenames = [os.path.basename(r) for r in rels]
         has_dups = len(set(basenames)) < len(basenames)
         m = t.delete_where_rowindex("o_orderkey % 97 = 5")

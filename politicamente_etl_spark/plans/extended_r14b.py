@@ -166,7 +166,7 @@ def _register():
         base = tempfile.mkdtemp(prefix="txlog_sev_")
         t = TxLogTable.create(spark, os.path.join(base, "t"), b1)
         t.append(b2, merge_schema=True)
-        declared = StructType.fromJson(t._latest_schema())
+        declared = StructType.fromJson(t._state().schema)
         price_type = declared["price"].dataType.simpleString()
         nested = ",".join(
             f.name for f in declared["meta"].dataType.fields

@@ -556,7 +556,7 @@ def _register_batch3():
             disk_files.extend(
                 os.path.join(root, f) for f in files if f.endswith(".parquet")
             )
-        live = set(t._live_files())
+        live = set(t._state().files)
         orphans = len(disk_files) - len(live)
         raw = spark.read.parquet(*disk_files)
         report = (

@@ -60,6 +60,8 @@ import re
 import shutil
 import time
 import uuid
+from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,6 +132,94 @@ class ConstraintViolation(Exception):
 
 def _manifest_path(path: str, version: int) -> str:
     return os.path.join(path, _LOG_DIR, f"{version:020d}.json")
+
+
+def log_versions(path: str) -> list[int]:
+    """Committed versions of the table at `path`, ascending — the one
+    listing of `_txlog/` (the batch table and the streaming source
+    both read the log through here)."""
+    log = os.path.join(path, _LOG_DIR)
+    if not os.path.isdir(log):
+        return []
+    # strict name filter: a concurrent writer's in-flight .tmp-*.json
+    # staging file must never parse as a version (found by the real-
+    # thread race test; the link into the canonical name is the only
+    # thing that makes a manifest exist)
+    return sorted(
+        int(f[:-5])
+        for f in os.listdir(log)
+        if f.endswith(".json") and f[:-5].isdigit()
+    )
+
+
+def load_manifest(path: str, version: int) -> dict:
+    """Parsed manifest of `version` (uncached; TxLogTable caches)."""
+    with open(_manifest_path(path, version)) as fh:
+        return json.load(fh)
+
+
+def _local_path(file_uri: str) -> str:
+    """Filesystem path of a Spark `input_file_name()` URI, which is
+    URL-encoded (a space reads `%20`, a literal `%` reads `%25`)."""
+    return os.path.abspath(unquote(file_uri.removeprefix("file:")))
+
+
+@dataclass(frozen=True)
+class TableState:
+    """The table AS OF one version, folded from the retained manifests
+    in one pass (`TxLogTable._state`). Every field keeps its own
+    visibility rule:
+
+    - `files` (live, in commit order) fold from the last checkpoint at
+      or below the version;
+    - `add_versions` (rel → version of the last manifest that added
+      it; checkpoints contribute their `added_versions` map, which
+      preserves true add versions across manifest expiry), tombstones,
+      DVs, renames, constraints, generated rules and `known_columns`
+      fold from the first retained manifest — tombstones, DVs and
+      renames behind each restore's barrier;
+    - `stats` and `blooms` take the latest mention of each live file
+      in ANY retained manifest (data files are immutable), remapped
+      through the rename chain: stats follow the logical name, blooms
+      of renamed columns drop (their bits hash the old name);
+    - `schema` is the latest schema record at or below the version.
+
+    `dvs` raises while a basename-era deletion vector survives the
+    fold (the address-format fence), so only reads that apply DVs
+    fail; `restore` — the remediation — still reads the head state."""
+
+    version: int
+    files: list[str]
+    add_versions: dict[str, int]
+    stats: dict[str, dict[str, list]]
+    bloom_bits: int
+    blooms: dict[str, dict[str, list[int]]]
+    # [(origin_version, key_col, values, sidecar_path, n_keys)]: INLINE
+    # tombstones carry values (path None), SIDECAR ones a parquet
+    # delete-file path (values None)
+    tombstones: list[tuple[int, str, frozenset | None, str | None, int]]
+    # [(origin_version, sidecar_rel_path, n_rows)]
+    dv_entries: list[tuple[int, str, int]]
+    dv_fence: str | None
+    # [(origin_version, old, new)] in version order
+    renames: list[tuple[int, str, str]]
+    constraints: dict[str, str]
+    generated: dict[str, str]
+    schema: dict | None
+    known_columns: set[str]
+
+    @property
+    def dvs(self) -> list[tuple[int, str, int]]:
+        if self.dv_fence is not None:
+            raise RuntimeError(self.dv_fence)
+        return self.dv_entries
+
+    def oldest_live_add(self) -> int | None:
+        """Smallest add version among live files (None when empty): a
+        filter with a larger origin still applies to some live file."""
+        return min(
+            (self.add_versions.get(r, 0) for r in self.files), default=None
+        )
 
 
 _INT_WIDEN = {"byte": 0, "short": 1, "integer": 2, "long": 3}
@@ -241,8 +331,8 @@ def fold_renames(
     """Fold the RENAME CHAIN out of raw manifest dicts (in version
     order): [(origin_version, carrier_version, old, new)], sorted by
     origin. One implementation serves the batch reader
-    (TxLogTable._live_renames projects origin/old/new) and the
-    streaming source (which also needs the CARRIER — the version of
+    (TxLogTable._state keeps origin/old/new as TableState.renames)
+    and the streaming source (which also needs the CARRIER — the version of
     the first manifest that made the entry visible in THIS log: a
     clone carries source renames whose origins may exceed the versions
     a stale log numbering would expect, and the stream's vintage math
@@ -442,27 +532,16 @@ class TxLogTable:
         # manifests are immutable once linked (vacuum's same-version
         # checkpoint rewrite is the one exception — os.replace bumps
         # mtime, which invalidates the entry), so parsed JSON is cached
-        # per instance keyed by (mtime_ns, size). A snapshot() folds the
-        # log several times (live set, stats, tombstones, add versions);
-        # without this every fold re-reads every manifest from disk —
-        # O(versions) I/O per fold instead of per table handle.
+        # per instance keyed by (mtime_ns, size). Each op folds the log
+        # once (`_state`), but one handle serves many ops, and the raw
+        # event scans (txn ids, rebase checks) re-read it too — without
+        # the cache every op re-reads every manifest from disk.
         self._manifest_cache: dict[int, tuple[int, int, dict]] = {}
 
     # -- log plumbing -------------------------------------------------------
 
     def _versions(self) -> list[int]:
-        log = os.path.join(self.path, _LOG_DIR)
-        if not os.path.isdir(log):
-            return []
-        # strict name filter: a concurrent writer's in-flight .tmp-*.json
-        # staging file must never parse as a version (found by the real-
-        # thread race test; the link into the canonical name is the only
-        # thing that makes a manifest exist)
-        return sorted(
-            int(f[:-5])
-            for f in os.listdir(log)
-            if f.endswith(".json") and f[:-5].isdigit()
-        )
+        return log_versions(self.path)
 
     def latest_version(self) -> int:
         vs = self._versions()
@@ -474,196 +553,178 @@ class TxLogTable:
         hit = self._manifest_cache.get(version)
         if hit is not None and hit[0] == st.st_mtime_ns and hit[1] == st.st_size:
             return hit[2]
-        with open(p) as fh:
-            m = json.load(fh)
+        m = load_manifest(self.path, version)
         self._manifest_cache[version] = (st.st_mtime_ns, st.st_size, m)
         return m
 
     def history(self) -> list[dict]:
         return [self._read_manifest(v) for v in self._versions()]
 
-    def _live_files(self, version: int | None = None) -> list[str]:
-        """Fold manifests 1..version into the alive relative-path set.
-        A `checkpoint: true` manifest carries the complete live set, so
-        the fold may start there instead of at version 1."""
+    def _state(self, version: int | None = None) -> TableState:
+        """Fold the retained manifests ONCE into the table state as of
+        `version` (default: the head). Every op reads table state
+        through exactly one call, so all it sees is pinned to one
+        version; see TableState for each field's visibility rule."""
         versions = self._versions()
-        if version is not None:
-            versions = [v for v in versions if v <= version]
-            if not versions or versions[-1] != version:
-                raise ValueError(
-                    f"version {version} not found in {self.path} "
-                    f"(have {versions})"
-                )
-        start = 0
+        if version is None:
+            version = versions[-1] if versions else 0
+        elif version not in versions:
+            raise ValueError(
+                f"version {version} not found in {self.path} "
+                f"(have {[v for v in versions if v <= version]})"
+            )
         manifests = [self._read_manifest(v) for v in versions]
-        for i in range(len(manifests) - 1, -1, -1):
-            if manifests[i].get("checkpoint"):
-                start = i
-                break
         alive: list[str] = []
-        for m in manifests[start:]:
-            removed = set(m.get("removed", []))
-            alive = [f for f in alive if f not in removed]
-            alive.extend(m.get("added", []))
-        return alive
-
-    def _live_stats(self, version: int | None = None) -> dict[str, dict[str, list]]:
-        """Stats for the alive files at `version`: data files are
-        immutable, so ANY manifest's stats for a file remain valid — the
-        fold just collects the latest mention of each alive path.
-        Column-mapping renames remap old physical names to logical ones
-        for files added before the rename, so zonemap pruning keeps
-        working under the new name."""
-        alive = set(self._live_files(version))
-        out: dict[str, dict[str, list]] = {}
-        for m in self.history():
-            for rel, st in m.get("stats", {}).items():
-                if rel in alive:
-                    out[rel] = st
-        renames = self._live_renames(version)
-        if renames:
-            addv = self._file_add_versions(version)
-            for rel, st in out.items():
-                av = addv.get(rel, 0)
-                mapped = dict(st)
-                for v, old, new in renames:
-                    if v > av and old in mapped:
-                        mapped[new] = mapped.pop(old)
-                out[rel] = mapped
-        return out
-
-    def _live_tombstones(
-        self, version: int | None = None
-    ) -> list[tuple[int, str, frozenset | None, str | None, int]]:
-        """Key tombstones (merge-on-read logical deletes) visible at
-        `version`: [(origin_version, key_col, values, sidecar_path,
-        n_keys)]. Two storage forms, same semantics: INLINE tombstones
-        carry their value list in the manifest (values set, path None —
-        right for small compliance batches); SIDECAR tombstones carry a
-        relative path to a parquet delete-file holding the key set
-        (values None — the Delta deletion-vector / Iceberg delete-file
-        shape, right for large sets: the manifest stays O(1) no matter
-        how many keys die). Checkpoint manifests carry earlier
-        tombstones forward with their ORIGIN version preserved (the
-        version ordering against file add versions is the application
-        rule)."""
+        addv: dict[str, int] = {}
+        stats: dict[str, dict[str, list]] = {}
+        bits = 0
+        blooms: dict[str, dict[str, list[int]]] = {}
         inline: dict[tuple[int, str], set] = {}
         sidecar: dict[tuple[int, str, str], int] = {}
-        for m in self.history():
-            if version is not None and m["version"] > version:
+        dvs: list[tuple[int, str, int]] = []
+        dv_seen: set[tuple[int, str]] = set()
+        legacy: dict[tuple[int, str], int] = {}
+        cons: dict[str, str | None] = {}
+        gens: dict[str, str | None] = {}
+        schema = None
+        known: set[str] = set()
+        for m in manifests:
+            # immutable files: any manifest's stats/blooms stay valid
+            for rel, st in m.get("stats", {}).items():
+                stats[rel] = st
+            if "blooms" in m:
+                bits = m.get("bloom_bits", bits)
+                blooms.update(m["blooms"])
+            mv = m["version"]
+            if mv > version:
                 continue
-            if m.get("op") == "restore" and "restored_from" in m:
-                # FILTER BARRIER: a restore reproduces the target
-                # version's state, so filters committed AFTER the
-                # target are undone from this manifest onward (their
-                # deletes are part of the history being rolled back)
-                cut = int(m["restored_from"])
-                inline = {k: v for k, v in inline.items() if k[0] <= cut}
-                sidecar = {
-                    k: v for k, v in sidecar.items() if k[0] <= cut
-                }
+            if m.get("checkpoint"):
+                # a checkpoint carries the complete live set, and its
+                # `added` is that SET, not an add event — its
+                # `added_versions` map (written by checkpoint()/vacuum())
+                # records each file's TRUE add version, which keeps the
+                # fold exact after the adding manifests are vacuumed (a
+                # post-tombstone re-insert must never fall back to
+                # version 0 and get wrongly filtered — ADVICE r6)
+                alive = list(m.get("added", []))
+            else:
+                removed = set(m.get("removed", []))
+                alive = [f for f in alive if f not in removed]
+                alive.extend(m.get("added", []))
+                # last add wins: a restore's re-add (or a merge
+                # rewrite) postdates earlier tombstones
+                for rel in m.get("added", []):
+                    addv[rel] = mv
+            for rel, v in m.get("added_versions", {}).items():
+                addv[rel] = int(v)
+            if m.get("op") == "restore":
+                if "restored_from" in m:
+                    # FILTER BARRIER: a restore reproduces the target
+                    # version's state, so tombstones and DVs committed
+                    # AFTER the target are undone from here on
+                    cut = int(m["restored_from"])
+                    inline = {k: s for k, s in inline.items() if k[0] <= cut}
+                    sidecar = {k: n for k, n in sidecar.items() if k[0] <= cut}
+                    dvs = [d for d in dvs if d[0] <= cut]
+                    dv_seen = {k for k in dv_seen if k[0] <= cut}
+                if "schema" in m:
+                    # a restore re-declares the column set WHOLESALE:
+                    # names introduced only in the rolled-back range
+                    # retire with it (review r9, sixth pass)
+                    known = set()
             for t in m.get("tombstones", []):
-                v = int(t.get("version", m["version"]))
+                v = int(t.get("version", mv))
                 if "path" in t:
                     sidecar[(v, t["key"], t["path"])] = int(t["n_keys"])
                 else:
                     inline.setdefault((v, t["key"]), set()).update(
                         t["values"]
                     )
-        out: list[tuple[int, str, frozenset | None, str | None, int]] = [
+            for d in m.get("dvs", []):
+                v = int(d.get("version", mv))
+                if (v, d["path"]) not in dv_seen:
+                    dv_seen.add((v, d["path"]))
+                    dvs.append((v, d["path"], int(d["n_rows"])))
+                if d.get("addr") != "path":
+                    legacy[(v, d["path"])] = mv
+            cons.update(m.get("constraints", {}))
+            gens.update(m.get("generated", {}))
+            # a rename RETIRES the old logical name: batches written
+            # after it must use the new one (a later schema may
+            # legitimately re-introduce the old name)
+            for old, new in m.get("renames", {}).items():
+                known.discard(old)
+                known.add(new)
+            if "schema" in m:
+                schema = m["schema"]
+                known.update(f["name"] for f in schema.get("fields", []))
+        renames = [
+            (v, o, n)
+            for v, _c, o, n in fold_renames(
+                [m for m in manifests if m["version"] <= version]
+            )
+        ]
+        live = set(alive)
+        stats = {rel: st for rel, st in stats.items() if rel in live}
+        blooms = {rel: bl for rel, bl in blooms.items() if rel in live}
+        for v, old, new in renames:
+            for rel in stats:
+                # column mapping: files added before a rename carry the
+                # old physical name — their zonemap follows the logical
+                # name, so pruning keeps working under the new one
+                if v > addv.get(rel, 0) and old in stats[rel]:
+                    stats[rel] = dict(stats[rel])
+                    stats[rel][new] = stats[rel].pop(old)
+            for rel in blooms:
+                # blooms CANNOT be remapped: the probe hashes the column
+                # NAME into the bit positions, so old-name bits probed
+                # under the new name would FALSELY PRUNE (review r8,
+                # third pass) — no bloom means "must read"
+                if v > addv.get(rel, 0) and old in blooms[rel]:
+                    blooms[rel] = dict(blooms[rel])
+                    blooms[rel].pop(old)
+        tombstones = [
             (v, k, frozenset(vals), None, len(vals))
             for (v, k), vals in inline.items()
-        ]
-        out += [(v, k, None, p, n) for (v, k, p), n in sidecar.items()]
-        return sorted(out, key=lambda x: (x[0], x[1], x[3] or ""))
-
-    def _live_dvs(
-        self, version: int | None = None
-    ) -> list[tuple[int, str, int]]:
-        """Row-index DELETION VECTORS visible at `version`:
-        [(origin_version, sidecar_rel_path, n_rows)]. A DV addresses
-        (data-root-relative file path, row ordinal) — the Delta
-        deletion-vector / Iceberg positional-delete shape, which keys
-        on the file PATH because basenames are not unique within a
-        table (ADVICE r8) — so predicate deletes work on KEYLESS
-        tables and the read-side filter is a broadcast of row-address
-        pairs, never a wide key set. Same visibility rule
-        as key tombstones: a DV applies only to files ADDED BEFORE its
-        commit (a restore's re-add or an optimize rewrite postdates it
-        and passes through); checkpoints carry still-applicable DVs
-        forward with origin versions preserved."""
-        out: list[tuple[int, str, int]] = []
-        seen: set[tuple[int, str]] = set()
-        legacy: dict[tuple[int, str], int] = {}
-        for m in self.history():
-            if version is not None and m["version"] > version:
-                continue
-            if m.get("op") == "restore" and "restored_from" in m:
-                # same FILTER BARRIER as _live_tombstones: a restore
-                # undoes deletion vectors committed after its target
-                cut = int(m["restored_from"])
-                out = [d for d in out if d[0] <= cut]
-                seen = {k for k in seen if k[0] <= cut}
-            for d in m.get("dvs", []):
-                v = int(d.get("version", m["version"]))
-                key = (v, d["path"])
-                if key not in seen:
-                    seen.add(key)
-                    out.append((v, d["path"], int(d["n_rows"])))
-                if d.get("addr") != "path":
-                    legacy[(v, d["path"])] = m["version"]
-        # FORMAT FENCE (review r9): r9 changed the sidecar address from
-        # basename to data-root-relative path; a basename-era sidecar
-        # would match nothing under the new scan address and every
-        # deleted row would silently resurrect. New entries are stamped
-        # `"addr": "path"`; a SURVIVING legacy entry fails LOUDLY with
-        # the remediation. Checked after the fold — not per manifest —
-        # so a restore to the pre-DV version actually clears the fence
-        # (its barrier drops the legacy entry) instead of the table
-        # being bricked by the dead manifest (review r9, second pass).
-        for v, p, _n in out:
-            if (v, p) in legacy:
-                raise RuntimeError(
-                    f"deletion-vector sidecar {p!r} (manifest version "
-                    f"{legacy[(v, p)]}) predates path addressing; "
-                    "restore the table to the pre-DV version and "
-                    "re-issue the deletes, or optimize() with the old "
-                    "reader to materialize them first"
-                )
-        return sorted(out)
-
-    def _file_add_versions(
-        self, version: int | None = None
-    ) -> dict[str, int]:
-        """rel → version of the LAST manifest that added it (checkpoint
-        manifests contribute through their `added_versions` map, which
-        preserves true add versions across manifest expiry). Last-add
-        wins so a restore's re-add (or a merge rewrite) postdates
-        earlier tombstones and is never filtered by them — which is
-        exactly snapshot-reproduction semantics. A file known only
-        through a LEGACY checkpoint (no added_versions map) maps to 0;
-        current checkpoint()/vacuum() always record the map, making the
-        fold exact."""
-        out: dict[str, int] = {}
-        for m in self.history():
-            if version is not None and m["version"] > version:
-                continue
-            if m.get("checkpoint"):
-                # a checkpoint's `added` is the folded live SET, not an
-                # add event — but its `added_versions` map (written by
-                # checkpoint()/vacuum()) records each file's TRUE add
-                # version, which makes the fold exact even after the
-                # adding manifests are vacuumed (a post-tombstone
-                # re-insert must never fall back to version 0 and get
-                # wrongly filtered — ADVICE r6)
-                for rel, v in m.get("added_versions", {}).items():
-                    out[rel] = int(v)
-                continue
-            for rel in m.get("added", []):
-                out[rel] = m["version"]
-            for rel, v in m.get("added_versions", {}).items():
-                out[rel] = int(v)
-        return out
+        ] + [(v, k, None, p, n) for (v, k, p), n in sidecar.items()]
+        # FORMAT FENCE (review r9): r9 changed the DV sidecar address
+        # from basename to data-root-relative path; a basename-era
+        # sidecar would match nothing under the new scan address and
+        # every deleted row would silently resurrect. New entries are
+        # stamped `"addr": "path"`; a SURVIVING legacy entry fails
+        # LOUDLY with the remediation. Checked after the fold — not per
+        # manifest — so a restore to the pre-DV version actually clears
+        # the fence (its barrier drops the legacy entry) instead of the
+        # table being bricked by the dead manifest (review r9, second
+        # pass).
+        fence = next(
+            (
+                f"deletion-vector sidecar {p!r} (manifest version "
+                f"{legacy[(v, p)]}) predates path addressing; "
+                "restore the table to the pre-DV version and "
+                "re-issue the deletes, or optimize() with the old "
+                "reader to materialize them first"
+                for v, p, _n in dvs
+                if (v, p) in legacy
+            ),
+            None,
+        )
+        return TableState(
+            version=version,
+            files=alive,
+            add_versions=addv,
+            stats=stats,
+            bloom_bits=bits,
+            blooms=blooms,
+            tombstones=sorted(tombstones, key=lambda x: (x[0], x[1], x[3] or "")),
+            dv_entries=sorted(dvs),
+            dv_fence=fence,
+            renames=renames,
+            constraints={k: v for k, v in cons.items() if v},
+            generated={k: v for k, v in gens.items() if v},
+            schema=schema,
+            known_columns=known,
+        )
 
     def _tombstone_filter(self, df: DataFrame, added_version: int, ts) -> DataFrame:
         """Anti-filter `df` (rows of files added at `added_version`) by
@@ -772,10 +833,8 @@ class TxLogTable:
         self,
         rels: list[str],
         added_version: int,
-        ts,
-        dvs,
+        st: TableState,
         keep_row_address: bool = False,
-        renames: list[tuple[int, str, str]] | None = None,
     ) -> DataFrame:
         """Read one add-version group of files with BOTH logical-delete
         forms applied: row-index deletion vectors (broadcast anti-join
@@ -786,7 +845,7 @@ class TxLogTable:
         forms compose with one visibility rule: filters committed AFTER
         the group's add version apply; later adds pass through."""
         paths = [os.path.join(self.path, f) for f in rels]
-        dv_paths = [p for v, p, _n in dvs if v > added_version]
+        dv_paths = [p for v, p, _n in st.dvs if v > added_version]
         if dv_paths or keep_row_address:
             df = self._with_row_address(self.spark.read.parquet(*paths))
             if dv_paths:
@@ -799,20 +858,36 @@ class TxLogTable:
                 df = df.drop("__fb", "__ri")
         else:
             df = self.spark.read.parquet(*paths)
-        # column-mapping renames: files added BEFORE a rename carry the
-        # old physical name — alias them to the logical name, in commit
-        # order (chained renames compose)
-        for v, old, new in renames or ():
+        df = self._alias_renamed(df, added_version, st)
+        if st.tombstones:
+            df = self._tombstone_filter(df, added_version, st.tombstones)
+        return df
+
+    @staticmethod
+    def _alias_renamed(
+        df: DataFrame, added_version: int, st: TableState
+    ) -> DataFrame:
+        """Column-mapping renames: files added BEFORE a rename carry the
+        old physical name — alias them to the logical name, in commit
+        order (chained renames compose)."""
+        for v, old, new in st.renames:
             if v > added_version and old in df.columns:
                 df = df.withColumnRenamed(old, new)
-        if ts:
-            df = self._tombstone_filter(df, added_version, ts)
         return df
+
+    def _by_add_version(
+        self, rels: list[str], st: TableState
+    ) -> list[tuple[int, list[str]]]:
+        """`rels` grouped by add version, ascending."""
+        groups: dict[int, list[str]] = {}
+        for rel in rels:
+            groups.setdefault(st.add_versions.get(rel, 0), []).append(rel)
+        return sorted(groups.items())
 
     def _read_with_tombstones(
         self,
         rels: list[str],
-        version: int | None = None,
+        st: TableState,
         keep_row_address: bool = False,
     ) -> DataFrame:
         """Read `rels` with logical deletes applied (key tombstones AND
@@ -821,14 +896,15 @@ class TxLogTable:
         logically deleted rows would resurrect in the rewrite.
         `keep_row_address=True` retains the (__fb, __ri) DV address
         columns — the shared entry point for DV creation and the CDF's
-        address-level delete detection (one fold, three callers)."""
-        ts = self._live_tombstones(version)
-        dvs = self._live_dvs(version)
-        renames = self._live_renames(version)
-        if not ts and not dvs and not renames and not keep_row_address:
+        address-level delete detection."""
+        if (
+            not st.tombstones
+            and not st.dvs
+            and not st.renames
+            and not keep_row_address
+        ):
             reader = self.spark.read
-            sch = self._latest_schema(version)
-            if sch is not None:
+            if st.schema is not None:
                 # project the DECLARED schema, not the first footer:
                 # after an evolving append, files predating the
                 # evolution lack the added (possibly NESTED) fields,
@@ -838,109 +914,111 @@ class TxLogTable:
                 # int→long/float→double against an explicit schema.
                 from pyspark.sql.types import StructType
 
-                reader = reader.schema(StructType.fromJson(sch))
+                reader = reader.schema(StructType.fromJson(st.schema))
             return reader.parquet(
                 *[os.path.join(self.path, f) for f in rels]
             )
-        addv = self._file_add_versions(version)
-        groups: dict[int, list[str]] = {}
-        for rel in rels:
-            groups.setdefault(addv.get(rel, 0), []).append(rel)
-        parts = []
-        for av, grp in sorted(groups.items()):
-            parts.append(
-                self._read_group_filtered(
-                    grp,
-                    av,
-                    ts,
-                    dvs,
-                    keep_row_address=keep_row_address,
-                    renames=renames,
-                )
+        parts = [
+            self._read_group_filtered(
+                grp, av, st, keep_row_address=keep_row_address
             )
+            for av, grp in self._by_add_version(rels, st)
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
         return out
 
     def _file_tagged_rows(
-        self, rels: list[str], version: int | None = None
+        self, rels: list[str], st: TableState
     ) -> DataFrame:
         """Raw rows of `rels` under LOGICAL column names plus a `__file`
-        column (absolute path) — the candidate-detection read merge /
-        delete_keys / sync_from semi-join against incoming keys. Raw =
-        tombstones/DVs NOT applied (a dead row still marks its file as
-        touched, which is correct for rewrite targeting), but renames
-        ARE applied: without aliasing, pre-rename files' key column
-        reads as NULL under the logical name and rewrite targeting
-        silently misses them (review r8, third pass)."""
-        renames = self._live_renames(version)
-        if not renames:
+        column (the `input_file_name()` URI) — the candidate-detection
+        read of `_rewrite_targets`. Raw = tombstones/DVs NOT applied (a
+        dead row still marks its file as touched, which is correct for
+        rewrite targeting), but renames ARE applied: without aliasing,
+        pre-rename files' key column reads as NULL under the logical
+        name and rewrite targeting silently misses them (review r8,
+        third pass)."""
+        if not st.renames:
             return self.spark.read.parquet(
                 *[os.path.join(self.path, f) for f in rels]
             ).withColumn("__file", F.input_file_name())
-        addv = self._file_add_versions(version)
-        groups: dict[int, list[str]] = {}
-        for rel in rels:
-            groups.setdefault(addv.get(rel, 0), []).append(rel)
         out = None
-        for av, grp in sorted(groups.items()):
-            df = self.spark.read.parquet(
-                *[os.path.join(self.path, f) for f in grp]
-            ).withColumn("__file", F.input_file_name())
-            for v, old, new in renames:
-                if v > av and old in df.columns:
-                    df = df.withColumnRenamed(old, new)
+        for av, grp in self._by_add_version(rels, st):
+            df = self._alias_renamed(
+                self.spark.read.parquet(
+                    *[os.path.join(self.path, f) for f in grp]
+                ).withColumn("__file", F.input_file_name()),
+                av,
+                st,
+            )
             out = df if out is None else out.unionByName(
                 df, allowMissingColumns=True
             )
         return out
 
-    def _logical_columns(self, fallback_rel: str) -> list[str]:
+    def _rewrite_targets(
+        self, st: TableState, keys_df: DataFrame, keys: list[str]
+    ) -> tuple[list[str], int]:
+        """(live files holding any key of `keys_df`, files skipped by
+        stats) — the rewrite-target discovery of merge, delete_keys and
+        sync_from. Zonemap pre-prune (single-column key): a live file
+        whose key min/max range misses the batch's [min, max] provably
+        contains no match, so it never even enters the semi-join scan —
+        the candidate-discovery cost drops from "read the key column of
+        the whole table" to "read the key column of range-overlapping
+        files". On a key-clustered 100 TB table with a narrow nightly
+        batch, that is most of the read work gone. Then one semi-join
+        on the key columns finds the files that must be rewritten;
+        everything else is provably untouched."""
+        live = candidates = st.files
+        skipped_by_stats = 0
+        if len(keys) == 1:
+            k = keys[0]
+            bounds = keys_df.agg(
+                F.min(k).alias("lo"), F.max(k).alias("hi")
+            ).first()
+            if bounds["lo"] is not None:
+                candidates = []
+                for rel in live:
+                    mm = st.stats.get(rel, {}).get(k)
+                    try:
+                        disjoint = mm is not None and (
+                            mm[0] > bounds["hi"] or mm[1] < bounds["lo"]
+                        )
+                    except TypeError:
+                        disjoint = False  # type mismatch → keep candidate
+                    if disjoint:
+                        skipped_by_stats += 1
+                    else:
+                        candidates.append(rel)
+        hit: set[str] = set()
+        if candidates:
+            hit = {
+                _local_path(r["__file"])
+                for r in self._file_tagged_rows(candidates, st)
+                .join(keys_df.select(*keys).distinct(), on=keys, how="semi")
+                .select("__file")
+                .distinct()
+                .collect()
+            }
+        touched = [
+            f
+            for f in live
+            if os.path.abspath(os.path.join(self.path, f)) in hit
+        ]
+        return touched, skipped_by_stats
+
+    def _logical_columns(self, st: TableState) -> list[str]:
         """The table's LOGICAL column names (post-rename), from the
         latest schema-bearing manifest; falls back to a physical file's
         footer only on legacy logs with no schema records."""
-        sch = self._latest_schema()
-        if sch is not None:
-            return [f["name"] for f in sch["fields"]]
+        if st.schema is not None:
+            return [f["name"] for f in st.schema["fields"]]
         return self.spark.read.parquet(
-            os.path.join(self.path, fallback_rel)
+            os.path.join(self.path, st.files[0])
         ).columns
-
-    def _live_blooms(
-        self, version: int | None = None
-    ) -> tuple[int, dict[str, dict[str, list[int]]]]:
-        """(bloom_bits, per-file blooms) for the alive files at
-        `version` — same immutable-file fold as `_live_stats`. Files
-        with no bloom (plain appends, optimize rewrites) simply never
-        bloom-prune — the safe default."""
-        alive = set(self._live_files(version))
-        bits = 0
-        out: dict[str, dict[str, list[int]]] = {}
-        for m in self.history():
-            if "blooms" in m:
-                bits = m.get("bloom_bits", bits)
-                for rel, bl in m["blooms"].items():
-                    if rel in alive:
-                        out[rel] = bl
-        renames = self._live_renames(version)
-        if renames and out:
-            # Blooms CANNOT be remapped (unlike min/max stats): the
-            # probe hashes the column NAME into the bit positions, so
-            # old-name bits probed under the new name are noise and
-            # would FALSELY PRUNE files containing matches (review r8,
-            # third pass). Drop renamed columns' blooms on pre-rename
-            # files instead — no bloom means "must read", the safe
-            # default.
-            addv = self._file_add_versions(version)
-            for rel, bl in out.items():
-                av = addv.get(rel, 0)
-                mapped = dict(bl)
-                for v, old, _new in renames:
-                    if v > av:
-                        mapped.pop(old, None)
-                out[rel] = mapped
-        return bits, out
 
     def _stage_write(
         self, df: DataFrame, partition_col: str | None = None
@@ -1254,35 +1332,14 @@ class TxLogTable:
             raise CommitConflict(f"concurrent create at {path}")
         return t
 
-    def _latest_schema(self, version: int | None = None) -> dict | None:
-        for m in reversed(self.history()):
-            if version is not None and m["version"] > version:
-                continue
-            if "schema" in m:
-                return m["schema"]
-        return None
-
-    def _check_schema(self, df: DataFrame, merge_schema: bool) -> None:
-        # fold the known column set from every RETAINED manifest — after
-        # vacuum(retain_versions) the create manifest may be gone, but
-        # any data-carrying manifest records its schema
-        known: set[str] = set()
-        for m in self.history():
-            if m.get("op") == "restore" and "schema" in m:
-                # a restore re-declares the column set WHOLESALE:
-                # names introduced only in the rolled-back range are
-                # retired with it (review r9, sixth pass — without the
-                # reset, rename + restore + rename left the retracted
-                # name in the fold and failed legitimate appends)
-                known = set()
-            # a rename RETIRES the old logical name: batches written
-            # after it must use the new one (fold order matters — a
-            # later schema may legitimately re-introduce the old name)
-            for old, new in m.get("renames", {}).items():
-                known.discard(old)
-                known.add(new)
-            for f in m.get("schema", {}).get("fields", []):
-                known.add(f["name"])
+    @staticmethod
+    def _check_schema(
+        df: DataFrame, merge_schema: bool, st: TableState
+    ) -> None:
+        # the known column set folds from every RETAINED manifest —
+        # after vacuum(retain_versions) the create manifest may be gone,
+        # but any data-carrying manifest records its schema
+        known = st.known_columns
         if not known:
             return  # checkpoint-only log (no schema records): cannot gate
         cols = set(df.columns)
@@ -1326,16 +1383,6 @@ class TxLogTable:
             if self._try_commit(version, manifest):
                 return version
 
-    def _live_constraints(self, version: int | None = None) -> dict[str, str]:
-        """name → expr of active constraints at `version` (latest
-        setting per name wins; None = dropped)."""
-        out: dict[str, str | None] = {}
-        for m in self.history():
-            if version is not None and m["version"] > version:
-                continue
-            out.update(m.get("constraints", {}))
-        return {k: v for k, v in out.items() if v}
-
     def set_generated_column(self, name: str, expr: str | None) -> int:
         """Declare (or drop, with expr=None) a GENERATED COLUMN (Delta's
         `GENERATED ALWAYS AS (expr)`): on every subsequent write, a
@@ -1355,7 +1402,8 @@ class TxLogTable:
         — declaring generation for a brand-new column would silently
         interact with schema evolution on every write path; evolve the
         schema first (one merge_schema append), then declare."""
-        sch = self._latest_schema()
+        st = self._state()
+        sch = st.schema
         if expr is not None and (
             sch is None
             or name not in [f["name"] for f in sch["fields"]]
@@ -1365,7 +1413,7 @@ class TxLogTable:
                 "evolve the schema first (merge_schema append), then "
                 "declare the generation rule"
             )
-        base = self.latest_version()
+        base = st.version
         while True:
             conflict = self._rebase_conflict_since(base)
             if conflict is not None:
@@ -1390,15 +1438,6 @@ class TxLogTable:
             if self._try_commit(version, manifest):
                 return version
 
-    def _live_generated(self, version: int | None = None) -> dict[str, str]:
-        """name → generation expr active at `version`."""
-        out: dict[str, str | None] = {}
-        for m in self.history():
-            if version is not None and m["version"] > version:
-                continue
-            out.update(m.get("generated", {}))
-        return {k: v for k, v in out.items() if v}
-
     def rename_column(self, old: str, new: str) -> int:
         """RENAME WITHOUT REWRITE (Delta column mapping): one metadata
         commit changes the logical name; files written BEFORE it keep
@@ -1414,13 +1453,13 @@ class TxLogTable:
         anti-filter would stop matching renamed rows — materialize via
         optimize first) or appears in a live CHECK / generated-column
         expression (their SQL strings would dangle)."""
-        sch = self._latest_schema()
+        st = self._state()
+        sch = st.schema
         if sch is None or old not in [f["name"] for f in sch["fields"]]:
             raise ValueError(f"no column {old!r} in the table schema")
         if new in [f["name"] for f in sch["fields"]]:
             raise ValueError(f"column {new!r} already exists")
-        for v, k, _vals, _p, _n in self._live_tombstones():
-            del v
+        for _v, k, _vals, _p, _n in st.tombstones:
             if k == old:
                 raise ValueError(
                     f"{old!r} is a live tombstone key; run optimize() to "
@@ -1429,10 +1468,7 @@ class TxLogTable:
         import re as _re
 
         ident = _re.compile(rf"\b{_re.escape(old)}\b")
-        for name, expr in {
-            **self._live_constraints(),
-            **self._live_generated(),
-        }.items():
+        for name, expr in {**st.constraints, **st.generated}.items():
             # word-boundary match, not substring: renaming 'price' must
             # not be blocked by an expression that mentions 'price_usd'
             if ident.search(expr) or name == old:
@@ -1444,7 +1480,7 @@ class TxLogTable:
         for f in new_sch["fields"]:
             if f["name"] == old:
                 f["name"] = new
-        base = self.latest_version()
+        base = st.version
         manifest = {
             "version": base + 1,
             "op": "rename_column",
@@ -1460,47 +1496,29 @@ class TxLogTable:
             raise CommitConflict("concurrent commit during rename; retry")
         return base + 1
 
-    def _live_renames(
-        self, version: int | None = None
-    ) -> list[tuple[int, str, str]]:
-        """[(origin_version, old, new)] in version order — the name
-        mapping chain reads apply to files added before each entry.
-        Checkpoints/clones/restores carry earlier renames forward as
-        `renames_v` triples with ORIGIN versions preserved; a restore
-        manifest is also a barrier (renames after its target are part
-        of the rolled-back history) mirroring tombstones/DVs. The fold
-        itself is the module-level `fold_renames` shared with the
-        streaming source (one visibility rule, two readers — review r9,
-        second pass)."""
-        ms = [
-            m
-            for m in self.history()
-            if version is None or m["version"] <= version
-        ]
-        return [(v, o, n) for v, _c, o, n in fold_renames(ms)]
-
-    def _apply_generated(self, df: DataFrame) -> tuple[DataFrame, dict]:
+    @staticmethod
+    def _apply_generated(
+        df: DataFrame, st: TableState
+    ) -> tuple[DataFrame, dict]:
         """Compute absent generated columns on an incoming batch; return
         (df, validation checks) where the checks assert provided values
         equal their generation expressions (run on the STAGED files via
-        `_enforce_constraints(cons=...)`)."""
-        gens = self._live_generated()
+        `_enforce_constraints`)."""
         checks: dict[str, str] = {}
-        for name, expr in gens.items():
+        for name, expr in st.generated.items():
             if name not in df.columns:
                 df = df.withColumn(name, F.expr(expr))
             else:
                 checks[f"generated_{name}"] = f"{name} <=> ({expr})"
         return df, checks
 
-    def _enforce_constraints(
-        self, df: DataFrame, cons: dict[str, str] | None = None
-    ) -> None:
+    @staticmethod
+    def _enforce_constraints(df: DataFrame, cons: dict[str, str]) -> None:
         """Raise ConstraintViolation with per-constraint violating-row
-        counts if any active CHECK fails on the batch. One aggregate
+        counts if any check in `cons` fails on the batch. One aggregate
         over the batch computes every constraint's count at once.
-        `cons` overrides the live-constraint set (generated-column
-        validation reuses this machinery with name <=> (expr) checks).
+        `cons` is the live CHECK set plus the generated-column
+        validations (name <=> (expr) checks) of the write.
 
         Determinism contract: append() calls this on the READ-BACK of
         the staged files (validated rows == committed rows, immune to
@@ -1510,8 +1528,6 @@ class TxLogTable:
         persists the batch first (r9), so checked rows == rewritten
         rows even for a non-deterministic source — the same guarantee
         Delta gets by materializing its merge source."""
-        if cons is None:
-            cons = self._live_constraints()
         if not cons:
             return
         aggs = [
@@ -1564,16 +1580,17 @@ class TxLogTable:
         # rename/generated/constraint rules applied below are the ones
         # live at THIS version — the rebase loop refuses to claim past
         # a later metadata commit (ADVICE r8)
-        stage_base = self.latest_version()
+        st = self._state()
+        stage_base = st.version
         # generated columns: compute the absent ones, collect equality
         # checks for the provided ones (validated on the staged files)
-        df, gen_checks = self._apply_generated(df)
+        df, gen_checks = self._apply_generated(df, st)
         # the cluster column is consumed by the layout (it lives in
         # directory names) — the table schema never contains it
         schema_df = (
             df.drop(cluster_file_col) if cluster_file_col is not None else df
         )
-        self._check_schema(schema_df, merge_schema)
+        self._check_schema(schema_df, merge_schema, st)
         commit_id, rels = self._stage_write(
             df, partition_col=cluster_file_col
         )
@@ -1584,8 +1601,7 @@ class TxLogTable:
         # (ADVICE r6). Files are immutable once staged, so the rows
         # checked here are bit-for-bit the rows the manifest links in;
         # a violation unstages and nothing commits.
-        cons = dict(self._live_constraints())
-        cons.update(gen_checks)
+        cons = {**st.constraints, **gen_checks}
         if cons:
             staged = self.spark.read.parquet(
                 *[os.path.join(self.path, f) for f in rels]
@@ -1612,16 +1628,17 @@ class TxLogTable:
                     f"rebase past a non-commuting {conflict}; re-run the "
                     "append against the new head"
                 )
-            version = self.latest_version() + 1
+            head = self._state()
+            version = head.version + 1
             # schema under rebase: a concurrent merge_schema append may
             # have EVOLVED the table between our staging and this claim
             # (appends commute on data, but each append manifest carries
-            # a schema and _latest_schema takes the last one) — blindly
+            # a schema and the state takes the last one) — blindly
             # stamping our staged schema would silently REVERT the
             # evolution (review r9, first pass). Union by field name:
             # the current table schema first, then our new fields; a
             # same-name type disagreement is a real conflict.
-            cur_sch = self._latest_schema()
+            cur_sch = head.schema
             out_sch = schema_df.schema.jsonValue()
             if cur_sch is not None and cur_sch != out_sch:
                 merged = json.loads(json.dumps(cur_sch))
@@ -1681,11 +1698,12 @@ class TxLogTable:
         too — an overwrite's rows are all incoming rows, so the whole
         staged set is checked (review r8, third pass: overwrite
         previously bypassed both generation and CHECK constraints)."""
-        base = self.latest_version()
-        removed = self._live_files()
-        df, gen_checks = self._apply_generated(df)
+        st = self._state()
+        base = st.version
+        removed = st.files
+        df, gen_checks = self._apply_generated(df, st)
         commit_id, rels = self._stage_write(df)
-        cons = {**self._live_constraints(), **gen_checks}
+        cons = {**st.constraints, **gen_checks}
         if cons:
             staged = self.spark.read.parquet(
                 *[os.path.join(self.path, f) for f in rels]
@@ -1729,16 +1747,13 @@ class TxLogTable:
         commit — the lost-update guard of optimistic concurrency.
         Default (None) reads the current head, which is the same
         protocol with the read made as late as possible."""
-        base = (
-            self.latest_version() if read_version is None else read_version
-        )
-        live = self._live_files(version=base)
-        if not live:
+        st = self._state(read_version)
+        if not st.files:
             raise ValueError("merge into empty table; use create/append")
         # generated columns: compute absent, validate provided — merge
         # checks the incoming batch pre-write (see _enforce_constraints
         # docstring for the determinism contract split vs append)
-        new, gen_checks = self._apply_generated(new)
+        new, gen_checks = self._apply_generated(new, st)
         # Materialize the batch once (r9 opt): the constraint check, the
         # key-bounds aggregate, the touched-file semi-join, and the
         # rewrite below otherwise each re-derive `new` from scratch — and
@@ -1759,7 +1774,7 @@ class TxLogTable:
         # cache pressure AND a non-deterministic source to bite.
         new = new.persist()
         try:
-            return self._merge_materialized(new, gen_checks, keys, base, live)
+            return self._merge_materialized(new, gen_checks, keys, st)
         finally:
             new.unpersist(blocking=False)
 
@@ -1768,74 +1783,23 @@ class TxLogTable:
         new: DataFrame,
         gen_checks: dict,
         keys: list[str],
-        base: int,
-        live: list[str],
+        st: TableState,
     ) -> dict:
         """merge() body after the batch is persisted — split out so the
         caller's try/finally can guarantee the unpersist."""
         from politicamente_etl_spark.sources.sinks import upsert
 
-        self._enforce_constraints(
-            new, cons={**self._live_constraints(), **gen_checks}
-        )
-        # Zonemap pre-prune (single-column key): a live file whose key
-        # min/max range misses the batch's [min, max] provably contains
-        # no match, so it never even enters the semi-join scan — the
-        # candidate-discovery cost drops from "read the key column of
-        # the whole table" to "read the key column of range-overlapping
-        # files". On a key-clustered 100 TB table with a narrow nightly
-        # batch, that is most of the merge's read work gone.
-        candidates = live
-        skipped_by_stats = 0
-        if len(keys) == 1:
-            k = keys[0]
-            bounds = new.agg(
-                F.min(k).alias("lo"), F.max(k).alias("hi")
-            ).first()
-            if bounds["lo"] is not None:
-                stats = self._live_stats(version=base)
-                candidates = []
-                for rel in live:
-                    st = stats.get(rel, {}).get(k)
-                    try:
-                        disjoint = st is not None and (
-                            st[0] > bounds["hi"] or st[1] < bounds["lo"]
-                        )
-                    except TypeError:
-                        disjoint = False  # type mismatch → keep candidate
-                    if disjoint:
-                        skipped_by_stats += 1
-                    else:
-                        candidates.append(rel)
-        if candidates:
-            snap = self._file_tagged_rows(candidates, version=base)
-            # One semi-join on the key column finds the files that must
-            # be rewritten; everything else is provably untouched.
-            touched_abs = {
-                r["__file"]
-                for r in snap.join(
-                    new.select(*keys).distinct(), on=keys, how="semi"
-                )
-                .select("__file")
-                .distinct()
-                .collect()
-            }
-        else:
-            touched_abs = set()
-
-        def _is_touched(rel: str) -> bool:
-            a = os.path.abspath(os.path.join(self.path, rel))
-            return any(os.path.abspath(t.removeprefix("file:")) == a for t in touched_abs)
-
-        touched = [f for f in live if _is_touched(f)]
+        base, live = st.version, st.files
+        self._enforce_constraints(new, {**st.constraints, **gen_checks})
+        touched, skipped_by_stats = self._rewrite_targets(st, new, keys)
         # LOGICAL schema, not live[0]'s physical footer: after a
         # rename, pre-rename files still carry the old name and a
         # projection on it would crash or drop the renamed column
-        cols = self._logical_columns(live[0])
+        cols = self._logical_columns(st)
         if touched:
             # tombstone-aware read: physically present but logically
             # deleted rows must not resurrect through the rewrite
-            old_rows = self._read_with_tombstones(touched, version=base)
+            old_rows = self._read_with_tombstones(touched, st)
             resolved = upsert(old_rows, new.select(*cols), keys)
         else:
             resolved = new.select(*cols)
@@ -1876,58 +1840,15 @@ class TxLogTable:
         Returns the commit manifest with a `delete_stats` block:
         files rewritten / preserved / skipped-by-stats and rows
         removed."""
-        base = self.latest_version()
-        live = self._live_files()
+        st = self._state()
+        base, live = st.version, st.files
         if not live:
             raise ValueError("delete from empty table")
-        candidates = live
-        skipped_by_stats = 0
-        if len(keys) == 1:
-            k = keys[0]
-            bounds = keys_df.agg(
-                F.min(k).alias("lo"), F.max(k).alias("hi")
-            ).first()
-            if bounds["lo"] is not None:
-                stats = self._live_stats()
-                candidates = []
-                for rel in live:
-                    st = stats.get(rel, {}).get(k)
-                    try:
-                        disjoint = st is not None and (
-                            st[0] > bounds["hi"] or st[1] < bounds["lo"]
-                        )
-                    except TypeError:
-                        disjoint = False
-                    if disjoint:
-                        skipped_by_stats += 1
-                    else:
-                        candidates.append(rel)
-        if candidates:
-            snap = self._file_tagged_rows(candidates, version=base)
-            touched_abs = {
-                r["__file"]
-                for r in snap.join(
-                    keys_df.select(*keys).distinct(), on=keys, how="semi"
-                )
-                .select("__file")
-                .distinct()
-                .collect()
-            }
-        else:
-            touched_abs = set()
-
-        def _is_touched(rel: str) -> bool:
-            a = os.path.abspath(os.path.join(self.path, rel))
-            return any(
-                os.path.abspath(t.removeprefix("file:")) == a
-                for t in touched_abs
-            )
-
-        touched = [f for f in live if _is_touched(f)]
+        touched, skipped_by_stats = self._rewrite_targets(st, keys_df, keys)
         rels: list[str] = []
         rows_removed = 0
         if touched:
-            old_rows = self._read_with_tombstones(touched, version=base)
+            old_rows = self._read_with_tombstones(touched, st)
             survivors = old_rows.join(
                 keys_df.select(*keys).distinct(), on=keys, how="anti"
             )
@@ -1947,9 +1868,8 @@ class TxLogTable:
                 "rows_removed": rows_removed,
             },
         }
-        sch = self._latest_schema()
-        if sch is not None:
-            manifest["schema"] = sch
+        if st.schema is not None:
+            manifest["schema"] = st.schema
         if not self._try_commit(base + 1, manifest):
             raise CommitConflict(
                 f"version {base + 1} was committed concurrently; retry delete"
@@ -2045,9 +1965,8 @@ class TxLogTable:
             )
 
         k = keys[0]
-        base = self.latest_version()
-        live = self._live_files(version=base)
-        if not live:
+        st = self._state()
+        if not st.files:
             raise ValueError("sync into empty table; use create/append")
         # MATERIALIZE the source ONCE (review r8): sync_from reads the
         # source plan several times (key set, tombstone complement,
@@ -2061,13 +1980,13 @@ class TxLogTable:
         try:
             source.write.mode("overwrite").parquet(src_dir)
             return self._sync_from_materialized(
-                self.spark.read.parquet(src_dir), k, base, live
+                self.spark.read.parquet(src_dir), k, st
             )
         finally:
             shutil.rmtree(src_dir, ignore_errors=True)
 
     def _sync_from_materialized(
-        self, source: DataFrame, k: str, base: int, live: list[str]
+        self, source: DataFrame, k: str, st: TableState
     ) -> dict:
         """sync_from's body over the already-materialized source — the
         commit MUST finish before the caller's finally reclaims the
@@ -2076,42 +1995,25 @@ class TxLogTable:
         from politicamente_etl_spark.sources.sinks import upsert
 
         keys = [k]
+        base, live = st.version, st.files
         # generated columns: compute absent on the (materialized) source,
         # collect equality checks for provided values — validated on the
         # staged rewrite below (review r8, third pass: sync previously
         # bypassed generation entirely)
-        source, gen_checks = self._apply_generated(source)
+        source, gen_checks = self._apply_generated(source, st)
         src_keys = source.select(k).distinct()
-        target = self._read_with_tombstones(live, version=base)
+        target = self._read_with_tombstones(live, st)
         missing = target.select(k).distinct().join(
             src_keys, on=k, how="left_anti"
         )
         tomb = self._stage_tombstone_sidecar(missing, k)
 
         # files to rewrite: those containing a source key (updates land
-        # there); the semi-join shape of merge()
-        snap = self._file_tagged_rows(live, version=base)
-        touched_abs = {
-            r["__file"]
-            for r in snap.join(src_keys, on=k, how="semi")
-            .select("__file")
-            .distinct()
-            .collect()
-        }
-
-        def _is_touched(rel: str) -> bool:
-            a = os.path.abspath(os.path.join(self.path, rel))
-            return any(
-                os.path.abspath(t.removeprefix("file:")) == a
-                for t in touched_abs
-            )
-
-        touched = [f for f in live if _is_touched(f)]
-        cols = self._logical_columns(live[0])
+        # there), found the way merge() finds them
+        touched, skipped_by_stats = self._rewrite_targets(st, source, keys)
+        cols = self._logical_columns(st)
         old_rows = (
-            self._read_with_tombstones(touched, version=base)
-            if touched
-            else None
+            self._read_with_tombstones(touched, st) if touched else None
         )
         if old_rows is not None and tomb is not None:
             # rewritten files postdate the tombstone → drop dead rows
@@ -2135,7 +2037,7 @@ class TxLogTable:
         # the rows that originate from the source: in upsert(old, source,
         # keys) those are exactly the staged rows whose key is in the
         # source key set. A violation unstages files AND sidecar.
-        sync_cons = {**self._live_constraints(), **gen_checks}
+        sync_cons = {**st.constraints, **gen_checks}
         if sync_cons:
             staged = self.spark.read.parquet(
                 *[os.path.join(self.path, f) for f in rels]
@@ -2168,6 +2070,7 @@ class TxLogTable:
             "sync_stats": {
                 "files_rewritten": len(touched),
                 "files_preserved": len(live) - len(touched),
+                "files_skipped_by_stats": skipped_by_stats,
                 "deleted_keys": tomb["n_keys"] if tomb else 0,
             },
         }
@@ -2303,16 +2206,14 @@ class TxLogTable:
         commit rebases like `append` and reuses the staged sidecar."""
         import pyarrow.parquet as pq
 
-        base = self.latest_version()
-        live = self._live_files(version=base)
+        st = self._state()
+        base, live = st.version, st.files
         if not live:
             raise ValueError("delete from empty table")
         # visibility-correct targeting: rows already dead (by DV or key
         # tombstone) never enter the new vector
         matched = (
-            self._read_with_tombstones(
-                live, version=base, keep_row_address=True
-            )
+            self._read_with_tombstones(live, st, keep_row_address=True)
             .filter(F.expr(predicate))
             .select("__fb", "__ri")
         )
@@ -2413,119 +2314,98 @@ class TxLogTable:
         )
 
     @staticmethod
-    def _serialize_tombstones(ts, path_map=None) -> list[dict]:
-        """Manifest form of a `_live_tombstones` list, preserving origin
-        versions and both storage forms. `path_map` re-roots sidecar
-        paths (clone_shallow)."""
-        out = []
-        for v, k, vals, path, n in ts:
-            if path is None:
-                out.append({"version": v, "key": k, "values": sorted(vals)})
-            else:
-                p = path_map[path] if path_map else path
-                out.append(
-                    {"version": v, "key": k, "path": p, "n_keys": n}
-                )
+    def _carried(ts, dvs, renames, reroot=None) -> dict:
+        """Manifest entries that re-declare tombstones (both storage
+        forms), deletion vectors and renames with their ORIGIN versions
+        preserved — the one encoder of checkpoint, restore and clone
+        carriage. `reroot` maps a sidecar path to the destination
+        table's (clone_shallow)."""
+        reroot = reroot or (lambda p: p)
+        out: dict = {}
+        if ts:
+            out["tombstones"] = [
+                {"version": v, "key": k, "values": sorted(vals)}
+                if path is None
+                else {"version": v, "key": k, "path": reroot(path), "n_keys": n}
+                for v, k, vals, path, n in ts
+            ]
+        if dvs:
+            out["dvs"] = [
+                {"version": v, "path": reroot(p), "n_rows": n, "addr": "path"}
+                for v, p, n in dvs
+            ]
+        if renames:
+            out["renames_v"] = [[v, o, n] for v, o, n in renames]
         return out
 
-    def _checkpoint_manifest(self, at_version: int) -> dict:
+    def _checkpoint_manifest(self, st: TableState) -> dict:
         """A self-contained manifest reproducing the table AS OF
-        `at_version`: live set + stats + EXACT per-file add versions +
-        still-applicable tombstones (origin versions preserved) + active
-        constraints + schema. Both checkpoint() and vacuum()'s retained-
-        version rewrite build from this, so manifest expiry can never
-        resurrect logically deleted rows or silently drop a CHECK
-        constraint (ADVICE r6, high). A tombstone that applies to NO
-        live file (every live file postdates it — e.g. after optimize
+        `st.version`: live set + stats + blooms + EXACT per-file add
+        versions + still-applicable tombstones, DVs and renames (origin
+        versions preserved) + generated rules + active constraints +
+        schema. Both checkpoint() and vacuum()'s retained-version
+        rewrite build from this, so manifest expiry can never resurrect
+        logically deleted rows, silently drop a CHECK constraint (ADVICE
+        r6, high), corrupt renamed reads, un-validate generated columns
+        (review r8, third pass) or drop point-lookup pruning (review r9,
+        sixth pass). A tombstone, DV or rename that applies to NO live
+        file (every live file postdates it — e.g. after optimize
         materialized it) is dropped here: any future add postdates the
-        checkpoint too, so the tombstone is dead weight, and dropping
-        it lets vacuum reclaim its delete-file sidecar."""
-        live = self._live_files(at_version)
-        addv = self._file_add_versions(at_version)
-        min_addv = min((addv.get(r, 0) for r in live), default=None)
-        ts = [
-            t
-            for t in self._live_tombstones(at_version)
-            if min_addv is not None and t[0] > min_addv
-        ]
+        checkpoint too, so it is dead weight, and dropping it lets
+        vacuum reclaim its sidecar."""
+        oldest = st.oldest_live_add()
+
+        def applies(origin: int) -> bool:
+            return oldest is not None and origin > oldest
+
         manifest = {
-            "version": at_version,
+            "version": st.version,
             "op": "checkpoint",
             "checkpoint": True,
-            "added": live,
+            "added": st.files,
             "removed": [],
-            "stats": self._live_stats(at_version),
-            "added_versions": {r: addv.get(r, 0) for r in live},
+            "stats": st.stats,
+            "added_versions": {
+                r: st.add_versions.get(r, 0) for r in st.files
+            },
         }
         # timestamp travel must survive the rewrite: keep the version's
         # ORIGINAL commit time (a checkpoint re-describes it, it does
         # not re-commit it)
-        orig_ts = self._read_manifest(at_version).get("commit_ts_ms")
+        orig_ts = self._read_manifest(st.version).get("commit_ts_ms")
         if orig_ts is not None:
             manifest["commit_ts_ms"] = orig_ts
-        if ts:
-            manifest["tombstones"] = self._serialize_tombstones(ts)
-        # deletion vectors: same carriage rule — still-applicable ones
-        # (some live file predates them) survive with origin versions;
-        # ones every live file postdates are dead weight and drop,
-        # freeing their sidecars for vacuum
-        dvs = [
-            d
-            for d in self._live_dvs(at_version)
-            if min_addv is not None and d[0] > min_addv
-        ]
-        if dvs:
-            manifest["dvs"] = [
-                {"version": v, "path": p, "n_rows": n, "addr": "path"}
-                for v, p, n in dvs
-            ]
-        # column-mapping renames and generated-column rules survive
-        # manifest expiry exactly like tombstones/constraints (review
-        # r8, third pass: dropping either silently corrupts reads /
-        # un-validates writes after a routine retention vacuum)
-        rens = [
-            r
-            for r in self._live_renames(at_version)
-            if min_addv is not None and r[0] > min_addv
-        ]
-        if rens:
-            manifest["renames_v"] = [[v, o, n] for v, o, n in rens]
-        gens = self._live_generated(at_version)
-        if gens:
-            manifest["generated"] = gens
-        cons = self._live_constraints(at_version)
-        if cons:
-            manifest["constraints"] = cons
-        sch = None
-        for m in reversed(self.history()):
-            if m["version"] <= at_version and "schema" in m:
-                sch = m["schema"]
-                break
-        if sch is not None:
-            manifest["schema"] = sch
-        bloom_bits, blooms = self._live_blooms(at_version)
-        if blooms:
-            # per-file Bloom zonemaps survive manifest expiry like
-            # stats — without carriage a retention vacuum silently
-            # dropped point-lookup pruning (review r9, sixth pass;
-            # clone carriage got the same fix in pass five)
-            manifest["bloom_bits"] = bloom_bits
-            manifest["blooms"] = blooms
+        manifest.update(
+            self._carried(
+                [t for t in st.tombstones if applies(t[0])],
+                [d for d in st.dvs if applies(d[0])],
+                [r for r in st.renames if applies(r[0])],
+            )
+        )
+        if st.generated:
+            manifest["generated"] = st.generated
+        if st.constraints:
+            manifest["constraints"] = st.constraints
+        if st.schema is not None:
+            manifest["schema"] = st.schema
+        if st.blooms:
+            manifest["bloom_bits"] = st.bloom_bits
+            manifest["blooms"] = st.blooms
         return manifest
 
     def checkpoint(self) -> int:
         """Fold the current live set into one self-contained manifest so
         readers stop replaying the full history (the Delta `_checkpoint`
         analogue). No data movement; conflicts surface like overwrite."""
-        base = self.latest_version()
-        manifest = self._checkpoint_manifest(base)
-        manifest["version"] = base + 1
+        st = self._state()
+        manifest = self._checkpoint_manifest(st)
+        manifest["version"] = st.version + 1
         # a checkpoint COMMIT is a new version → fresh commit time (the
         # preserved ts is only for vacuum's in-place rewrite)
         manifest.pop("commit_ts_ms", None)
-        if not self._try_commit(base + 1, manifest):
+        if not self._try_commit(st.version + 1, manifest):
             raise CommitConflict("concurrent commit during checkpoint; retry")
-        return base + 1
+        return st.version + 1
 
     def vacuum(
         self,
@@ -2538,8 +2418,9 @@ class TxLogTable:
         bounds time travel, files only referenced by expired versions.
         Expired manifests are dropped after a checkpoint guarantees the
         oldest retained version still resolves — the checkpoint is the
-        FULL `_checkpoint_manifest` fold (live set + add versions +
-        tombstones + constraints + schema-as-of), so expiring history
+        `_checkpoint_manifest` of that version's whole `_state` (live
+        set + add versions + tombstones + constraints + schema-as-of
+        and the rest), so expiring history
         never resurrects logically deleted rows or drops a CHECK
         constraint (ADVICE r6). Delete-file sidecars referenced by no
         remaining manifest are reclaimed alongside the data files —
@@ -2566,14 +2447,20 @@ class TxLogTable:
             if retain_versions <= 0
             else versions[max(0, len(versions) - retain_versions)]
         )
-        reachable: set[str] = set()
-        for v in versions:
-            if v >= keep_from:
-                reachable.update(self._live_files(v))
+        kept = self._state(keep_from)
+        # files live at ANY retained version: those live at keep_from
+        # plus every file a later manifest adds (an added file is live
+        # at the version that adds it)
+        reachable = set(kept.files) | {
+            rel
+            for v in versions
+            if v > keep_from
+            for rel in self._read_manifest(v).get("added", [])
+        }
         if retain_versions > 0 and keep_from > versions[0]:
             # Make the oldest retained version self-contained, then drop
             # the expired manifests it no longer needs.
-            ck = self._checkpoint_manifest(keep_from)
+            ck = self._checkpoint_manifest(kept)
             # same-version rewrite, not a new commit — through the
             # store's atomic replace so object-store deployments keep
             # readers tear-free (review r9, third pass)
@@ -2722,8 +2609,13 @@ class TxLogTable:
         carry the rewriting commit). Plain metadata lineage for audits
         ("which load produced this row") at the cost of one literal per
         commit group; no join, no shuffle."""
-        files = self._live_files(version)
-        if not files:
+        return self._snapshot_of(self._state(version), provenance)
+
+    def _snapshot_of(
+        self, st: TableState, provenance: bool = False
+    ) -> DataFrame:
+        """snapshot() over an already-folded state."""
+        if not st.files:
             raise ValueError(f"no committed data at {self.path}")
         file_version: dict[str, int] = {}
         if provenance:
@@ -2732,16 +2624,9 @@ class TxLogTable:
                     continue
                 for rel in m.get("added", []):
                     file_version.setdefault(rel, m["version"])
-        ts = self._live_tombstones(version)
-        dvs = self._live_dvs(version)
-        renames = self._live_renames(version)
-        addv = (
-            self._file_add_versions(version)
-            if (ts or dvs or renames)
-            else {}
-        )
+        filtered = bool(st.tombstones or st.dvs or st.renames)
         by_commit: dict[tuple, list[str]] = {}
-        for f in files:
+        for f in st.files:
             # group by the ORIGINATING COMMIT DIR (data/<commit-uuid>),
             # not os.path.dirname: a clustered _stage_write puts every
             # file in its own <col>=<val> partition subdir, so dirname
@@ -2765,17 +2650,15 @@ class TxLogTable:
                 commit_dir = os.sep.join(parts[: i + 2])
             else:
                 commit_dir = os.path.dirname(f)
-            key = (commit_dir, file_version.get(f), addv.get(f, 0))
-            by_commit.setdefault(key, []).append(f)
+            av = st.add_versions.get(f, 0) if filtered else 0
+            by_commit.setdefault((commit_dir, file_version.get(f), av), []).append(f)
         parts = []
         for (_, ver, av), grp in by_commit.items():
             # logical deletes: drop DV'd row addresses and tombstoned
             # keys from files ADDED before the filter's commit; later
             # adds (merge rewrites, restores, re-inserts) postdate it
             # and pass through; pre-rename files alias to logical names
-            df = self._read_group_filtered(
-                grp, av, ts, dvs, renames=renames
-            )
+            df = self._read_group_filtered(grp, av, st)
             if provenance:
                 df = df.withColumn(
                     "_commit_version", F.lit(ver).cast("long")
@@ -2801,11 +2684,12 @@ class TxLogTable:
         recorded stats is conservatively read. Returns the filtered
         DataFrame; `scan_files()` exposes the kept/total counts for
         plan-level tests."""
-        kept, _total = self.scan_files(predicates, version)
+        st = self._state(version)
+        kept, _total = self.scan_files(predicates, state=st)
         if not kept:
-            df = self.snapshot(version).limit(0)
+            df = self._snapshot_of(st).limit(0)
         else:
-            df = self._read_with_tombstones(kept, version=version)
+            df = self._read_with_tombstones(kept, st)
         for col, (lo, hi) in (predicates or {}).items():
             if lo is not None:
                 df = df.filter(F.col(col) >= F.lit(lo))
@@ -2818,6 +2702,8 @@ class TxLogTable:
         predicates: dict[str, tuple] | None = None,
         version: int | None = None,
         use_blooms: bool = True,
+        *,
+        state: TableState | None = None,
     ) -> tuple[list[str], int]:
         """The file-pruning half of scan(): (files to read, total live).
         Range predicates prune through the min/max zonemap; an EQUALITY
@@ -2825,19 +2711,19 @@ class TxLogTable:
         probes the file's Bloom filter — the pruning that works when the
         column is uncorrelated with the file layout and every zonemap
         spans the whole range. `use_blooms=False` isolates the zonemap
-        contribution (measurement/report queries)."""
-        live = self._live_files(version)
+        contribution (measurement/report queries). `state` is an
+        already-folded state to prune (scan() passes its own, so the op
+        folds the log once); by default `version` is folded."""
+        st = state if state is not None else self._state(version)
+        live = st.files
         if not predicates:
             return live, len(live)
-        stats = self._live_stats(version)
         eq_preds = {
             col: lo
             for col, (lo, hi) in predicates.items()
             if use_blooms and lo is not None and lo == hi
         }
-        bits, blooms = (
-            self._live_blooms(version) if eq_preds else (0, {})
-        )
+        bits = st.bloom_bits if eq_preds else 0
         probes = (
             {
                 col: _bloom_positions_py(col, v, bits)
@@ -2848,12 +2734,12 @@ class TxLogTable:
         )
         kept: list[str] = []
         for rel in live:
-            st = stats.get(rel, {})
+            zm = st.stats.get(rel, {})
             drop = False
             for col, (lo, hi) in predicates.items():
-                if col not in st:
+                if col not in zm:
                     continue  # no stats → cannot prune, must read
-                fmin, fmax = st[col]
+                fmin, fmax = zm[col]
                 try:
                     if (hi is not None and fmin > hi) or (
                         lo is not None and fmax < lo
@@ -2863,7 +2749,7 @@ class TxLogTable:
                 except TypeError:
                     continue  # stats/bound type mismatch → read the file
             if not drop and probes:
-                bl = blooms.get(rel, {})
+                bl = st.blooms.get(rel, {})
                 for col, (p1, p2) in probes.items():
                     words = bl.get(col)
                     if not words:
@@ -2891,11 +2777,11 @@ class TxLogTable:
         dominates scans; compaction cost here is proportional to the
         small-file bytes, never the table. Files already at target size
         are left alone. Conflicts surface like overwrite (OCC)."""
-        base = self.latest_version()
-        live = self._live_files()
+        st = self._state()
+        base = st.version
         small = [
             f
-            for f in live
+            for f in st.files
             if os.path.getsize(os.path.join(self.path, f)) < target_file_bytes
         ]
         if len(small) <= 1:
@@ -2904,7 +2790,7 @@ class TxLogTable:
             os.path.getsize(os.path.join(self.path, f)) for f in small
         )
         n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil div
-        df = self._read_with_tombstones(small)
+        df = self._read_with_tombstones(small, st)
         _, rels = self._stage_write(df.coalesce(n_out))
         manifest = {
             "version": base + 1,
@@ -2955,13 +2841,12 @@ class TxLogTable:
         fold + parquet footers, no data scan — safe to run before every
         scheduled maintenance window. Returns the decision inputs so
         the trigger math is auditable (and oracle-checkable)."""
-        live = self._live_files(version)
-        addv = self._file_add_versions(version)
-        min_addv = min((addv.get(r, 0) for r in live), default=None)
+        st = self._state(version)
+        oldest = st.oldest_live_add()
         debt = sum(
             n
-            for v, _k, _vals, _p, n in self._live_tombstones(version)
-            if min_addv is not None and v > min_addv
+            for v, _k, _vals, _p, n in st.tombstones
+            if oldest is not None and v > oldest
         )
         # deletion-vector debt counts the same way (review r8: a table
         # maintained purely with delete_where_rowindex must still
@@ -2969,10 +2854,10 @@ class TxLogTable:
         # dead-byte scan tax)
         dv_rows = sum(
             n
-            for v, _p, n in self._live_dvs(version)
-            if min_addv is not None and v > min_addv
+            for v, _p, n in st.dvs
+            if oldest is not None and v > oldest
         )
-        live_rows = sum(self._file_row_counts(live).values())
+        live_rows = sum(self._file_row_counts(st.files).values())
         ratio = ((debt + dv_rows) / live_rows) if live_rows else 0.0
         return {
             "live_rows": live_rows,
@@ -3009,30 +2894,28 @@ class TxLogTable:
         preserving the full-snapshot diff's unique-key contract."""
         from politicamente_etl_spark.operators import cdc
 
-        f_from = self._live_files(from_version)
-        f_to = self._live_files(to_version)
-        shared = set(f_from) & set(f_to)
-        changed_from = [f for f in f_from if f not in shared]
-        changed_to = [f for f in f_to if f not in shared]
-        empty = self.snapshot(from_version).limit(0)
+        st_from = self._state(from_version)
+        st_to = self._state(to_version)
+        shared = set(st_from.files) & set(st_to.files)
+        changed_from = [f for f in st_from.files if f not in shared]
+        changed_to = [f for f in st_to.files if f not in shared]
+        empty = self._snapshot_of(st_from).limit(0)
         old = (
-            self._read_with_tombstones(changed_from, version=from_version)
+            self._read_with_tombstones(changed_from, st_from)
             if changed_from
             else empty
         )
         new = (
-            self._read_with_tombstones(changed_to, version=to_version)
+            self._read_with_tombstones(changed_to, st_to)
             if changed_to
             else empty
         )
         diff = cdc.snapshot_diff(old, new, keys, compare_cols)
         new_ts = [
             t
-            for t in self._live_tombstones(to_version)
+            for t in st_to.tombstones
             if from_version < t[0] and t[1] in empty.columns
         ]
-        addv_from = self._file_add_versions(from_version)
-        addv_to = self._file_add_versions(to_version)
         # a shared file whose add version moved inside the interval was
         # re-added, and ANY restore inside the interval is a filter
         # barrier (visible tombstone/DV sets can shrink as well as
@@ -3048,7 +2931,7 @@ class TxLogTable:
             f
             for f in shared
             if restore_in_interval
-            or addv_to.get(f, 0) != addv_from.get(f, 0)
+            or st_to.add_versions.get(f, 0) != st_from.add_versions.get(f, 0)
         )
         stable = sorted(shared - set(readded))
         if stable and new_ts:
@@ -3061,9 +2944,7 @@ class TxLogTable:
             # scan, no key shuffle). NULL-keyed rows never equi-match a
             # tombstone key, so they are (correctly) never reported
             # deleted — mirroring _tombstone_filter's NULL retention.
-            sh_from = self._read_with_tombstones(
-                stable, version=from_version
-            )
+            sh_from = self._read_with_tombstones(stable, st_from)
             by_key: dict[str, tuple[set, list[str]]] = {}
             for _v, key, vals, path, _n in new_ts:
                 s, ps = by_key.setdefault(key, (set(), []))
@@ -3095,9 +2976,7 @@ class TxLogTable:
                 ],
             )
             diff = diff.unionByName(deletes)
-        new_dvs = [
-            d for d in self._live_dvs(to_version) if d[0] > from_version
-        ]
+        new_dvs = [d for d in st_to.dvs if d[0] > from_version]
         if stable and new_dvs:
             # rows of stable files killed by a DELETION VECTOR in
             # (from, to]: same one-scan + broadcast-semi shape as key
@@ -3105,7 +2984,7 @@ class TxLogTable:
             # Visibility at from_version (earlier tombstones/DVs applied)
             # keeps already-dead rows out of the feed.
             vis = self._read_with_tombstones(
-                stable, version=from_version, keep_row_address=True
+                stable, st_from, keep_row_address=True
             )
             gone_dv = vis.join(
                 F.broadcast(
@@ -3138,10 +3017,8 @@ class TxLogTable:
         if readded:
             diff = diff.unionByName(
                 cdc.snapshot_diff(
-                    self._read_with_tombstones(
-                        readded, version=from_version
-                    ),
-                    self._read_with_tombstones(readded, version=to_version),
+                    self._read_with_tombstones(readded, st_from),
+                    self._read_with_tombstones(readded, st_to),
                     keys,
                     compare_cols,
                 )
@@ -3198,95 +3075,58 @@ class TxLogTable:
         history preserved (the bad commits stay inspectable), and the
         restore itself is one more atomic, OCC-guarded commit.
 
-        Logical-delete semantics (round-8 fix, found by review): the
-        restored state must EQUAL snapshot(version) — including the
-        tombstones/DVs that were VISIBLE at the target. The manifest
-        therefore (a) re-adds files with their ORIGINAL add versions
-        (`added_versions` map), so filters visible at the target keep
-        their exact per-file applicability, and (b) acts as a FILTER
-        BARRIER: `_live_tombstones`/`_live_dvs` drop filters whose
-        origin lies AFTER `restored_from` when they fold past this
+        The manifest is built from two folded states, the head's and the
+        target's. Logical-delete semantics (round-8 fix, found by
+        review): the restored state must EQUAL snapshot(version) —
+        including the tombstones/DVs that were VISIBLE at the target.
+        The manifest therefore (a) re-adds files with their ORIGINAL add
+        versions (`added_versions` map), so filters visible at the
+        target keep their exact per-file applicability, and (b) acts as
+        a FILTER BARRIER: `_state` drops tombstones, DVs and renames
+        whose origin lies AFTER `restored_from` when it folds past this
         manifest — restoring to a pre-delete version undoes the delete
-        (the old behavior, preserved), while restoring to a
-        post-delete version no longer resurrects the deleted rows (the
-        old bug: re-adding at the restore version postdated every
-        filter and silently voided them all)."""
-        base = self.latest_version()
-        target = self._live_files(version)
-        current = self._live_files()
-        addv = self._file_add_versions(version)
+        (the old behavior, preserved), while restoring to a post-delete
+        version no longer resurrects the deleted rows (the old bug:
+        re-adding at the restore version postdated every filter and
+        silently voided them all)."""
+        head = self._state()
+        tgt = self._state(version)
         manifest = {
-            "version": base + 1,
+            "version": head.version + 1,
             "op": "restore",
             "restored_from": version,
-            "added": target,
-            "removed": current,
-            "added_versions": {r: addv.get(r, 0) for r in target},
-            "stats": {
-                rel: st
-                for rel, st in self._live_stats(version).items()
-                if rel in set(target)
+            "added": tgt.files,
+            "removed": head.files,
+            "added_versions": {
+                r: tgt.add_versions.get(r, 0) for r in tgt.files
             },
+            "stats": tgt.stats,
         }
-        # CARRY the target's visible filters explicitly (review r8,
-        # second pass): the barrier alone is one-way — it can DROP
-        # filters but never re-establish one an EARLIER restore already
-        # dropped (restore(1) then restore(2) would lose v2's delete).
-        # Carriage is idempotent with barrier-surviving filters (the
-        # folds dedup by (origin, key/path)), exactly like checkpoint
-        # carriage.
-        ts_at = self._live_tombstones(version)
-        if ts_at:
-            manifest["tombstones"] = self._serialize_tombstones(ts_at)
-        dvs_at = self._live_dvs(version)
-        if dvs_at:
-            manifest["dvs"] = [
-                {"version": v, "path": p, "n_rows": n, "addr": "path"}
-                for v, p, n in dvs_at
-            ]
-        # renames: barrier + carriage, same as tombstones/DVs — restore
-        # to a pre-rename version rolls the schema back (files alias to
-        # the names of THAT version), restore past an earlier restore
-        # re-establishes the target's mapping
-        rens_at = self._live_renames(version)
-        if rens_at:
-            manifest["renames_v"] = [[v, o, n] for v, o, n in rens_at]
-        # generated rules: the target's rule set replaces the head's —
-        # rules added after the target are explicitly nulled so the
-        # fold forgets them
-        cur_g = self._live_generated()
-        tgt_g = self._live_generated(version)
-        g: dict = {name: None for name in cur_g if name not in tgt_g}
-        g.update(tgt_g)
-        if g:
-            manifest["generated"] = g
-        # constraints: same replace-with-target rule as generated
-        # rules — Delta RESTORE rolls METADATA back too; a CHECK
-        # declared after the target is retired (explicit null), one
-        # dropped or redefined after it is re-established at the
-        # target's expression (review r9, sixth pass: constraints were
-        # the one metadata family restore left at the head's state)
-        cur_c = self._live_constraints()
-        tgt_c = self._live_constraints(version)
-        c: dict = {name: None for name in cur_c if name not in tgt_c}
-        c.update(tgt_c)
-        if c:
-            manifest["constraints"] = c
-        sch = None
-        for v in range(version, 0, -1):
-            try:
-                m = self._read_manifest(v)
-            except FileNotFoundError:
-                break
-            if "schema" in m:
-                sch = m["schema"]
-                break
-        if sch is not None:
-            manifest["schema"] = sch
-        if not self._try_commit(base + 1, manifest):
+        # CARRY the target's visible filters and rename chain explicitly
+        # (review r8, second pass): the barrier alone is one-way — it
+        # can DROP entries but never re-establish one an EARLIER restore
+        # already dropped (restore(1) then restore(2) would lose v2's
+        # delete). Carriage is idempotent with barrier-surviving entries
+        # (the fold dedups by origin), exactly like checkpoint carriage.
+        manifest.update(self._carried(tgt.tombstones, tgt.dvs, tgt.renames))
+        # generated rules and constraints: the target's set replaces the
+        # head's — Delta RESTORE rolls METADATA back too; a rule added
+        # after the target is explicitly nulled so the fold forgets it,
+        # one dropped or redefined after it is re-established at the
+        # target's expression (review r9, sixth pass)
+        for field, cur, at in (
+            ("generated", head.generated, tgt.generated),
+            ("constraints", head.constraints, tgt.constraints),
+        ):
+            rules: dict = {name: None for name in cur if name not in at}
+            rules.update(at)
+            if rules:
+                manifest[field] = rules
+        if tgt.schema is not None:
+            manifest["schema"] = tgt.schema
+        if not self._try_commit(head.version + 1, manifest):
             raise CommitConflict("concurrent commit during restore; retry")
-        return base + 1
-
+        return head.version + 1
 
     def clone_shallow(self, dest: str) -> "TxLogTable":
         """Zero-copy shallow clone (Delta SHALLOW CLONE): the clone's
@@ -3318,119 +3158,62 @@ class TxLogTable:
         if t.latest_version():
             raise FileExistsError(f"txlog table already exists at {dest}")
         os.makedirs(dest, exist_ok=True)
-        # ONE pinned snapshot version for every fold below: the folds
-        # each re-read the head, so a concurrent source commit between
-        # them would mix state from two versions — and a carried
-        # added_version above clone_v would break the unified version
-        # space this function establishes (review r9, fifth pass)
-        src_head = self.latest_version()
-        clone_v = max(1, src_head)
-        if src_head == 0:
-            # an EMPTY source (no manifests) has nothing to fold — the
-            # version-pinned folds below would raise on the absent
-            # version 1; commit a bare empty clone instead (review r9,
-            # seventh pass: the pinning regression crashed this path)
-            if not t._try_commit(
-                clone_v,
-                {
-                    "version": clone_v,
-                    "op": "clone",
-                    "source": os.path.abspath(self.path),
-                    "source_version": src_head,
-                    "added": [],
-                    "removed": [],
-                    "stats": {},
-                },
-            ):
-                raise CommitConflict(
-                    f"concurrent writer created {dest} during clone"
-                )
-            return t
-        live = self._live_files(version=clone_v)
-        stats = self._live_stats(version=clone_v)
-        rels = {
-            r: os.path.relpath(os.path.join(self.path, r), dest)
-            for r in live
-        }
+        # ONE folded state carries every field below, so a concurrent
+        # source commit can never mix two versions into the clone, nor
+        # carry an added_version above clone_v (review r9, fifth pass)
+        st = self._state()
+        clone_v = max(1, st.version)
         manifest = {
             "version": clone_v,
             "op": "clone",
             "source": os.path.abspath(self.path),
-            "source_version": clone_v,
-            "added": sorted(rels.values()),
+            "source_version": st.version,
+            "added": [],
             "removed": [],
-            "stats": {rels[r]: st for r, st in stats.items() if r in rels},
+            "stats": {},
         }
-        ts = self._live_tombstones(clone_v)
-        if ts:
-            # un-materialized logical deletes must follow the data, and
-            # the tombstone-version vs file-add-version ordering must
-            # survive the re-rooting (a post-tombstone re-insert in the
-            # source must not get filtered in the clone); delete-file
-            # SIDECARS re-root by relative path exactly like data files
-            # — zero-copy for the key sets too
-            path_map = {
-                t[3]: os.path.relpath(os.path.join(self.path, t[3]), dest)
-                for t in ts
-                if t[3] is not None
-            }
-            manifest["tombstones"] = self._serialize_tombstones(
-                ts, path_map=path_map
+        if st.version:
+
+            def reroot(rel: str) -> str:
+                # carried data files AND delete-file sidecars re-root by
+                # relative path — zero-copy for the key sets too. DV
+                # addresses (paths below the data root) are unchanged
+                # by cloning, so DVs keep matching the source files.
+                return os.path.relpath(os.path.join(self.path, rel), dest)
+
+            rels = {r: reroot(r) for r in st.files}
+            manifest["added"] = sorted(rels.values())
+            manifest["stats"] = {rels[r]: zm for r, zm in st.stats.items()}
+            # un-materialized logical deletes, renames, generated rules
+            # and CHECK constraints follow the clone (review r8, third
+            # pass; review r9, fifth pass): without them the clone
+            # resurrects deleted rows, reads pre-rename source files
+            # NULL under the logical name, and skips the source's
+            # declared write rules
+            manifest.update(
+                self._carried(st.tombstones, st.dvs, st.renames, reroot)
             )
-        dvs = self._live_dvs(clone_v)
-        if dvs:
-            # deletion vectors re-root like key-tombstone sidecars; the
-            # addressed data-root-relative paths are unchanged by
-            # cloning (only the prefix above the data root moves), so
-            # the DV
-            # keeps matching the referenced source files
-            manifest["dvs"] = [
-                {
-                    "version": v,
-                    "path": os.path.relpath(
-                        os.path.join(self.path, p), dest
-                    ),
-                    "n_rows": n,
-                    "addr": "path",
+            if st.generated:
+                manifest["generated"] = st.generated
+            if st.constraints:
+                manifest["constraints"] = st.constraints
+            if st.blooms:
+                # per-file Bloom zonemaps re-key to the re-rooted rels so
+                # scan_files keeps point-lookup pruning on the clone
+                manifest["bloom_bits"] = st.bloom_bits
+                manifest["blooms"] = {
+                    rels[r]: bl for r, bl in st.blooms.items()
                 }
-                for v, p, n in dvs
-            ]
-        # renames + generated rules follow the clone (review r8, third
-        # pass: without them the clone reads pre-rename source files
-        # raw — NULL under the logical name — and appends to the clone
-        # skip generated-column compute/validation)
-        rens = self._live_renames(clone_v)
-        if rens:
-            manifest["renames_v"] = [[v, o, n] for v, o, n in rens]
-        gens = self._live_generated(clone_v)
-        if gens:
-            manifest["generated"] = gens
-        cons = self._live_constraints(clone_v)
-        if cons:
-            # CHECK constraints follow the clone like generated rules —
-            # without carriage, writes to the clone silently skipped the
-            # source's declared invariants (review r9, fifth pass)
-            manifest["constraints"] = cons
-        bloom_bits, blooms = self._live_blooms(clone_v)
-        if blooms:
-            # per-file Bloom zonemaps re-key to the re-rooted rels so
-            # scan_files keeps point-lookup pruning on the clone
-            manifest["bloom_bits"] = bloom_bits
-            manifest["blooms"] = {
-                rels[r]: bl for r, bl in blooms.items() if r in rels
-            }
-        if ts or dvs or rens:
-            src_addv = self._file_add_versions(clone_v)
-            manifest["added_versions"] = {
-                rels[r]: src_addv.get(r, 0) for r in live
-            }
-        sch = None
-        for m in reversed(self.history()):
-            if m["version"] <= clone_v and "schema" in m:
-                sch = m["schema"]
-                break
-        if sch is not None:
-            manifest["schema"] = sch
+            if st.tombstones or st.dvs or st.renames:
+                # the tombstone-version vs file-add-version ordering
+                # must survive the re-rooting (a post-tombstone
+                # re-insert in the source must not get filtered in the
+                # clone)
+                manifest["added_versions"] = {
+                    rels[r]: st.add_versions.get(r, 0) for r in st.files
+                }
+            if st.schema is not None:
+                manifest["schema"] = st.schema
         if not t._try_commit(clone_v, manifest):
             raise CommitConflict(f"concurrent create at {dest}")
         return t

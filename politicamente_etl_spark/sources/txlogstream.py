@@ -31,7 +31,6 @@ Usage:
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator, Sequence
 
@@ -42,7 +41,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-_LOG_DIR = "_txlog"
+from politicamente_etl_spark.sources.txlog import (
+    fold_renames,
+    load_manifest,
+    log_versions,
+)
 
 # ops whose `added` files carry genuinely NEW rows (clone's v1
 # references the source's files — for a stream started at offset 0
@@ -77,22 +80,6 @@ class _FilePartition(InputPartition):
         self.resolve = resolve or {}
 
 
-def _versions(path: str) -> list[int]:
-    log = os.path.join(path, _LOG_DIR)
-    if not os.path.isdir(log):
-        return []
-    return sorted(
-        int(f[:-5])
-        for f in os.listdir(log)
-        if f.endswith(".json") and f[:-5].isdigit()
-    )
-
-
-def _manifest(path: str, version: int) -> dict:
-    with open(os.path.join(path, _LOG_DIR, f"{version:020d}.json")) as fh:
-        return json.load(fh)
-
-
 def _rename_chain(
     path: str, transitions: list[tuple[int, str, str]] | None = None
 ) -> list[tuple[int, int, str, str]]:
@@ -105,10 +92,8 @@ def _rename_chain(
     `transitions` (caller-owned, appended to) collects the full
     declared-name transition history the inverse synthesis composes
     over (review r9, sixth pass)."""
-    from politicamente_etl_spark.sources.txlog import fold_renames
-
     return fold_renames(
-        [_manifest(path, v) for v in _versions(path)],
+        [load_manifest(path, v) for v in log_versions(path)],
         synthesize_restore_inverses=True,
         transitions=transitions,
     )
@@ -121,14 +106,14 @@ def _infer_declared_version(path: str, field_names: list[str]) -> int:
     the governing range of the schema at version v runs up to just
     below the NEXT schema-bearing version. No match (or no names to
     match) falls back to the head — the pre-inference behavior."""
-    vs = _versions(path)
+    vs = log_versions(path)
     head = vs[-1] if vs else 0
     if not field_names:
         return head
     want = sorted(field_names)
     nxt: int | None = None  # lowest schema-bearing version above v
     for v in reversed(vs):
-        m = _manifest(path, v)
+        m = load_manifest(path, v)
         if "schema" not in m:
             continue
         names = sorted(f["name"] for f in m["schema"]["fields"])
@@ -255,7 +240,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         return {"version": 0}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self.path)
+        vs = log_versions(self.path)
         return {"version": vs[-1] if vs else 0}
 
     def _current_chain(self) -> list[tuple[int, int, str, str]]:
@@ -267,7 +252,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         retroactively fire: restores among them trigger a full refold,
         and expiry/in-place rewrites shrink the listing, breaking the
         prefix match)."""
-        vs = tuple(_versions(self.path))
+        vs = tuple(log_versions(self.path))
         if vs == self._chain_key:
             return self._chain
         prev = self._chain_key or ()
@@ -277,10 +262,8 @@ class TxLogStreamReader(DataSourceStreamReader):
             # the suffix — restores and their inverse synthesis
             # included — goes through the one fold implementation
             # (review r9, fifth pass: the inline copy was a third fold)
-            from politicamente_etl_spark.sources.txlog import fold_renames
-
             self._chain = fold_renames(
-                [_manifest(self.path, v) for v in vs[len(prev):]],
+                [load_manifest(self.path, v) for v in vs[len(prev):]],
                 synthesize_restore_inverses=True,
                 state=(
                     list(self._chain),
@@ -305,7 +288,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         chain = self._current_chain() if self.field_names else []
         maps: dict[int, dict[str, str]] = {}
         lo, hi = start["version"], end["version"]
-        vs = _versions(self.path)
+        vs = log_versions(self.path)
         in_range = [v for v in vs if lo < v <= hi]
         # version numbers can be sparse. Two causes, opposite handling
         # (review r9, fifth pass): numbers below a CLONE's first
@@ -320,7 +303,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         if len(in_range) < hi - lo:
             vset = set(vs)
             gaps = [v for v in range(lo + 1, hi + 1) if v not in vset]
-            first = _manifest(self.path, vs[0]) if vs else {}
+            first = load_manifest(self.path, vs[0]) if vs else {}
             never_existed = (
                 bool(vs)
                 and first.get("op") == "clone"
@@ -340,7 +323,7 @@ class TxLogStreamReader(DataSourceStreamReader):
                 cks = [
                     v
                     for v in in_range
-                    if _manifest(self.path, v).get("checkpoint")
+                    if load_manifest(self.path, v).get("checkpoint")
                 ]
                 if lo == 0 and cks and all(g < max(cks) for g in gaps):
                     snapshot_from = max(cks)
@@ -357,7 +340,7 @@ class TxLogStreamReader(DataSourceStreamReader):
             if snapshot_from is not None and v < snapshot_from:
                 # folded into the initial-load checkpoint below
                 continue
-            m = _manifest(self.path, v)
+            m = load_manifest(self.path, v)
             op = m.get("op", "")
             if v == snapshot_from:
                 # the checkpoint's live fold is the initial data; its
@@ -505,9 +488,9 @@ class TxLogStreamDataSource(DataSource):
 
     def schema(self) -> StructType:
         path = self.options["path"]
-        vs = _versions(path)
+        vs = log_versions(path)
         for v in reversed(vs):
-            m = _manifest(path, v)
+            m = load_manifest(path, v)
             if "schema" in m:
                 # remember the vintage this schema belongs to — the
                 # reader's rename math is relative to it (review r9,

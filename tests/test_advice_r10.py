@@ -62,7 +62,7 @@ def test_clone_groups_carried_files_by_source_commit(spark):
     # data/<commit> dirs; snapshot must read them as two groups even
     # though both relpaths start with '../src'
     assert sorted(r["k"] for r in clone.snapshot().collect()) == [0, 1, 2, 3]
-    files = clone._live_files(None)
+    files = clone._state(None).files
     assert all(f.startswith("..") for f in files), "clone carries by relpath"
     dirs = {os.path.dirname(f) for f in files}
     assert len(dirs) == 2

@@ -81,7 +81,7 @@ def test_sync_from_rejects_violating_source_and_unstages(spark, sf_dir):
     # nothing committed, nothing staged left behind, no sidecar leaked
     assert t.latest_version() == v_before
     assert t.snapshot().count() == n_before
-    live = set(t._live_files())
+    live = set(t._state().files)
     data_root = os.path.join(path, "data")
     on_disk = {
         os.path.relpath(os.path.join(r, f), path)

@@ -65,7 +65,7 @@ def test_clustered_layout_has_basename_collisions(spark):
     basenames across partition dirs (otherwise the regression tests
     below are vacuous)."""
     t, _ = _mk_clustered(spark)
-    rels = t._live_files()
+    rels = t._state().files
     basenames = [os.path.basename(r) for r in rels]
     assert len(rels) == 40
     assert len(set(basenames)) < len(basenames), (
@@ -91,7 +91,7 @@ def test_dv_on_clustered_table_deletes_only_matching_rows(spark):
 def test_dv_addresses_are_data_root_relative_paths(spark):
     t, _ = _mk_clustered(spark)
     t.delete_where_rowindex("v < 3")
-    dvs = t._live_dvs()
+    dvs = t._state().dvs
     assert dvs, "expected a committed deletion vector"
     addr = t._dv_rows_df([p for _v, p, _n in dvs]).collect()
     assert len(addr) == 3
@@ -102,7 +102,7 @@ def test_dv_addresses_are_data_root_relative_paths(spark):
         )
         assert r["__fb"].endswith(".parquet")
     # every address resolves to exactly one live file
-    rels = {r.split(f"{_DATA_DIR}/", 1)[-1] for r in t._live_files()}
+    rels = {r.split(f"{_DATA_DIR}/", 1)[-1] for r in t._state().files}
     for r in addr:
         assert r["__fb"] in rels
 
@@ -500,7 +500,7 @@ def test_metadata_setters_refuse_to_rebase_past_rename(spark, monkeypatch):
     state["fired"] = False
     fresh = TxLogTable(spark, path)
     fresh.set_constraint("val_nonneg", "val >= 0")
-    assert "val_nonneg" in fresh._live_constraints()
+    assert "val_nonneg" in fresh._state().constraints
 
 
 # -- review r9 second pass: fence/checkpoint/expiry refinements ------------
@@ -514,8 +514,9 @@ def test_legacy_dv_fence_raises_and_restore_clears_it(spark):
     t, path = _mk_plain(spark)
     pre_dv = t.latest_version()
     # forge a legacy-era DV manifest: sidecar + entry WITHOUT addr
+    st = t._state()
     matched = (
-        t._read_with_tombstones(t._live_files(), keep_row_address=True)
+        t._read_with_tombstones(st.files, st, keep_row_address=True)
         .filter("v < 3")
         .select("__fb", "__ri")
     )
@@ -634,14 +635,14 @@ def test_append_schema_merge_widens_nullability(spark):
     t = TxLogTable.create(
         spark, path, spark.range(0, 5).selectExpr("id as v")
     )
-    sch0 = t._latest_schema()
+    sch0 = t._state().schema
     assert sch0["fields"][0]["nullable"] is False
     t.append(
         spark.range(5, 8).selectExpr(
             "CASE WHEN id = 6 THEN NULL ELSE id END as v"
         )
     )
-    sch1 = t._latest_schema()
+    sch1 = t._state().schema
     assert sch1["fields"][0]["nullable"] is True
     assert t.snapshot().filter("v IS NULL").count() == 1
 
@@ -659,7 +660,7 @@ def test_append_schema_merge_widens_numeric_types(spark):
         spark.range(0, 5).selectExpr("id as k", "cast(1 as bigint) as w"),
     )
     t.append(spark.range(5, 8).selectExpr("id as k", "7 as w"))  # int literal
-    sch = t._latest_schema()
+    sch = t._state().schema
     assert {f["name"]: f["type"] for f in sch["fields"]}["w"] == "long"
     # widening the other direction too: int table column, long append
     t2 = TxLogTable.create(
@@ -670,7 +671,7 @@ def test_append_schema_merge_widens_numeric_types(spark):
     t2.append(
         spark.range(5, 8).selectExpr("id as k", "cast(7 as bigint) as w")
     )
-    sch2 = t2._latest_schema()
+    sch2 = t2._state().schema
     assert {f["name"]: f["type"] for f in sch2["fields"]}["w"] == "long"
     with pytest.raises(CommitConflict, match="not widenable"):
         t2.append(
@@ -701,7 +702,7 @@ def test_append_schema_merge_handles_complex_types(spark):
     t.append(
         spark.range(3, 5).selectExpr("id as k", "split(string(id), ',') as tags")
     )
-    sch = {f["name"]: f for f in t._latest_schema()["fields"]}
+    sch = {f["name"]: f for f in t._state().schema["fields"]}
     assert sch["tags"]["type"]["containsNull"] is True
     assert t.snapshot().count() == 5
     # incompatible element type still conflicts (and unstages)
@@ -998,14 +999,14 @@ def test_restore_rolls_back_constraints(spark):
     )
     t.set_constraint("k_small", "k < 100")  # v2
     t.restore(1)
-    assert t._live_constraints() == {}, "post-target constraint retired"
+    assert t._state().constraints == {}, "post-target constraint retired"
     t.append(spark.range(1).selectExpr("500 as k"))  # no longer gated
     t.set_constraint("k_cap", "k < 1000")  # at head
     head = t.latest_version()
     t.set_constraint("k_cap", None)  # dropped
     t.append(spark.range(1).selectExpr("5000 as k"))
     t.restore(head)
-    assert t._live_constraints() == {"k_cap": "k < 1000"}, (
+    assert t._state().constraints == {"k_cap": "k < 1000"}, (
         "target's constraint re-established after a later drop"
     )
     with pytest.raises(ConstraintViolation):
@@ -1029,10 +1030,12 @@ def test_checkpoint_carries_blooms_through_vacuum(spark):
         bloom_cols=("k",),
     )
     t.append(spark.range(64, 96).selectExpr("id as k"))
-    bits_before, blooms_before = t._live_blooms()
+    st = t._state()
+    bits_before, blooms_before = st.bloom_bits, st.blooms
     assert blooms_before
     t.vacuum(retain_versions=1)
-    bits_after, blooms_after = t._live_blooms()
+    st = t._state()
+    bits_after, blooms_after = st.bloom_bits, st.blooms
     assert bits_after == bits_before
     assert blooms_after == blooms_before, (
         "bloom zonemaps must survive manifest expiry via the checkpoint"
@@ -1140,10 +1143,10 @@ def test_clone_carries_constraints_and_blooms(spark):
     )
     t.set_constraint("k_nonneg", "k >= 0")
     clone = t.clone_shallow(os.path.join(base, "c"))
-    assert clone._live_constraints() == {"k_nonneg": "k >= 0"}
+    assert clone._state().constraints == {"k_nonneg": "k >= 0"}
     with pytest.raises(ConstraintViolation):
         clone.append(spark.range(1).selectExpr("-5 as k"))
-    bits, blooms = clone._live_blooms()
+    blooms = clone._state().blooms
     assert blooms, "bloom zonemaps must follow the clone"
 
 
@@ -1175,7 +1178,7 @@ def test_stream_raises_on_vacuum_expired_offsets(spark):
         {"version": 0}, {"version": t.latest_version()}
     )
     assert {os.path.relpath(p.abs_path, path) for p in parts} == set(
-        t._live_files()
+        t._state().files
     )
     # resumed at the retained head: no gap, no raise
     assert (
@@ -1214,7 +1217,7 @@ def test_stream_snapshot_load_requires_ignore_deletes_for_folded_deletes(
     parts = tolerant.partitions(
         {"version": 0}, {"version": t.latest_version()}
     )
-    assert len(parts) == len(t._live_files())
+    assert len(parts) == len(t._state().files)
 
 
 def test_stream_skips_clone_never_existed_versions(spark):
@@ -1238,6 +1241,6 @@ def test_stream_skips_clone_never_existed_versions(spark):
     parts = reader.partitions(
         {"version": 0}, {"version": clone.latest_version()}
     )
-    assert len(parts) == len(clone._live_files()), (
+    assert len(parts) == len(clone._state().files), (
         "one partition per carried file, no error for the gap"
     )

@@ -43,7 +43,7 @@ def test_clustered_snapshot_reads_one_group_per_commit(spark):
     t = TxLogTable.create(
         spark, os.path.join(base, "t"), df, cluster_file_col="cl"
     )
-    assert len(t._live_files()) == n  # one file per cluster value
+    assert len(t._state().files) == n  # one file per cluster value
     t.delete_where_rowindex("k % 10 = 3")
     plan = _plan(t.snapshot())
     # one scan group: a single parquet scan of the data files plus the

@@ -57,8 +57,8 @@ def test_zordered_txlog_scan_equals_filter(spark, pts, a, b, c, d):
         )
         assert got == want
         # dropped files must be provably disjoint from the box
-        stats = t._live_stats()
-        for rel in set(t._live_files()) - set(kept):
+        stats = t._state().stats
+        for rel in set(t._state().files) - set(kept):
             sx, sy = stats[rel]["x"], stats[rel]["y"]
             assert sx[0] > hi_x or sx[1] < lo_x or sy[0] > hi_y or sy[1] < lo_y
     finally:

@@ -164,7 +164,7 @@ def test_clone_shallow_empty_source(spark):
         assert t.latest_version() == 0
         c = t.clone_shallow(os.path.join(d, "dst"))
         assert c.latest_version() == 1
-        assert c._live_files() == []
+        assert c._state().files == []
 
 
 # --- 4. JPEG fill bytes -------------------------------------------------

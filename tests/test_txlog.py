@@ -4,6 +4,7 @@ orphans, vacuum, checkpoint, schema evolution."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 
@@ -81,7 +82,7 @@ def test_merge_prunes_untouched_files(spark, tmp_path):
     t = TxLogTable.create(spark, str(tmp_path / "p"), o.filter(F.col("o_orderkey") % 2 == 0))
     # three more commits so the table holds several independent file sets
     t.append(o.filter(F.col("o_orderkey") % 2 == 1))
-    before = set(t._live_files())
+    before = set(t._state().files)
     # batch touches only a handful of keys → at most a few files rewritten
     batch = o.filter(F.col("o_orderkey") % 500 == 0).withColumn(
         "o_orderpriority", F.lit("0-MERGED")
@@ -90,7 +91,7 @@ def test_merge_prunes_untouched_files(spark, tmp_path):
     stats = m["merge_stats"]
     assert stats["files_rewritten"] + stats["files_preserved"] == len(before)
     # untouched files survive the commit verbatim (no rewrite, same paths)
-    preserved = set(t._live_files()) & before
+    preserved = set(t._state().files) & before
     assert len(preserved) == stats["files_preserved"]
     # and the merge result is correct
     assert t.snapshot().count() == o.count()
@@ -267,17 +268,17 @@ def test_optimize_compacts_without_changing_data(spark, tmp_path):
     t = TxLogTable.create(spark, str(tmp_path / "opt"), o.limit(0))
     for i in range(6):  # six tiny single-file commits
         t.append(o.filter(F.col("o_orderkey") % 6 == i).coalesce(1))
-    pre_files = len(t._live_files())
+    pre_files = len(t._state().files)
     pre_keys = nkeys(t.snapshot())
     pre_version = t.latest_version()
     res = t.optimize(target_file_bytes=1024 * 1024 * 1024)
     assert res["files_compacted"] == pre_files
-    assert len(t._live_files()) < pre_files
+    assert len(t._state().files) < pre_files
     assert nkeys(t.snapshot()) == pre_keys  # data bit-unchanged
     # time travel to a pre-optimize version still resolves
     assert t.snapshot(version=pre_version).count() == len(pre_keys)
     # zonemap stats were recomputed for the compacted files
-    assert all(t._live_stats().values())
+    assert all(t._state().stats.values())
 
 
 def test_table_changes_classifies_merge_delta(spark, tmp_path):
@@ -395,7 +396,7 @@ def test_restore_rolls_back_as_new_commit(spark, tmp_path, table):
     # history preserved: the bad merge is still inspectable
     assert [m["op"] for m in table.history()] == ["create", "merge", "restore"]
     # and the restore commit still prunes/scans via carried-forward stats
-    assert table._live_stats()
+    assert table._state().stats
 
 
 def test_delete_keys_prunes_and_round_trips(spark, tmp_path):
@@ -406,7 +407,7 @@ def test_delete_keys_prunes_and_round_trips(spark, tmp_path):
     )
     t.append(o.filter((F.col("o_orderkey") > 1000) & (F.col("o_orderkey") <= 2000)))
     t.append(o.filter(F.col("o_orderkey") > 2000))
-    before = set(t._live_files())
+    before = set(t._state().files)
     # subjects live only in the low key range -> high-range files must be
     # skipped by zonemap stats, untouched files survive verbatim
     subjects = o.filter(F.col("o_orderkey") <= 50).select("o_orderkey")
@@ -416,7 +417,7 @@ def test_delete_keys_prunes_and_round_trips(spark, tmp_path):
     assert st["files_rewritten"] + st["files_preserved"] == len(before)
     assert st["files_skipped_by_stats"] >= 1
     assert st["rows_removed"] == n_subj_rows
-    preserved = set(t._live_files()) & before
+    preserved = set(t._state().files) & before
     assert len(preserved) == st["files_preserved"]
     # post-delete state == source minus subjects, exactly
     got = {r["o_orderkey"] for r in t.snapshot().select("o_orderkey").collect()}
@@ -447,3 +448,122 @@ def test_delete_keys_everything_in_a_file(spark, tmp_path):
         F.col("o_orderkey") <= 100
     ).count()
     assert t.snapshot().count() == o.filter(F.col("o_orderkey") > 100).count()
+
+
+def test_each_op_folds_the_log_once(spark, tmp_path, monkeypatch):
+    """Table state is one fold of the log per op: scan() and snapshot()
+    list `_txlog/` once, merge() at most twice."""
+
+    def batch(lo, hi):
+        return spark.range(lo, hi).selectExpr("id as k", "id * 2 as v")
+
+    t = TxLogTable.create(spark, str(tmp_path / "t"), batch(0, 10))
+    for i in range(1, 3):
+        t.append(batch(i * 10, i * 10 + 10))
+    listings = []
+    real_listdir = os.listdir
+
+    def counting_listdir(p="."):
+        if os.path.basename(os.path.normpath(str(p))) == "_txlog":
+            listings.append(p)
+        return real_listdir(p)
+
+    monkeypatch.setattr(os, "listdir", counting_listdir)
+
+    def n_listings(op):
+        listings.clear()
+        op()
+        return len(listings)
+
+    assert n_listings(lambda: t.scan({"k": (5, 5)}).collect()) == 1
+    assert n_listings(lambda: t.snapshot().count()) == 1
+    assert n_listings(lambda: t.merge(batch(5, 15), ["k"])) <= 2
+
+
+def _rerooted(st, reroot=lambda p: p):
+    """`st` with every data and sidecar path mapped through `reroot`,
+    files sorted and add versions limited to live files — the view a
+    shallow clone carries."""
+    return dataclasses.replace(
+        st,
+        files=sorted(reroot(f) for f in st.files),
+        add_versions={reroot(f): st.add_versions.get(f, 0) for f in st.files},
+        stats={reroot(f): s for f, s in st.stats.items()},
+        blooms={reroot(f): b for f, b in st.blooms.items()},
+        tombstones=[
+            (v, k, vals, None if p is None else reroot(p), n)
+            for v, k, vals, p, n in st.tombstones
+        ],
+        dv_entries=[(v, reroot(p), n) for v, p, n in st.dv_entries],
+    )
+
+
+def test_state_survives_checkpoint_restore_and_clone(spark, tmp_path):
+    """One log carrying every state field — blooms, a rename, a
+    generated rule, a constraint, inline and sidecar tombstones, a DV —
+    folds to the same state after checkpoint() and restore(head), and a
+    shallow clone folds to it once paths are re-rooted."""
+    src = str(tmp_path / "src")
+    t = TxLogTable.create(
+        spark,
+        src,
+        spark.range(0, 64).selectExpr(
+            "id as k", "id as v", "id * 2 as g", "id % 4 as cl"
+        ),
+        cluster_file_col="cl",
+        bloom_cols=("k",),
+    )
+    t.append(spark.range(64, 80).selectExpr("id as k", "id as v", "id * 2 as g"))
+    t.rename_column("v", "w")
+    t.set_generated_column("g", "k * 2")
+    t.set_constraint("k_nonneg", "k >= 0")
+    t.append(spark.range(80, 96).selectExpr("id as k", "id as w"))
+    t.delete_where_logical("k", [1, 2])
+    t.delete_where_logical("k", keys_df=spark.range(3, 5).selectExpr("id as k"))
+    t.delete_where_rowindex("k = 70")
+    head = t._state()
+    assert head.bloom_bits and head.blooms
+    assert head.renames and head.generated and head.constraints
+    assert {p is None for _v, _k, _vals, p, _n in head.tombstones} == {True, False}
+    assert head.dvs and head.dv_fence is None
+    assert any("w" in s for s in head.stats.values())
+
+    dest = str(tmp_path / "clone")
+    clone = t.clone_shallow(dest)
+
+    def reroot(p):
+        return os.path.relpath(os.path.join(src, p), dest)
+
+    assert _rerooted(clone._state()) == _rerooted(head, reroot)
+
+    t.checkpoint()
+    after_ck = t._state()
+    assert dataclasses.replace(after_ck, version=head.version) == head
+    t.restore(after_ck.version)
+    after_restore = t._state()
+    assert dataclasses.replace(after_restore, version=head.version) == head
+
+
+def test_rewrite_targets_on_url_encoded_root(spark, tmp_path):
+    """input_file_name() URL-encodes the path: merge, delete_keys and
+    sync_from on a root holding a space and a '%' must find the same
+    files to rewrite as on a plain root."""
+
+    def run(root):
+        t = TxLogTable.create(
+            spark, str(root), spark.range(0, 10).selectExpr("id as k", "'a' as v")
+        )
+        t.merge(spark.range(5, 15).selectExpr("id as k", "'b' as v"), ["k"])
+        d = t.delete_keys(spark.range(0, 3).selectExpr("id as k"), ["k"])
+        after_delete = sorted(tuple(r) for r in t.snapshot().collect())
+        t.sync_from(spark.range(4, 12).selectExpr("id as k", "'c' as v"), ["k"])
+        after_sync = sorted(tuple(r) for r in t.snapshot().collect())
+        return after_delete, d["delete_stats"]["rows_removed"], after_sync
+
+    plain = run(tmp_path / "plain")
+    assert plain == (
+        [(k, "a") for k in range(3, 5)] + [(k, "b") for k in range(5, 15)],
+        3,
+        [(k, "c") for k in range(4, 12)],
+    )
+    assert run(tmp_path / "my table%x") == plain

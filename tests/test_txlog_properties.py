@@ -60,7 +60,7 @@ def test_txlog_matches_multiset_model(spark, tmp_path_factory, init, ops):
             t.append(_df(spark, d))
             model = sorted(model + sorted(d.items()))
         elif kind == "merge":
-            if not t._live_files() or not model:
+            if not t._state().files or not model:
                 continue  # merge into empty table is rejected by contract
             if not d:
                 continue
@@ -77,7 +77,7 @@ def test_txlog_matches_multiset_model(spark, tmp_path_factory, init, ops):
             t.checkpoint()
         elif kind == "vacuum":
             t.vacuum()
-        got = sorted((r.k, r.v) for r in t.snapshot().collect()) if t._live_files() else []
+        got = sorted((r.k, r.v) for r in t.snapshot().collect()) if t._state().files else []
         assert got == sorted(model), f"after {kind}: {got} != {sorted(model)}"
 
 

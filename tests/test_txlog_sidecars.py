@@ -34,10 +34,10 @@ def test_sidecar_delete_filters_reads_without_rewrite_or_driver_keys(
     spark, tmp_path
 ):
     t = _mk(spark, tmp_path / "t")
-    files_before = set(t._live_files())
+    files_before = set(t._state().files)
     m = t.delete_where_logical("k", keys_df=_keys(spark, [3, 7, 50]))
     assert m["delete_stats"] == {"files_rewritten": 0, "n_keys": 3}
-    assert set(t._live_files()) == files_before
+    assert set(t._state().files) == files_before
     # the manifest carries a path + count, never the key values
     tomb = m["tombstones"][0]
     assert "values" not in tomb and tomb["n_keys"] == 3
@@ -179,7 +179,7 @@ def test_vacuum_reclaims_clustered_commit_dirs(spark, tmp_path):
         spark, str(tmp_path / "t"), df, cluster_file_col="bucket"
     )
     clustered_dirs = {
-        os.path.dirname(os.path.dirname(f)) for f in t._live_files()
+        os.path.dirname(os.path.dirname(f)) for f in t._state().files
     }
     assert len(clustered_dirs) == 1
     (old_commit,) = clustered_dirs

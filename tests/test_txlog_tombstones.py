@@ -21,15 +21,15 @@ def _mk(spark, path, n=100):
 
 def test_logical_delete_rewrites_nothing_and_filters_reads(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
-    files_before = set(t._live_files())
+    files_before = set(t._state().files)
     m = t.delete_where_logical("k", [3, 7, 50])
     assert m["delete_stats"]["files_rewritten"] == 0
-    assert set(t._live_files()) == files_before  # zero data movement
+    assert set(t._state().files) == files_before  # zero data movement
     got = sorted(r.k for r in t.snapshot().collect())
     assert got == [k for k in range(1, 101) if k not in (3, 7, 50)]
     # physically still on disk (merge-on-read, not copy-on-write)
     raw = spark.read.parquet(
-        *[os.path.join(t.path, f) for f in t._live_files()]
+        *[os.path.join(t.path, f) for f in t._state().files]
     )
     assert raw.count() == 100
     # time travel to v1 sees everything
@@ -57,7 +57,7 @@ def test_optimize_materializes_tombstones(spark, tmp_path):
     t.optimize(target_file_bytes=1 << 30)  # everything is "small"
     # rewritten files physically lack the tombstoned rows
     raw = spark.read.parquet(
-        *[os.path.join(t.path, f) for f in t._live_files()]
+        *[os.path.join(t.path, f) for f in t._state().files]
     )
     ks = sorted(r.k for r in raw.collect())
     assert 10 not in ks and 20 not in ks and len(ks) == 98
@@ -70,7 +70,7 @@ def test_checkpoint_carries_tombstones(spark, tmp_path):
     t.checkpoint()
     t2 = TxLogTable(spark, t.path)
     assert t2.snapshot().count() == 99
-    ts = t2._live_tombstones()
+    ts = t2._state().tombstones
     assert ts and ts[0][1] == "k" and 1 in ts[0][2]
 
 

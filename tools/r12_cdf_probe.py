@@ -73,7 +73,7 @@ def run(n_rows: int) -> dict:
     )
     # the structural number (timing at these sizes is fixed-cost
     # dominated): how many data files each form actually reads
-    f1, f2 = set(t._live_files(1)), set(t._live_files(2))
+    f1, f2 = set(t._state(1).files), set(t._state(2).files)
     files_changed_form = len(f1 ^ f2)
     files_full_form = len(f1) + len(f2)
     shutil.rmtree(root)
