@@ -13,7 +13,7 @@ Scale notes (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from politicamente_etl_spark.operators.core import spread
@@ -21,6 +21,16 @@ from politicamente_etl_spark.operators.text import has_shingle, shingles_regex
 
 N_MINHASH = 8  # permutations; md5-keyed, engine-portable
 BAND_SIZE = 2  # 4 bands × 2 rows
+
+# The signature pipeline's expressions are SQL strings, one parse per
+# expression (the `sim.DOT_DOUBLE` idiom): a Column tree costs a py4j
+# round-trip per node, and the same optimized plan built that way took
+# 2 374 round-trips per `minhash_near_dup_pairs` build against 249.
+#
+# One md5-keyed minhash: min over shingles of md5(perm || shingle). md5
+# is identical across engines → oracle-checkable, unlike JVM
+# hashCode-based hashes.
+MINHASH_SQL = "array_min(transform(__shingles, s -> md5(concat_ws(':', '{perm}', s))))"
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -34,16 +44,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
             F.count("*").alias("n_copies"),
         )
     )
-
-
-def minhash_expr(shingle_col: Column, perm: int) -> Column:
-    """One md5-keyed minhash: min over shingles of md5(perm || shingle).
-    md5 is identical across engines → oracle-checkable, unlike JVM
-    hashCode-based hashes."""
-    hashed = F.transform(
-        shingle_col, lambda s: F.md5(F.concat_ws(":", F.lit(str(perm)), s))
-    )
-    return F.array_min(hashed)
 
 
 def with_minhash_signature(
@@ -63,7 +63,7 @@ def with_minhash_signature(
     shingles_regex for why it beats the HOF shapes."""
     sh = df.withColumn("__shingles", shingles_regex(text_col))
     return sh.withColumns(
-        {f"mh_{i}": minhash_expr(F.col("__shingles"), i) for i in range(n_perm)}
+        {f"mh_{i}": F.expr(MINHASH_SQL.format(perm=i)) for i in range(n_perm)}
     ).drop("__shingles")
 
 
@@ -128,32 +128,27 @@ def minhash_near_dup_pairs(
             .filter(F.col("__bucket_n") <= hot_bucket_cap)
             .drop("__bucket_n")
         )
-    a = ex.alias("a")
-    b = ex.alias("b")
-    pairs = a.join(
-        b.hint("shuffle_hash"),
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("doc_a"),
-        F.col(f"b.{id_col}").alias("doc_b"),
-        *[F.col(f"a.mh_{i}").alias(f"a_mh_{i}") for i in range(n_perm)],
-        *[F.col(f"b.mh_{i}").alias(f"b_mh_{i}") for i in range(n_perm)],
-    )
-    agree = sum(
-        F.when(F.col(f"a_mh_{i}") == F.col(f"b_mh_{i}"), 1).otherwise(0)
-        for i in range(n_perm)
+    agree = " + ".join(
+        f"CASE WHEN a.mh_{i} = b.mh_{i} THEN 1 ELSE 0 END" for i in range(n_perm)
     )
     # est_jaccard BEFORE the pair-dedup: a pair matching in k bands gets the
     # same estimate from every band, so dedup-after-project is equivalent —
     # and the dedup shuffle then carries 3 columns, not 2·n_perm signature
     # longs.
     return (
-        pairs.withColumn(
-            "est_jaccard", (agree.cast("double") / F.lit(float(n_perm)))
+        ex.alias("a")
+        .join(
+            ex.alias("b").hint("shuffle_hash"),
+            F.expr(
+                "a.band_id = b.band_id AND a.band_key = b.band_key"
+                f" AND a.{id_col} < b.{id_col}"
+            ),
         )
-        .select("doc_a", "doc_b", "est_jaccard")
+        .selectExpr(
+            f"a.{id_col} AS doc_a",
+            f"b.{id_col} AS doc_b",
+            f"CAST({agree} AS DOUBLE) / CAST({float(n_perm)} AS DOUBLE) AS est_jaccard",
+        )
         .dropDuplicates(["doc_a", "doc_b"])
     )
 
@@ -190,16 +185,14 @@ def _signature_table(
         text_col,
         n_perm,
     ).drop(text_col)
-    n_bands = n_perm // band_size
-    return sig.select(
+    band_keys = [
+        ", ".join(f"mh_{b * band_size + r}" for r in range(band_size))
+        for b in range(n_perm // band_size)
+    ]
+    return sig.selectExpr(
         id_col,
-        *[F.xxhash64(f"mh_{i}").alias(f"mh_{i}") for i in range(n_perm)],
-        *[
-            F.xxhash64(
-                *[F.col(f"mh_{b * band_size + r}") for r in range(band_size)]
-            ).alias(f"band_{b}")
-            for b in range(n_bands)
-        ],
+        *[f"xxhash64(mh_{i}) AS mh_{i}" for i in range(n_perm)],
+        *[f"xxhash64({k}) AS band_{b}" for b, k in enumerate(band_keys)],
     )
 
 
@@ -219,21 +212,13 @@ def _explode_bands(
     """Explode a signature table into (band_id, band_key) rows, carrying
     only ``carry`` extra columns — the exchange payload of any downstream
     band join is exactly id + carry + 12 bytes of band key."""
-    return sig.select(
-        id_col,
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band_id"),
-                        F.col(f"band_{band}").alias("band_key"),
-                    )
-                    for band in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, *carry, "bk.band_id", "bk.band_key")
+    structs = ", ".join(
+        f"struct({band} AS band_id, band_{band} AS band_key)"
+        for band in range(n_bands)
+    )
+    return sig.selectExpr(
+        id_col, *carry, f"explode(array({structs})) AS bk"
+    ).selectExpr(id_col, *carry, "bk.band_id", "bk.band_key")
 
 
 def minhash_cross_pairs(

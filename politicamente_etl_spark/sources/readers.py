@@ -14,11 +14,23 @@ Spark-first equivalents of the reference's extract stage
 - S1 HTTP ZIP fetch (`extract.py:11-36`) is a driver-side landing utility,
   kept out of the executor path: ZIPs are not splittable, so ingest unzips
   to a landing dir and the distributed scan reads the extracted CSVs.
+- Per-table reads (`extract.py:46-50` reads every table afresh):
+  `load_table` resolves each parquet file's Spark schema once and reads
+  with it explicitly afterwards. A schema-less `spark.read.parquet` runs
+  a one-task footer-inference job on every call; an explicit schema runs
+  none. The cache key is the absolute path, a digest of the parquet
+  footer bytes and the session confs that change inference, so a
+  rewrite at the same path, or a flipped conf, resolves afresh.
+  Directories, non-local paths and files without a parquet trailer read
+  schema-less, exactly as Spark would.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import threading
+from collections import OrderedDict
 from fnmatch import fnmatch
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,15 +39,86 @@ from pyspark.sql.types import StringType, StructField, StructType
 from politicamente_etl_spark.schemas import TESTDATA_TABLES
 
 
+# Session confs that change the schema Spark infers from a parquet footer
+# (part of the schema cache key). `load_events` flips the last one.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+_SCHEMA_CACHE_SIZE = 256
+_schemas: OrderedDict[tuple, StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def _footer_digest(path: str) -> str | None:
+    """Digest of a local parquet file's footer (the metadata block plus
+    its 8-byte trailer: 4-byte little-endian length, then ``PAR1``), or
+    None when the file has no parquet trailer. Every type Spark infers
+    comes from this block, so equal digests mean equal inferred schemas
+    under equal confs."""
+    with open(path, "rb") as fh:
+        size = fh.seek(0, os.SEEK_END)
+        if size < 12:
+            return None
+        fh.seek(size - 8)
+        trailer = fh.read(8)
+        footer_len = int.from_bytes(trailer[:4], "little")
+        if trailer[4:] != b"PAR1" or footer_len > size - 12:
+            return None
+        fh.seek(size - 8 - footer_len)
+        footer = fh.read(footer_len)
+    return hashlib.blake2b(footer + trailer, digest_size=16).hexdigest()
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Cache key of `path`'s inferred schema, or None for a path the cache
+    does not serve (directory, non-local, missing, not parquet)."""
+    if not os.path.isfile(path):
+        return None
+    digest = _footer_digest(path)
+    if digest is None:
+        return None
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return (os.path.abspath(path), digest, confs)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver parquet table. Types come from the parquet footer
     (authoritative); Catalyst handles column pruning + predicate pushdown.
+
+    Schema once: the first call for a file lets Spark infer the schema
+    (one footer-reading job) and caches it; every later call reads with
+    ``spark.read.schema(cached)``, which runs no job. The cache key is
+    (absolute path, digest of the footer bytes, the `_INFERENCE_CONFS`
+    values), so a rewrite at the same path or a flipped inference conf
+    (e.g. `load_events`' nanosAsLong) misses and infers afresh; the
+    cache holds the `_SCHEMA_CACHE_SIZE` most recently used keys.
+    Directories, non-local paths and files without a parquet trailer
+    fall back to a schema-less `spark.read.parquet`, as before.
 
     Pins the session timezone to UTC: the driver's own SparkSession may
     inherit a non-UTC JVM zone, which would shift `year()`/`date_format()`
     on timestamps relative to the UTC-naive DuckDB oracle."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _schema_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    with _schemas_lock:
+        schema = _schemas.get(key)
+        if schema is not None:
+            _schemas.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schemas_lock:
+        _schemas[key] = df.schema
+        while len(_schemas) > _SCHEMA_CACHE_SIZE:
+            _schemas.popitem(last=False)
+    return df
 
 
 def load_tables(

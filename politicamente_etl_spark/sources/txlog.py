@@ -65,6 +65,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
@@ -884,6 +885,20 @@ class TxLogTable:
             groups.setdefault(st.add_versions.get(rel, 0), []).append(rel)
         return sorted(groups.items())
 
+    def _declared_read(self, rels: list[str], st: TableState) -> DataFrame:
+        """Plain read of `rels` under the DECLARED schema when the state
+        has one, not the first footer: after an evolving append, files
+        predating the evolution lack the added (possibly NESTED) fields,
+        and a footer-schema read silently drops them for every row.
+        Spark's parquet reader null-fills missing fields and widens
+        int→long/float→double against an explicit schema, and an
+        explicit schema also skips the footer-inference job a
+        schema-less read launches."""
+        reader = self.spark.read
+        if st.schema is not None:
+            reader = reader.schema(StructType.fromJson(st.schema))
+        return reader.parquet(*[os.path.join(self.path, f) for f in rels])
+
     def _read_with_tombstones(
         self,
         rels: list[str],
@@ -903,21 +918,7 @@ class TxLogTable:
             and not st.renames
             and not keep_row_address
         ):
-            reader = self.spark.read
-            if st.schema is not None:
-                # project the DECLARED schema, not the first footer:
-                # after an evolving append, files predating the
-                # evolution lack the added (possibly NESTED) fields,
-                # and a footer-schema read silently drops them for
-                # every row (review r9, seventh pass). Spark's parquet
-                # reader null-fills missing fields and widens
-                # int→long/float→double against an explicit schema.
-                from pyspark.sql.types import StructType
-
-                reader = reader.schema(StructType.fromJson(st.schema))
-            return reader.parquet(
-                *[os.path.join(self.path, f) for f in rels]
-            )
+            return self._declared_read(rels, st)
         parts = [
             self._read_group_filtered(
                 grp, av, st, keep_row_address=keep_row_address
@@ -941,9 +942,9 @@ class TxLogTable:
         name and rewrite targeting silently misses them (review r8,
         third pass)."""
         if not st.renames:
-            return self.spark.read.parquet(
-                *[os.path.join(self.path, f) for f in rels]
-            ).withColumn("__file", F.input_file_name())
+            return self._declared_read(rels, st).withColumn(
+                "__file", F.input_file_name()
+            )
         out = None
         for av, grp in self._by_add_version(rels, st):
             df = self._alias_renamed(

@@ -4,6 +4,8 @@ DuckDB over the same parquet, and diff exactly.
 This mirrors the driver's correctness gate (row-count + schema +
 order-insensitive value hash) but with exact value comparison and readable
 diffs, so every mismatch is caught locally before a round submits.
+`spark_jobs` counts the Spark jobs a call launches (driver_sim's per-query
+column and the build-cost tests).
 """
 
 from __future__ import annotations
@@ -23,6 +25,22 @@ def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
         path = os.path.join(sf_dir, f"{t}.parquet")
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
+
+
+def spark_jobs(spark, label: str, fn):
+    """(fn(), number of Spark jobs fn launched). The jobs run under the
+    job group and description `label`, counted on the status tracker once
+    the listener bus has drained; a label already used counts its earlier
+    jobs too."""
+    sc = spark.sparkContext
+    sc.setJobGroup(label, label)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(label))
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:

@@ -10,11 +10,13 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from politicamente_etl_spark.plans.catalog import CATALOG
+from politicamente_etl_spark.testing import spark_jobs
 
 
 def plan_of(df) -> str:
@@ -1542,3 +1544,100 @@ def test_offset_pagination_is_collect_limit_not_global_sort(spark, sf_dir):
     global Sort exchange of the table."""
     plan = plan_of(q("offset_pagination_orders", spark, sf_dir))
     assert "TakeOrderedAndProject" in plan or "CollectLimit" in plan
+
+
+def test_flagship_build_runs_no_spark_job(spark, sf_dir):
+    """Building the flagship plan (no action) on a warm schema cache
+    launches no Spark job: its four load_table calls read with the cached
+    footer schema instead of running a footer-inference job each."""
+    name = "flagship_revenue_rollup"
+    q(name, spark, sf_dir)  # warm
+    _, jobs = spark_jobs(spark, "probe:flagship:build", lambda: q(name, spark, sf_dir))
+    assert jobs == 0
+
+
+def _column_built_minhash_pairs(df, n_perm=8, band_size=2):
+    """`minhash_near_dup_pairs` built from Column objects node by node —
+    the reference form the SQL-string builders in operators/dedup.py
+    must plan identically to."""
+    from politicamente_etl_spark.operators.core import spread
+    from politicamente_etl_spark.operators.text import has_shingle, shingles_regex
+
+    def minhash(perm):
+        return F.array_min(
+            F.transform(
+                F.col("__shingles"),
+                lambda s: F.md5(F.concat_ws(":", F.lit(str(perm)), s)),
+            )
+        )
+
+    sh = spread(
+        df.select("doc_id", "text").filter(has_shingle("text")), "doc_id"
+    ).withColumn("__shingles", shingles_regex("text"))
+    sig = sh.withColumns(
+        {f"mh_{i}": minhash(i) for i in range(n_perm)}
+    ).drop("__shingles").drop("text")
+    n_bands = n_perm // band_size
+    sig = sig.select(
+        "doc_id",
+        *[F.xxhash64(f"mh_{i}").alias(f"mh_{i}") for i in range(n_perm)],
+        *[
+            F.xxhash64(
+                *[F.col(f"mh_{b * band_size + r}") for r in range(band_size)]
+            ).alias(f"band_{b}")
+            for b in range(n_bands)
+        ],
+    )
+    mh = [f"mh_{i}" for i in range(n_perm)]
+    ex = sig.select(
+        "doc_id",
+        *mh,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_id"),
+                        F.col(f"band_{b}").alias("band_key"),
+                    )
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select("doc_id", *mh, "bk.band_id", "bk.band_key")
+    pairs = ex.alias("a").join(
+        ex.alias("b").hint("shuffle_hash"),
+        (F.col("a.band_id") == F.col("b.band_id"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        *[F.col(f"a.mh_{i}").alias(f"a_mh_{i}") for i in range(n_perm)],
+        *[F.col(f"b.mh_{i}").alias(f"b_mh_{i}") for i in range(n_perm)],
+    )
+    agree = sum(
+        F.when(F.col(f"a_mh_{i}") == F.col(f"b_mh_{i}"), 1).otherwise(0)
+        for i in range(n_perm)
+    )
+    return (
+        pairs.withColumn("est_jaccard", agree.cast("double") / F.lit(float(n_perm)))
+        .select("doc_a", "doc_b", "est_jaccard")
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
+def test_minhash_sql_builders_plan_like_column_form(spark, sf_dir):
+    """The SQL-string expression builders change py4j traffic only: the
+    optimized plan equals the Column-built form's, up to expression ids
+    and lambda variable names."""
+    from politicamente_etl_spark.operators import dedup
+    from politicamente_etl_spark.sources.readers import load_table
+
+    def optimized(df):
+        s = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?\b", "#", re.sub(r"lambda \w+#", "lambda v#", s))
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    got = optimized(dedup.minhash_near_dup_pairs(docs))
+    assert "array_min(transform(" in got and "explode(array(struct(" in got
+    assert got == optimized(_column_built_minhash_pairs(docs))

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from politicamente_etl_spark.sources import sinks
 from politicamente_etl_spark.sources.txlog import CommitConflict, TxLogTable
+from politicamente_etl_spark.testing import spark_jobs
 
 from tests.conftest import SF_DIR
 
@@ -567,3 +568,44 @@ def test_rewrite_targets_on_url_encoded_root(spark, tmp_path):
         [(k, "c") for k in range(4, 12)],
     )
     assert run(tmp_path / "my table%x") == plain
+
+
+def test_merge_targets_span_schema_evolution(spark, tmp_path):
+    """Rewrite targeting on a schema-evolved table reads under the
+    declared schema, so building the candidate read runs no
+    footer-inference job, and a merge whose keys sit in files from before
+    and after an evolving append rewrites exactly the files holding them."""
+    t = TxLogTable.create(
+        spark, str(tmp_path / "t"), spark.range(0, 10, 1, 1).selectExpr("id AS k", "'a' AS v")
+    )
+    t.append(
+        spark.range(10, 30, 1, 2).selectExpr("id AS k", "'b' AS v", "id * 10 AS w"),
+        merge_schema=True,
+    )
+    st = t._state()
+    _, jobs = spark_jobs(
+        spark, "probe:txlog:file_tagged_rows", lambda: t._file_tagged_rows(st.files, st)
+    )
+    assert jobs == 0
+
+    keys = [5, 15]
+    holding = {
+        f
+        for f in st.files
+        if spark.read.parquet(os.path.join(t.path, f)).filter(F.col("k").isin(keys)).count()
+    }
+    assert {st.add_versions[f] for f in holding} == {1, 2}
+    m = t.merge(
+        spark.createDataFrame([(k, "m", k * 100) for k in keys], "k long, v string, w long"),
+        ["k"],
+    )
+    assert set(m["removed"]) == holding
+    assert m["merge_stats"]["files_rewritten"] == len(holding)
+    expected = (
+        [(k, "a", None) for k in range(10)]
+        + [(k, "b", k * 10) for k in range(10, 30)]
+    )
+    expected = sorted(
+        (k, "m", k * 100) if k in keys else (k, v, w) for k, v, w in expected
+    )
+    assert sorted(tuple(r) for r in t.snapshot().select("k", "v", "w").collect()) == expected
