@@ -5,8 +5,9 @@ row-loops + per-row SQL) and `main.py` (CLI dispatch). Each pipeline here is
 a pure DataFrame→DataFrame function: sources in, new sink-table state out.
 No driver-side loops, no per-row work — the row-at-a-time `.iterrows()`
 probes become broadcast joins, the ON CONFLICT loops become anti-join/union
-algebra, and the whole pipeline is one lazy plan Catalyst optimizes
-end-to-end.
+algebra or, where a surrogate id is minted (parties, elections), one window
+pass over the batch and the dimension, and the whole pipeline is one lazy
+plan Catalyst optimizes end-to-end.
 
 Semantic fidelity notes (SURVEY.md §2.9):
 - keep-first dedup → deterministic min-rank window (§2.9.2)
@@ -19,54 +20,88 @@ Semantic fidelity notes (SURVEY.md §2.9):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from politicamente_etl_spark.functions.scalar import election_date, uuid_col
-from politicamente_etl_spark.operators.core import dedup_keep_first, distinct_rows
+from politicamente_etl_spark.operators.core import distinct_rows
 from politicamente_etl_spark.operators.joins import (
     broadcast_dim_join,
     join_update,
     update_match_accounting,
 )
-from politicamente_etl_spark.sources.sinks import insert_if_absent, upsert
+from politicamente_etl_spark.sources.sinks import insert_if_absent
+
+
+# seed_parties as one plan: the keep-first dedup (`load.py:13`) is the only
+# shuffle on the fact-sized input; the deduped parties then meet the
+# existing dimension in ONE window pass over a single partition (both
+# sides are bounded by the number of parties), which finds each number's
+# old id, the old rows a new row supersedes and the minted ids. Window
+# ORDER BY is ASC NULLS FIRST; after the dedup a number holds at most one
+# new row, so a RANGE peer group is one number and the running count at a
+# minted row is its rank among the minted rows.
+SEED_PARTIES_SQL = """
+WITH new AS (
+  SELECT NR_PARTIDO, SG_PARTIDO, NM_PARTIDO
+  FROM (
+    SELECT NR_PARTIDO, SG_PARTIDO, NM_PARTIDO,
+           row_number() OVER (PARTITION BY NR_PARTIDO
+                              ORDER BY SG_PARTIDO, NM_PARTIDO) AS rn
+    FROM {cand}
+  )
+  WHERE rn = 1
+),
+tagged AS (
+  SELECT party_id, party_number, initials, party_name, false AS is_new
+  FROM {parties}
+  UNION ALL
+  SELECT CAST(NULL AS BIGINT), CAST(NR_PARTIDO AS INT), SG_PARTIDO,
+         NM_PARTIDO, true
+  FROM new
+),
+peers AS (
+  SELECT *,
+         coalesce(max(party_id) OVER (), 0) AS max_id,
+         max(IF(is_new OR party_number IS NULL, NULL, party_id)) OVER num
+           AS old_id,
+         bool_or(is_new) OVER num AS has_new
+  FROM tagged
+  WINDOW num AS (ORDER BY party_number
+                 RANGE BETWEEN CURRENT ROW AND CURRENT ROW)
+),
+minted AS (
+  SELECT *, count_if(is_new AND old_id IS NULL) OVER (ORDER BY party_number)
+              AS k
+  FROM peers
+)
+SELECT party_number,
+       CASE WHEN NOT is_new THEN party_id
+            WHEN old_id IS NOT NULL THEN old_id
+            ELSE max_id + k END AS party_id,
+       initials, party_name
+FROM minted
+WHERE is_new OR party_number IS NULL OR NOT has_new
+"""
 
 
 def seed_parties(cand: DataFrame, parties: DataFrame) -> DataFrame:
     """`seed_parties` (`load.py:10-28`): project party columns, dedup
-    keep-first by NR_PARTIDO (`load.py:13`), UPSERT on party_number
-    (`load.py:20`). Surrogate party_id: existing ids survive the upsert;
-    new parties get ids above the current max via a rank over the (tiny,
-    already-deduped) new-party set."""
-    new = dedup_keep_first(
-        cand.select("NR_PARTIDO", "SG_PARTIDO", "NM_PARTIDO"),
-        ["NR_PARTIDO"],
-        [F.col("SG_PARTIDO"), F.col("NM_PARTIDO")],
-    ).select(
-        F.col("NR_PARTIDO").cast("int").alias("party_number"),
-        F.col("SG_PARTIDO").alias("initials"),
-        F.col("NM_PARTIDO").alias("party_name"),
-    )
-    # Keep existing surrogate ids for matched parties (UPSERT updates
-    # attributes, not keys); mint ids only for genuinely new party_numbers.
-    keyed = new.join(
-        F.broadcast(parties.select("party_id", "party_number")),
-        "party_number",
-        "left",
-    )
-    max_id = parties.agg(F.coalesce(F.max("party_id"), F.lit(0)).alias("m"))
-    fresh_rank = Window.orderBy("party_number")  # new parties per batch: tiny
-    minted = (
-        keyed.filter(F.col("party_id").isNull())
-        .crossJoin(F.broadcast(max_id))
-        .withColumn("party_id", F.row_number().over(fresh_rank) + F.col("m"))
-        .drop("m")
-    )
-    updated = keyed.filter(F.col("party_id").isNotNull())
-    new_full = updated.unionByName(minted).select(
-        "party_id", "party_number", "initials", "party_name"
-    )
-    return upsert(parties, new_full, ["party_number"])
+    keep-first by NR_PARTIDO (`load.py:13`; first by SG_PARTIDO then
+    NM_PARTIDO, ascending, nulls first), UPSERT on party_number
+    (`load.py:20`), as the one plan `SEED_PARTIES_SQL`.
+
+    - A matched number keeps its old surrogate party_id and takes the
+      batch's attributes (UPSERT updates attributes, not keys).
+    - An unmatched number gets an id above the current max, in
+      party_number order (ASC NULLS FIRST).
+    - A NULL number never matches: old NULL-number rows survive, and a
+      NULL-number batch row is minted on every run.
+    - Parties absent from the batch survive unchanged.
+
+    Columns: party_number, party_id, initials, party_name (sinks read
+    them by name)."""
+    return cand.sparkSession.sql(SEED_PARTIES_SQL, cand=cand, parties=parties)
 
 
 def seed_politicians(cand: DataFrame, politicians: DataFrame) -> DataFrame:
@@ -84,11 +119,58 @@ def seed_politicians(cand: DataFrame, politicians: DataFrame) -> DataFrame:
     )
 
 
+# seed_elections' minting, the shape of SEED_PARTIES_SQL: existing rows and
+# the distinct batch meet in one single-partition window pass. A batch row
+# matches the old rows of its (year, turn, type) and reuses their smallest
+# id; it is dropped when an old row has its exact (date, type, turn) key
+# (DO NOTHING); unmatched rows are minted above the max in (year, turn,
+# type) order. NULL keys never match. The batch is distinct on (year,
+# turn, type), so a peer group holds at most one batch row.
+SEED_ELECTIONS_SQL = """
+WITH tagged AS (
+  SELECT election_id, election_date, election_type, turn,
+         year(election_date) AS ano, false AS is_new
+  FROM {elections}
+  UNION ALL
+  SELECT CAST(NULL AS BIGINT), election_date, election_type, turn, ano, true
+  FROM {new}
+),
+peers AS (
+  SELECT *,
+         coalesce(max(election_id) OVER (), 0) AS max_id,
+         min(IF(is_new OR ano IS NULL OR turn IS NULL
+                OR election_type IS NULL, NULL, election_id)) OVER by_natural
+           AS old_id,
+         bool_or(NOT is_new AND election_date IS NOT NULL
+                 AND election_type IS NOT NULL AND turn IS NOT NULL) OVER
+           by_key AS key_exists
+  FROM tagged
+  WINDOW by_natural AS (ORDER BY ano, turn, election_type
+                     RANGE BETWEEN CURRENT ROW AND CURRENT ROW),
+         by_key AS (ORDER BY election_date, election_type, turn
+                 RANGE BETWEEN CURRENT ROW AND CURRENT ROW)
+),
+minted AS (
+  SELECT *, count_if(is_new AND old_id IS NULL)
+              OVER (ORDER BY ano, turn, election_type) AS k
+  FROM peers
+)
+SELECT CASE WHEN NOT is_new THEN election_id
+            WHEN old_id IS NOT NULL THEN old_id
+            ELSE max_id + k END AS election_id,
+       election_date, election_type, turn
+FROM minted
+WHERE NOT (is_new AND key_exists)
+"""
+
+
 def seed_elections(cand: DataFrame, elections: DataFrame) -> DataFrame:
     """Elections half of `seed_candidacies` (`load.py:59-65`): DISTINCT
     (year, turn, type), derive the hardcoded October date (`load.py:62`),
-    insert-if-absent on the natural key. Surrogate election_id mirrors
-    seed_parties' minting."""
+    insert-if-absent on (election_date, election_type, turn): existing
+    elections win, as `DO NOTHING` does. Surrogate election_id is minted
+    in `SEED_ELECTIONS_SQL`'s one pass, like seed_parties'. Existing ids
+    are assumed non-NULL (every pipeline mints them)."""
     new = distinct_rows(
         cand.select(
             F.col("ANO_ELEICAO").cast("int").alias("ano"),
@@ -96,37 +178,7 @@ def seed_elections(cand: DataFrame, elections: DataFrame) -> DataFrame:
             F.col("DS_ELEICAO").alias("election_type"),
         )
     ).withColumn("election_date", election_date("ano", "turn"))
-    keyed = new.join(
-        F.broadcast(
-            elections.select(
-                "election_id",
-                F.year("election_date").alias("ano"),
-                "turn",
-                "election_type",
-            )
-        ),
-        ["ano", "turn", "election_type"],
-        "left",
-    )
-    max_id = elections.agg(F.coalesce(F.max("election_id"), F.lit(0)).alias("m"))
-    minted = (
-        keyed.filter(F.col("election_id").isNull())
-        .crossJoin(F.broadcast(max_id))
-        .withColumn(
-            "election_id",
-            F.row_number().over(Window.orderBy("ano", "turn", "election_type"))
-            + F.col("m"),
-        )
-        .drop("m")
-    )
-    new_full = (
-        keyed.filter(F.col("election_id").isNotNull())
-        .unionByName(minted)
-        .select("election_id", "election_date", "election_type", "turn")
-    )
-    return insert_if_absent(
-        elections, new_full, ["election_date", "election_type", "turn"]
-    )
+    return cand.sparkSession.sql(SEED_ELECTIONS_SQL, new=new, elections=elections)
 
 
 def seed_candidacies(

@@ -67,6 +67,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from politicamente_etl_spark.operators.core import union_all
+
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
 _DELETES_DIR = "_deletes"
@@ -163,6 +165,21 @@ def _local_path(file_uri: str) -> str:
     """Filesystem path of a Spark `input_file_name()` URI, which is
     URL-encoded (a space reads `%20`, a literal `%` reads `%25`)."""
     return os.path.abspath(unquote(file_uri.removeprefix("file:")))
+
+
+def _commit_dir(rel: str) -> str:
+    """The originating commit dir of a live file: `data/<commit-uuid>`,
+    the component AFTER the LAST data/ segment (mirrors
+    `_with_row_address`'s '.*/data/' regex), not a fixed prefix —
+    shallow-clone manifests carry files as '../<src>/data/<commit>/...'
+    (ADVICE r9, high) — and not os.path.dirname: a clustered
+    `_stage_write` puts every file of one commit in its own
+    <col>=<val> partition subdir."""
+    parts = rel.split(os.sep)
+    if _DATA_DIR in parts:
+        i = len(parts) - 1 - parts[::-1].index(_DATA_DIR)
+        return os.sep.join(parts[: i + 2])
+    return os.path.dirname(rel)
 
 
 @dataclass(frozen=True)
@@ -837,32 +854,64 @@ class TxLogTable:
         st: TableState,
         keep_row_address: bool = False,
     ) -> DataFrame:
-        """Read one add-version group of files with BOTH logical-delete
-        forms applied: row-index deletion vectors (broadcast anti-join
-        on the (data-root-relative path, row ordinal) address) then key
-        tombstones
-        (`_tombstone_filter`). Every read path — snapshot, scan, rewrite
-        reads, DV creation itself — funnels through here so the two
-        forms compose with one visibility rule: filters committed AFTER
-        the group's add version apply; later adds pass through."""
-        paths = [os.path.join(self.path, f) for f in rels]
+        """Read one add-version group of files (`_group_read`) with BOTH
+        logical-delete forms applied: row-index deletion vectors
+        (broadcast anti-join on the (data-root-relative path, row
+        ordinal) address) then key tombstones (`_tombstone_filter`).
+        Every read path — snapshot, scan, rewrite reads, DV creation
+        itself — funnels through here so the two forms compose with one
+        visibility rule: filters committed AFTER the group's add version
+        apply; later adds pass through."""
         dv_paths = [p for v, p, _n in st.dvs if v > added_version]
-        if dv_paths or keep_row_address:
-            df = self._with_row_address(self.spark.read.parquet(*paths))
-            if dv_paths:
-                df = df.join(
-                    F.broadcast(self._dv_rows_df(dv_paths)),
-                    on=["__fb", "__ri"],
-                    how="anti",
-                )
-            if not keep_row_address:
-                df = df.drop("__fb", "__ri")
-        else:
-            df = self.spark.read.parquet(*paths)
-        df = self._alias_renamed(df, added_version, st)
+        address = bool(dv_paths or keep_row_address)
+        df = self._group_read(rels, added_version, st, address)
+        if dv_paths:
+            df = df.join(
+                F.broadcast(self._dv_rows_df(dv_paths)),
+                on=["__fb", "__ri"],
+                how="anti",
+            )
+        if address and not keep_row_address:
+            df = df.drop("__fb", "__ri")
         if st.tombstones:
             df = self._tombstone_filter(df, added_version, st.tombstones)
         return df
+
+    def _group_read(
+        self,
+        rels: list[str],
+        added_version: int,
+        st: TableState,
+        address: bool = False,
+    ) -> DataFrame:
+        """Rows of files added at `added_version` under LOGICAL column
+        names (plus the DV address columns when `address`).
+
+        One scan under the declared schema (`_declared_read`) unless a
+        rename postdates the group (or the log declares no schema): such
+        files carry old physical names the declared schema cannot bind,
+        so they read physically, one scan per originating commit dir
+        (`_commit_dir`), and alias to the logical names
+        (`_alias_renamed`). Files of one commit come from one staged
+        write and share a physical schema; one scan across commits would
+        take the first footer's schema and drop evolved columns."""
+        if st.schema is not None and not any(
+            v > added_version for v, _o, _n in st.renames
+        ):
+            df = self._declared_read(rels, st)
+            return self._with_row_address(df) if address else df
+        by_dir: dict[str, list[str]] = {}
+        for rel in rels:
+            by_dir.setdefault(_commit_dir(rel), []).append(rel)
+        parts = []
+        for grp in by_dir.values():
+            df = self.spark.read.parquet(
+                *[os.path.join(self.path, f) for f in grp]
+            )
+            if address:
+                df = self._with_row_address(df)
+            parts.append(self._alias_renamed(df, added_version, st))
+        return union_all(*parts, allow_missing=True)
 
     @staticmethod
     def _alias_renamed(
@@ -908,27 +957,27 @@ class TxLogTable:
         """Read `rels` with logical deletes applied (key tombstones AND
         row-index deletion vectors) — the read every REWRITE path
         (merge/delete/optimize) must use, or physically present but
-        logically deleted rows would resurrect in the rewrite.
+        logically deleted rows would resurrect in the rewrite. One
+        `_read_group_filtered` per add-version group; a table with no
+        tombstone, DV or rename reads in one declared-schema scan, since
+        only those depend on a file's add version.
         `keep_row_address=True` retains the (__fb, __ri) DV address
         columns — the shared entry point for DV creation and the CDF's
         address-level delete detection."""
-        if (
-            not st.tombstones
-            and not st.dvs
-            and not st.renames
-            and not keep_row_address
-        ):
-            return self._declared_read(rels, st)
-        parts = [
-            self._read_group_filtered(
-                grp, av, st, keep_row_address=keep_row_address
-            )
-            for av, grp in self._by_add_version(rels, st)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        groups = (
+            self._by_add_version(rels, st)
+            if st.tombstones or st.dvs or st.renames
+            else [(0, rels)]
+        )
+        return union_all(
+            *[
+                self._read_group_filtered(
+                    grp, av, st, keep_row_address=keep_row_address
+                )
+                for av, grp in groups
+            ],
+            allow_missing=True,
+        )
 
     def _file_tagged_rows(
         self, rels: list[str], st: TableState
@@ -937,27 +986,20 @@ class TxLogTable:
         column (the `input_file_name()` URI) — the candidate-detection
         read of `_rewrite_targets`. Raw = tombstones/DVs NOT applied (a
         dead row still marks its file as touched, which is correct for
-        rewrite targeting), but renames ARE applied: without aliasing,
-        pre-rename files' key column reads as NULL under the logical
-        name and rewrite targeting silently misses them (review r8,
-        third pass)."""
-        if not st.renames:
-            return self._declared_read(rels, st).withColumn(
-                "__file", F.input_file_name()
-            )
-        out = None
-        for av, grp in self._by_add_version(rels, st):
-            df = self._alias_renamed(
-                self.spark.read.parquet(
-                    *[os.path.join(self.path, f) for f in grp]
-                ).withColumn("__file", F.input_file_name()),
-                av,
-                st,
-            )
-            out = df if out is None else out.unionByName(
-                df, allowMissingColumns=True
-            )
-        return out
+        rewrite targeting), but renames ARE applied (`_group_read`):
+        without aliasing, pre-rename files' key column reads as NULL
+        under the logical name and rewrite targeting silently misses
+        them (review r8, third pass)."""
+        groups = self._by_add_version(rels, st) if st.renames else [(0, rels)]
+        return union_all(
+            *[
+                self._group_read(grp, av, st).withColumn(
+                    "__file", F.input_file_name()
+                )
+                for av, grp in groups
+            ],
+            allow_missing=True,
+        )
 
     def _rewrite_targets(
         self, st: TableState, keys_df: DataFrame, keys: list[str]
@@ -2601,9 +2643,9 @@ class TxLogTable:
     def snapshot(
         self, version: int | None = None, provenance: bool = False
     ) -> DataFrame:
-        """The table as of `version` (default: latest). Groups alive files
-        by their originating commit so schema-evolved commits union by
-        name with null-fill instead of failing the shared-schema read.
+        """The table as of `version` (default: latest), read under the
+        version's declared schema, so schema-evolved commits null-fill
+        and widen instead of failing the shared-schema read.
 
         `provenance=True` appends a `_commit_version` column — the log
         version whose commit first added each row's file (rewritten rows
@@ -2615,60 +2657,38 @@ class TxLogTable:
     def _snapshot_of(
         self, st: TableState, provenance: bool = False
     ) -> DataFrame:
-        """snapshot() over an already-folded state."""
+        """snapshot() over an already-folded state: one declared-schema
+        scan of the live files (`_read_with_tombstones`), whose declared
+        schema unions evolved commits with null-fill and widening and
+        launches no footer-inference job. `provenance=True` splits the
+        read per originating commit dir, add version and first-add
+        version, each group tagged with its `_commit_version` literal."""
         if not st.files:
             raise ValueError(f"no committed data at {self.path}")
+        if not provenance:
+            return self._read_with_tombstones(st.files, st)
         file_version: dict[str, int] = {}
-        if provenance:
-            for m in self.history():
-                if m.get("checkpoint"):
-                    continue
-                for rel in m.get("added", []):
-                    file_version.setdefault(rel, m["version"])
+        for m in self.history():
+            if m.get("checkpoint"):
+                continue
+            for rel in m.get("added", []):
+                file_version.setdefault(rel, m["version"])
         filtered = bool(st.tombstones or st.dvs or st.renames)
         by_commit: dict[tuple, list[str]] = {}
         for f in st.files:
-            # group by the ORIGINATING COMMIT DIR (data/<commit-uuid>),
-            # not os.path.dirname: a clustered _stage_write puts every
-            # file in its own <col>=<val> partition subdir, so dirname
-            # grouping exploded one commit into one group PER FILE —
-            # a union of N single-file scans each with its own DV
-            # anti-join (measured 86 s vs 1.6 s for the single-group
-            # read on a 300-file clustered table, r9). Files of one
-            # commit come from one staged write and share a physical
-            # schema, which is all the grouping must guarantee.
-            # The commit dir is the component AFTER the LAST _DATA_DIR
-            # segment (mirrors _with_row_address's '.*/data/' regex) —
-            # NOT a fixed [:2] prefix: shallow-clone manifests carry
-            # files as '../<src>/data/<commit>/...', and a prefix cut
-            # collapsed every carried file into ONE group ('../<src>'),
-            # which read schema-evolved source commits in one
-            # first-footer-schema scan and silently dropped evolved
-            # columns (ADVICE r9, high).
-            parts = f.split(os.sep)
-            if _DATA_DIR in parts:
-                i = len(parts) - 1 - parts[::-1].index(_DATA_DIR)
-                commit_dir = os.sep.join(parts[: i + 2])
-            else:
-                commit_dir = os.path.dirname(f)
             av = st.add_versions.get(f, 0) if filtered else 0
-            by_commit.setdefault((commit_dir, file_version.get(f), av), []).append(f)
-        parts = []
-        for (_, ver, av), grp in by_commit.items():
-            # logical deletes: drop DV'd row addresses and tombstoned
-            # keys from files ADDED before the filter's commit; later
-            # adds (merge rewrites, restores, re-inserts) postdate it
-            # and pass through; pre-rename files alias to logical names
-            df = self._read_group_filtered(grp, av, st)
-            if provenance:
-                df = df.withColumn(
+            by_commit.setdefault(
+                (_commit_dir(f), file_version.get(f), av), []
+            ).append(f)
+        return union_all(
+            *[
+                self._read_group_filtered(grp, av, st).withColumn(
                     "_commit_version", F.lit(ver).cast("long")
                 )
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+                for (_, ver, av), grp in by_commit.items()
+            ],
+            allow_missing=True,
+        )
 
     def scan(
         self,

@@ -609,3 +609,72 @@ def test_merge_targets_span_schema_evolution(spark, tmp_path):
         (k, "m", k * 100) if k in keys else (k, v, w) for k, v, w in expected
     )
     assert sorted(tuple(r) for r in t.snapshot().select("k", "v", "w").collect()) == expected
+
+
+@pytest.fixture(scope="module")
+def evolved(spark, tmp_path_factory):
+    """v1: k INT, s STRUCT<a INT>; v2: a merge_schema append that widens k
+    to BIGINT, adds the nested s.b and the top-level w."""
+    t = TxLogTable.create(
+        spark,
+        str(tmp_path_factory.mktemp("evolved") / "t"),
+        spark.range(0, 4, 1, 1).selectExpr("CAST(id AS INT) AS k", "named_struct('a', CAST(id AS INT)) AS s"),
+    )
+    t.append(
+        spark.range(4, 8, 1, 2).selectExpr(
+            "id AS k",
+            "named_struct('a', CAST(id AS INT), 'b', CAST(id * 10 AS STRING)) AS s",
+            "CAST(id AS STRING) AS w",
+        ),
+        merge_schema=True,
+    )
+    return t
+
+
+def _rows(df, cols):
+    return sorted(
+        (tuple(tuple(v) if hasattr(v, "asDict") else v for v in r) for r in df.select(*cols).collect()),
+        key=repr,
+    )
+
+
+def test_snapshot_of_evolved_table_matches_model(spark, evolved):
+    """snapshot() and snapshot(version=v) read under the declared schema:
+    building either launches no footer-inference job (one per commit
+    group before); the older files null-fill the added top-level and
+    nested fields and widen int to long; time travel to the version
+    before the evolution reads that version's columns."""
+    snap, head_jobs = spark_jobs(spark, "probe:txlog:snapshot", evolved.snapshot)
+    old, v1_jobs = spark_jobs(spark, "probe:txlog:snapshot_v1", lambda: evolved.snapshot(version=1))
+    assert (head_jobs, v1_jobs) == (0, 0)
+
+    assert snap.columns == ["k", "s", "w"]
+    assert snap.schema["k"].dataType.simpleString() == "bigint"
+    assert snap.schema["s"].dataType.simpleString() == "struct<a:int,b:string>"
+    want = [(k, (k, None), None) for k in range(4)] + [(k, (k, str(k * 10)), str(k)) for k in range(4, 8)]
+    assert _rows(snap, ["k", "s", "w"]) == sorted(want, key=repr)
+
+    assert old.columns == ["k", "s"]
+    assert old.schema["k"].dataType.simpleString() == "int"
+    assert old.schema["s"].dataType.simpleString() == "struct<a:int>"
+    assert _rows(old, ["k", "s"]) == [(k, (k,)) for k in range(4)]
+
+
+def test_rename_after_restore_reads_pre_rename_files(spark, tmp_path, evolved):
+    """On a shallow clone of the evolved table (every carried file added
+    at the clone's version), restore re-adds the files from before and
+    after the evolution and a rename follows: those files keep the old
+    physical name, so they read physically under the logical name, one
+    scan per source commit — one scan over both commits would take the
+    first footer's schema and lose w."""
+    t = evolved.clone_shallow(str(tmp_path / "clone"))
+    cloned = t.latest_version()
+    t.overwrite(spark.range(100, 102).selectExpr("id AS k", "named_struct('a', 0, 'b', 'o') AS s", "'o' AS w"))
+    t.restore(cloned)
+    t.rename_column("w", "w2")
+    t.append(spark.range(8, 10).selectExpr("id AS k", "named_struct('a', 0, 'b', 'n') AS s", "'n' AS w2"))
+    want = [(k, None) for k in range(4)] + [(k, str(k)) for k in range(4, 8)] + [(k, "n") for k in range(8, 10)]
+    snap = t.snapshot()
+    assert "w" not in snap.columns
+    assert _rows(snap, ["k", "w2"]) == sorted(want, key=repr)
+    assert _rows(t.scan({"k": (3, 4)}), ["k", "w2"]) == [(3, None), (4, "4")]
