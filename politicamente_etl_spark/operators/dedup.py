@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from politicamente_etl_spark.operators.core import spread
+from politicamente_etl_spark.operators.graph import fixpoint
 from politicamente_etl_spark.operators.text import has_shingle, shingles_regex
 
 N_MINHASH = 8  # permutations; md5-keyed, engine-portable
@@ -461,7 +462,6 @@ def near_dup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 15,
-    algo: str = "propagation",
 ) -> DataFrame:
     """Resolve near-dup PAIRS into connected-component CLUSTERS — the step
     that turns candidate generation into an actual dedup decision: every
@@ -471,99 +471,50 @@ def near_dup_clusters(
     Algorithm: iterative min-label propagation. Each round every node
     takes min(own label, neighbors' labels); after d rounds a label has
     traveled d hops, so the loop converges in graph-diameter rounds (near-
-    dup graphs are overwhelmingly tiny cliques — diameter 1-2). The loop
-    exits when a round changes no label, checked with a driver-side
-    `.count()` (scalar aggregate — control flow, not data collection;
-    the standard shape for iterative graph algorithms on Spark).
+    dup graphs are overwhelmingly tiny cliques — diameter 1-2). Labels
+    only ever decrease, so a round that leaves the sum of labels
+    unchanged moved no label: `graph.fixpoint` observes that sum on each
+    round's checkpoint and stops there, with no separate job to test
+    convergence. Labels travel only through df's nodes: a pair endpoint
+    df does not hold is neither labeled nor a bridge.
 
     Scale notes: labels are `localCheckpoint`ed each round to cut the
     growing lineage (else round k replays rounds 1..k-1). Each round is
-    one shuffle join + one aggregate on (node, label) longs. For
-    adversarially long chains / giant components, pass ``algo="star"`` to
-    route through `graph.connected_components` (large-star/small-star,
-    Kiveris et al. — same join primitives, O(log n) rounds on any
-    topology; round-4: implemented and oracle-verified, not just cited).
-    Both algorithms return identical labelings (tests/test_graph.py)."""
-    if algo == "star":
-        from politicamente_etl_spark.operators import graph
-
-        # restrict the graph to df's nodes FIRST: propagation mode only
-        # ever routes labels through df nodes (its labels table is df),
-        # so a pair endpoint that df filtered out must neither be labeled
-        # nor act as a bridge — star mode must see the same induced
-        # subgraph to return the same labeling.
-        nodes = df.select(F.col(id_col).alias("node")).distinct()
-        e = (
-            pairs.select(
-                F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-            )
-            .join(nodes.select(F.col("node").alias("src")), "src")
-            .join(nodes.select(F.col("node").alias("dst")), "dst")
-        )
-        cc = graph.connected_components(e, max_iter=max_iter)
-        # nodes with no pair are their own singleton cluster
-        singletons = (
-            nodes.join(cc.select("node"), "node", "left_anti")
-            .withColumn("component", F.col("node"))
-        )
-        labels = cc.unionByName(singletons)
-        return labels.select(
-            F.col("node").alias(id_col),
-            F.col("component").alias("cluster_id"),
-            F.when(F.col("node") == F.col("component"), 1)
-            .otherwise(0)
-            .alias("is_canonical"),
-        )
-    if algo != "propagation":
-        raise ValueError(f"near_dup_clusters: unknown algo {algo!r}")
+    one shuffle join + one aggregate on (node, label) longs. Rounds are
+    O(diameter) and the call raises past ``max_iter`` rather than return
+    a split cluster; graphs with long chains or giant components go
+    through `graph.connected_components` (large-star/small-star, O(log n)
+    rounds on any topology), which yields the same labeling on the
+    induced subgraph (tests/test_graph.py)."""
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     edges = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = (
-        df.select(F.col(id_col).alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    changed = 0
-    for _ in range(max_iter):
+    ).localCheckpoint(eager=False)
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
             .agg(F.min("label").alias("nbr_min"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_min", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
+        return labels.join(nbr_min, labels.node == nbr_min.src, "left").select(
+            "node",
+            F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias(
+                "label"
+            ),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        # a component with diameter > max_iter has NOT converged — the
-        # labels would silently split one real cluster into several,
-        # leaking near-dup content across keep-lists and train/test
-        # splits. Fail loudly; the caller raises max_iter (label
-        # propagation needs O(diameter) rounds).
-        raise RuntimeError(
-            f"near_dup_clusters: not converged after {max_iter} rounds "
-            f"({changed} labels still changing) — raise max_iter"
-        )
+
+    labels = fixpoint(
+        df.select(F.col(id_col).alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node")),
+        step,
+        ("label",),
+        max_iter,
+        "near_dup_clusters",
+    )
     return labels.select(
         F.col("node").alias(id_col),
         F.col("label").alias("cluster_id"),

@@ -1,15 +1,14 @@
 """Distributed graph operators.
 
-`near_dup_clusters` (operators/dedup.py) resolves components by per-hop
-min-label propagation — right for near-dup graphs (tiny cliques, diameter
-1-2), but O(diameter) rounds kill it on long chains. This module
-implements the alternative its docstring names: the large-star/small-star
-connected-components algorithm (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14), which converges in O(log n) rounds on
-ANY topology — the difference between 3 rounds and 2000 rounds on a
-2000-node path graph.
+Components come from the large-star/small-star algorithm (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14), which
+converges in O(log n) rounds on ANY topology — the difference between 3
+rounds and 2000 rounds on a 2000-node path graph. `near_dup_clusters`
+(operators/dedup.py) keeps per-hop min-label propagation instead: right
+for near-dup graphs (tiny cliques, diameter 1-2), O(diameter) rounds on
+long chains, which therefore go through `connected_components`.
 
-Each round is two map-reduce steps over the edge list:
+Each star round is two map-reduce steps over the edge list:
 - LARGE-STAR: every node u connects its LARGER neighbors to its current
   minimum m(u) = min(N(u) ∪ {u}) — long tails fold onto small labels.
 - SMALL-STAR: every node u (edges oriented toward smaller ids) connects
@@ -19,12 +18,84 @@ Both steps are one groupBy-min + one equi-join on node ids — exactly the
 shuffle primitives everything else in this repo uses; no vertex-program
 framework needed. The result is a star per component rooted at the
 component's minimum node id.
+
+Both convergence-checked loops (star components here, label propagation
+in `near_dup_clusters`) run through `fixpoint`: each round's eager
+checkpoint carries an `Observation` of the round's signature, so the
+convergence test rides the job that builds the checkpoint. The other
+iterative operators run a fixed number of rounds (their oracles unroll
+K stages) and have no convergence test.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable, Sequence
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both directions of every edge as distinct (s, d) rows, self-loops
+    dropped."""
+    return (
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+        .filter(F.col("s") != F.col("d"))
+        .distinct()
+    )
+
+
+def _canonical(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """Every pair once as (u, v) with u < v, self-loops dropped."""
+    return (
+        pairs.select(F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    signature: Sequence[str],
+    max_iter: int,
+    what: str,
+) -> DataFrame:
+    """Iterate ``state = step(state)`` until a round leaves the state's
+    signature unchanged, and return that round's frame.
+
+    Every round — the initial state included — is an eager
+    `localCheckpoint` (lineage cut, so round k never replays rounds
+    1..k-1) with an `Observation` attached via ``observe``: the job that
+    builds the checkpoint also returns the signature, so the convergence
+    test launches no job of its own. The signature is the row count plus
+    the sum of each ``signature`` column taken as DECIMAL(38,0), exact
+    for any BIGINT ids (a BIGINT sum of hash-derived ids overflows under
+    ANSI). Callers pick columns whose sums move whenever the state does,
+    or guard the result independently.
+
+    Raises RuntimeError when ``max_iter`` rounds pass without a repeated
+    signature — an unconverged labeling would silently split components."""
+
+    def observed(df: DataFrame) -> tuple[DataFrame, dict]:
+        obs = Observation()
+        df = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("__n"),
+            *(F.sum(F.col(c).cast("decimal(38,0)")).alias(c) for c in signature),
+        ).localCheckpoint()
+        return df, obs.get
+
+    state, prev = observed(state)
+    for _ in range(max_iter):
+        state, cur = observed(step(state))
+        if cur == prev:
+            return state
+        prev = cur
+    raise RuntimeError(
+        f"{what}: not converged after {max_iter} rounds — raise max_iter"
+    )
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -41,13 +112,7 @@ def _large_star(e: DataFrame) -> DataFrame:
         .join(m, "u")
         .select(F.col("m").alias("a"), F.col("v").alias("b"))
     )
-    return (
-        out.filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .distinct()
-    )
+    return _canonical(out, "a", "b")
 
 
 def _small_star(e: DataFrame) -> DataFrame:
@@ -62,13 +127,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     out = joined.select(F.col("m").alias("a"), F.col("v").alias("b")).unionByName(
         joined.select(F.col("m").alias("a"), F.col("u").alias("b")).distinct()
     )
-    return (
-        out.filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .distinct()
-    )
+    return _canonical(out, "a", "b")
 
 
 def connected_components(
@@ -81,53 +140,33 @@ def connected_components(
     large-star/small-star — O(log n) rounds regardless of diameter.
 
     Returns (node, component) for every node incident to an edge, with
-    component = the smallest node id in the component. The fixpoint test
-    is an edge-multiset checksum (count + id sums — cheap scalar aggs);
-    because a stale checksum could in principle collide, the labeling is
-    then POSITIVELY verified against the ORIGINAL edges (both endpoints
-    must land in one component) and the function raises rather than
-    return a split component — correctness never rests on the checksum.
+    component = the smallest node id in the component. The rounds run
+    through `fixpoint` with an edge-multiset signature (count + id sums,
+    observed on each round's checkpoint); because a stale signature
+    could in principle collide, the labeling is then POSITIVELY verified
+    against the ORIGINAL edges (both endpoints must land in one
+    component) and the function raises rather than return a split
+    component — correctness never rests on the signature.
 
     Scale: every round is groupBy-min + equi-join on node ids; edges only
     ever shrink toward the star form, and rounds are logarithmic, so a
     2000-hop chain converges in ~5 rounds where per-hop label propagation
     (`dedup.near_dup_clusters`) needs 2000."""
-    e = (
-        pairs.select(
-            F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    # lazy: fixpoint's first observed checkpoint materializes it, and the
+    # node list reads it instead of recomputing `pairs`
+    e = _canonical(pairs, src, dst).localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-
-    def checksum(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum("u"), F.lit(0)).alias("su"),
-            F.coalesce(F.sum("v"), F.lit(0)).alias("sv"),
-        ).collect()[0]
-        return (row.n, row.su, row.sv)
-
-    prev = checksum(e)
-    converged = False
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
-        cur = checksum(e)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise RuntimeError(
-            f"connected_components: no fixpoint after {max_iter} rounds"
-        )
+    e = fixpoint(
+        e,
+        lambda cur: _small_star(_large_star(cur)),
+        ("u", "v"),
+        max_iter,
+        "connected_components",
+    )
 
     # at the fixpoint the edges form stars rooted at component minima:
     # every non-root node appears as v (exactly once in a clean star; the
@@ -365,14 +404,7 @@ def kcore_peel(
     discipline as near_dup_clusters and cosine_topk_ivf, and at scale
     the per-round materialization is exactly the persisted frontier a
     production peeler keeps anyway (edges only shrink)."""
-    e = (
-        pairs.select(
-            F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _canonical(pairs, src, dst).localCheckpoint()
 
     def stats(edges: DataFrame, rnd: int) -> DataFrame:
         nodes = edges.select(F.col("u").alias("n")).union(
@@ -435,12 +467,7 @@ def adamic_adar(
     Returns (node_a, node_b, n_common, aa_micro), node_a < node_b,
     the top_k highest-scored absent links.
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     ctr = (
         und.groupBy(F.col("s").alias("w"))
         .agg(F.count("*").alias("deg"))
@@ -507,13 +534,7 @@ def label_propagation(
     Returns (node, label, rnd) — rnd 0 for seeds, else the round that
     assigned the label. Unreached nodes are absent.
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
     labels = seeds.select(
         F.col(node_col).alias("node"),
         F.col(label_col).alias("label"),
@@ -569,13 +590,7 @@ def bfs_hop_distances(
     Returns (node, dist) for every node within max_hops of a seed
     (seeds at dist 0); unreachable nodes are absent.
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
     dist = seeds.select(
         F.col(seeds.columns[0]).alias("node"),
         F.lit(0).cast("long").alias("dist"),
@@ -617,13 +632,7 @@ def clustering_coefficients(
     Returns top_k (node, degree, n_triangles, cc_ppm) by cc desc among
     nodes with deg ≥ 2 (deg-1 nodes have no defined coefficient).
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
     deg = (
         und.groupBy(F.col("s").alias("node"))
         .agg(F.count("*").cast("long").alias("degree"))
@@ -696,12 +705,7 @@ def degree_assortativity(
     Returns one row: (n_edges_directed, sx, sy, sxy, sxx, syy,
     assortativity_sq_signed_ppm).
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     deg = und.groupBy(F.col("s").alias("node")).agg(
         F.count("*").cast("long").alias("deg")
     )
@@ -899,13 +903,7 @@ def md5_random_walks(
     self-join on the min — the BSP shape shared with pagerank/BFS, no
     per-row Python anywhere. Walk count and length are literals, so
     the oracle unrolls them as CTEs."""
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges, src, dst).localCheckpoint()
     nodes = und.select(F.col("s").alias("node")).distinct()
     frontier = nodes.crossJoin(
         und.sparkSession.range(n_walks).select(F.col("id").alias("walk"))

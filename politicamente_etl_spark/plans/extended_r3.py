@@ -619,8 +619,9 @@ def _register_batch3():
         nearest-centroid assignment (sim.assign_cells, broadcast argmin)
         then per-cell mean pooling (sim.group_centroids, integer-snapped
         deterministic averages). The iterative-refinement building block —
-        at scale you loop this with localCheckpoint between rounds exactly
-        like dedup.near_dup_clusters loops label propagation."""
+        at scale you loop this with localCheckpoint between rounds, as
+        graph.fixpoint does for dedup.near_dup_clusters' label
+        propagation."""
         emb = T(spark, sf_dir, "embeddings")
         cent = emb.filter(F.col("vec_id") % 125 == 0).select(
             F.col("vec_id").alias("cell"),

@@ -1159,8 +1159,9 @@ def _register_recursive():
         ancestor chain in the implicit binary hierarchy parent(u) =
         floor(u/2) down to the root, reporting depth, node count, and
         path sum — the org-chart / BOM traversal class Spark previously
-        needed driver-side loops for (near_dup_clusters' iterative
-        label propagation is the hand-rolled analogue). The SQL text is
+        needed driver-side loops for (near_dup_clusters' label
+        propagation through graph.fixpoint is the hand-rolled
+        analogue). The SQL text is
         the SAME on both engines; recursion depth is bounded at
         log2(max user_id), and each iteration is one incremental
         union-all step over the frontier, so the plan's work is

@@ -298,7 +298,7 @@ def _register():
         graph is exactly the case that demands it: one giant component
         holds 1860 of 1880 parts, so per-hop label propagation
         (`near_dup_clusters`, right for clique-shaped near-dup graphs)
-        would need diameter-many rounds. The oracle closes the SAME
+        would need diameter-many rounds and raise past its `max_iter`. The oracle closes the SAME
         reachability with a DuckDB RECURSIVE CTE — two entirely different
         fixpoint engines, one answer, per-component membership checksums
         included."""

@@ -92,41 +92,113 @@ def test_components_handles_self_loops_and_dups(spark):
     assert out == {1: 1, 2: 1}
 
 
-def test_near_dup_clusters_star_mode_matches_propagation(spark):
-    """near_dup_clusters(algo='star') routes through the star operator and
-    reproduces the propagation labeling incl. singleton and canonical
-    semantics — the dedup pipeline's scale mode is a drop-in."""
+def test_near_dup_clusters_matches_star_components(spark):
+    """near_dup_clusters' labeling equals graph.connected_components on
+    the same pairs plus the singleton rule (a doc with no pair is its own
+    cluster) and the canonical rule (keep the doc whose id is its
+    cluster id) — the equivalence that lets long-chain graphs go through
+    the star operator instead."""
     nodes = spark.range(30).select(F.col("id").alias("doc_id"))
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8), (25, 9)], "doc_a long, doc_b long"
     )
+    star = {
+        r.node: r.component
+        for r in graph.connected_components(pairs, "doc_a", "doc_b").collect()
+    }
+    want = {(n, star.get(n, n), int(star.get(n, n) == n)) for n in range(30)}
     prop = {
         (r.doc_id, r.cluster_id, r.is_canonical)
         for r in dedup.near_dup_clusters(nodes, pairs).collect()
     }
-    star = {
-        (r.doc_id, r.cluster_id, r.is_canonical)
-        for r in dedup.near_dup_clusters(nodes, pairs, algo="star").collect()
-    }
-    assert star == prop
-    assert len(star) == 30  # every node labeled, singletons included
+    assert prop == want
+    assert len(prop) == 30  # every node labeled, singletons included
 
 
-def test_star_mode_ignores_ghost_bridge_nodes(spark):
+def test_near_dup_clusters_ignores_ghost_bridge_nodes(spark):
     """Pairs may reference nodes that df filtered out (e.g. quality-cut
-    docs whose candidate pairs were generated earlier). Both modes must
+    docs whose candidate pairs were generated earlier). The operator must
     label ONLY df nodes and must not let a ghost node bridge two
     components (code-review regression, round 4)."""
     nodes = spark.createDataFrame([(5,), (6,)], "doc_id long")
     pairs = spark.createDataFrame(
         [(0, 5), (0, 6)], "doc_a long, doc_b long"
     )  # node 0 is NOT in df — it must neither appear nor bridge 5 and 6
-    for algo in ("propagation", "star"):
-        out = {
-            r.doc_id: (r.cluster_id, r.is_canonical)
-            for r in dedup.near_dup_clusters(nodes, pairs, algo=algo).collect()
-        }
-        assert out == {5: (5, 1), 6: (6, 1)}, algo
+    out = {
+        r.doc_id: (r.cluster_id, r.is_canonical)
+        for r in dedup.near_dup_clusters(nodes, pairs).collect()
+    }
+    assert out == {5: (5, 1), 6: (6, 1)}
+
+
+def test_components_raise_when_not_converged(spark):
+    """One star round cannot flatten a 500-node chain: the operator must
+    raise rather than return a split labeling."""
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(500)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="not converged after 1 rounds"):
+        graph.connected_components(e, max_iter=1)
+
+
+def test_empty_input_gives_no_rows(spark):
+    """An empty input converges at once: the signature observed on an
+    empty checkpoint must arrive (not block) and no row is returned."""
+    e = spark.createDataFrame([], "src long, dst long")
+    assert graph.connected_components(e).collect() == []
+    docs = spark.createDataFrame([], "doc_id long")
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert dedup.near_dup_clusters(docs, pairs).collect() == []
+
+
+@pytest.mark.parametrize("base", [4 * 10**18, -4 * 10**18])
+def test_hash_sized_and_negative_ids(spark, base):
+    """Hash-derived ids (xxhash64 doc ids) span the whole BIGINT range: a
+    BIGINT sum of a few of them overflows under ANSI, so the convergence
+    signature must not. Both operators label a chain plus a pair."""
+    chain = [(base + i, base + i + 1) for i in range(6)]
+    edges = chain + [(base + 20, base + 21)]
+    want = {n: base for a, b in chain for n in (a, b)}
+    want.update({base + 20: base + 20, base + 21: base + 20})
+    e = spark.createDataFrame(edges, "src long, dst long")
+    star = {r.node: r.component for r in graph.connected_components(e).collect()}
+    assert star == want
+    docs = spark.createDataFrame([(n,) for n in want], "doc_id long")
+    pairs = e.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
+    prop = {
+        r.doc_id: (r.cluster_id, r.is_canonical)
+        for r in dedup.near_dup_clusters(docs, pairs).collect()
+    }
+    assert prop == {n: (c, int(n == c)) for n, c in want.items()}
+
+
+def test_convergence_rides_the_checkpoint_jobs(spark):
+    """Warm job counts on fixed small graphs: the convergence signature is
+    observed on each round's checkpoint, not collected by a job of its
+    own. Measured 19 and 31 on a 4-core box; with a separate count or
+    collect job per round the same calls ran 33 and 41."""
+    from politicamente_etl_spark.testing import spark_jobs
+
+    docs = spark.range(30).select(F.col("id").alias("doc_id"))
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8), (25, 9)], "doc_a long, doc_b long"
+    )
+    e = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
+        "src long, dst long",
+    )
+
+    def near_dup():
+        return dedup.near_dup_clusters(docs, pairs).collect()
+
+    def star():
+        return graph.connected_components(e).collect()
+
+    near_dup(), star()  # warm: parsing and codegen caches
+    _, nd_jobs = spark_jobs(spark, "probe:graph:near_dup_clusters", near_dup)
+    _, cc_jobs = spark_jobs(spark, "probe:graph:connected_components", star)
+    assert nd_jobs <= 19
+    assert cc_jobs <= 31
 
 
 def test_md5_random_walks_match_python_model(spark):

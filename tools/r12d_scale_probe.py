@@ -13,7 +13,7 @@ Axes measured:
   per-byte executor work, no shuffle anywhere).
 
 Shuffle bytes come from the Spark UI REST API with a per-measurement
-job group (same route as tools/shuffle_audit.py). Writes nothing to
+job group. Writes nothing to
 the repo; results recorded in SCALING.md.
 
 Usage: python tools/r12d_scale_probe.py
