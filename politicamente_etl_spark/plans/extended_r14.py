@@ -137,12 +137,12 @@ def _register():
         """Two-sided rename non-commutation (ADVICE r8, medium):
         rename_column already refused to rebase when IT lost the OCC
         race; now the in-flight writer refuses too. The interleave is
-        driven through the REAL rebase loops — racer subclasses commit
+        driven through the REAL claim loop — racer subclasses commit
         the rename inside the staging hook, between the write's
         snapshot and its version claim (review r9, first pass:
-        re-calling the classifier alone stays green even if the loops
-        stop consulting it) — so a regression in either loop's
-        conflict check or unstaging turns this row red. Blindly
+        re-calling the classifier alone stays green even if the loop
+        stops consulting it) — so a regression in its conflict check
+        or unstaging turns this row red. Blindly
         rebasing would link in files carrying the OLD physical name
         that POSTDATE the rename (reads never alias them: the column
         is NULL under the logical name), or commit a tombstone keyed
@@ -150,8 +150,9 @@ def _register():
         the unstaging proof (flag -1 if the table's row count moved);
         the retry against the new head commits clean under the new
         logical name. Ref: sources/txlog.py _rebase_conflict_since +
-        append/delete_where_logical rebase loops; Delta raises the
-        same conflict class for metadata-update races."""
+        the rebasing mode of _claim (append, delete_where_logical);
+        Delta raises the same conflict class for metadata-update
+        races."""
         from politicamente_etl_spark.sources.txlog import (
             CommitConflict,
             TxLogTable,

@@ -678,3 +678,136 @@ def test_rename_after_restore_reads_pre_rename_files(spark, tmp_path, evolved):
     assert "w" not in snap.columns
     assert _rows(snap, ["k", "w2"]) == sorted(want, key=repr)
     assert _rows(t.scan({"k": (3, 4)}), ["k", "w2"]) == [(3, None), (4, "4")]
+
+
+# -- one write protocol: leased staging, unstaging on a lost claim --------
+
+
+def _kv(spark, lo, hi, sign=1):
+    return spark.range(lo, hi, 1, 1).selectExpr("id AS k", f"id * {sign * 10} AS v")
+
+
+def _kv_table(spark, path):
+    """Two small commits (k 0..11, then 12..15), so optimize has files
+    to compact and merge/sync have files to rewrite."""
+    t = TxLogTable.create(spark, path, _kv(spark, 0, 12))
+    t.append(_kv(spark, 12, 16))
+    return t
+
+
+def _kv_rows(t):
+    return sorted((r.k, r.v) for r in t.snapshot().select("k", "v").collect())
+
+
+_BASE = [(k, k * 10) for k in range(16)]
+_WRITES = {
+    "append": (
+        lambda s, t: t.append(_kv(s, 16, 20)),
+        [(k, k * 10) for k in range(20)],
+    ),
+    "merge": (
+        lambda s, t: t.merge(_kv(s, 14, 18, -1), ["k"]),
+        [(k, k * 10) for k in range(14)] + [(k, -k * 10) for k in range(14, 18)],
+    ),
+    "optimize": (lambda s, t: t.optimize(), _BASE),
+    "sync": (
+        lambda s, t: t.sync_from(_kv(s, 4, 18, -1), ["k"]),
+        [(k, -k * 10) for k in range(4, 18)],
+    ),
+}
+
+
+def _hook_claim(monkeypatch, op, before):
+    """Run `before(handle, version)` once, just before `op`'s claim."""
+    real = TxLogTable._try_commit
+    fired = []
+
+    def hooked(self, version, manifest):
+        if not fired and manifest.get("op") == op:
+            fired.append(True)
+            before(self, version)
+        return real(self, version, manifest)
+
+    monkeypatch.setattr(TxLogTable, "_try_commit", hooked)
+    return fired
+
+
+@pytest.mark.parametrize("op", ["append", "merge", "optimize", "sync"])
+def test_vacuum_before_claim_spares_staged_dirs(spark, tmp_path, monkeypatch, op):
+    """A second handle's vacuum() between staging and the claim must
+    not delete the staged data dir: the committed snapshot still reads,
+    with the expected rows."""
+    t = _kv_table(spark, str(tmp_path / "t"))
+    fired = _hook_claim(monkeypatch, op, lambda h, _v: TxLogTable(h.spark, h.path).vacuum())
+    write, want = _WRITES[op]
+    write(spark, t)
+    assert fired
+    monkeypatch.undo()
+    assert _kv_rows(TxLogTable(spark, t.path)) == want
+
+
+def _staged_entries(path):
+    return {
+        root: set(os.listdir(os.path.join(path, root))) if os.path.isdir(os.path.join(path, root)) else set()
+        for root in ("data", "_deletes")
+    }
+
+
+@pytest.mark.parametrize("op", ["overwrite", "merge", "sync"])
+def test_lost_claim_unstages_every_dir(spark, tmp_path, monkeypatch, op):
+    """A one-shot op that loses the claim race raises CommitConflict and
+    leaves data/ and _deletes/ exactly as it found them."""
+    t = _kv_table(spark, str(tmp_path / "t"))
+    before = _staged_entries(t.path)
+
+    def steal(h, version):
+        with open(os.path.join(h.path, "_txlog", f"{version:020d}.json"), "w") as fh:
+            json.dump({"version": version, "op": "append", "added": [], "removed": []}, fh)
+
+    _hook_claim(monkeypatch, op, steal)
+    writes = {
+        "overwrite": lambda: t.overwrite(_kv(spark, 0, 4)),
+        "merge": lambda: t.merge(_kv(spark, 14, 18, -1), ["k"]),
+        "sync": lambda: t.sync_from(_kv(spark, 4, 18, -1), ["k"]),
+    }
+    with pytest.raises(CommitConflict):
+        writes[op]()
+    assert _staged_entries(t.path) == before
+    assert _kv_rows(TxLogTable(spark, t.path)) == _BASE
+
+
+def test_vacuum_spares_dir_committed_during_sweep(spark, tmp_path, monkeypatch):
+    """A staged dir whose writer commits after vacuum() folded the log
+    but before it swept the roots is not an orphan: it held its lease
+    when vacuum listed the roots."""
+    t = _kv_table(spark, str(tmp_path / "t"))
+    _, rels = t._stage_write(_kv(spark, 16, 20))
+    sweeper = TxLogTable(spark, t.path)
+    real_history = TxLogTable.history
+    fired = []
+
+    def commit_mid_vacuum(self):
+        if self is sweeper and not fired:
+            fired.append(True)
+            version = t.latest_version() + 1
+            assert t._try_commit(
+                version,
+                {"version": version, "op": "append", "added": rels, "removed": [], "stats": {}},
+            )
+            t._release_sidecar_lease(os.path.dirname(rels[0]))
+        return real_history(self)
+
+    monkeypatch.setattr(TxLogTable, "history", commit_mid_vacuum)
+    sweeper.vacuum()
+    assert fired
+    monkeypatch.undo()
+    assert _kv_rows(TxLogTable(spark, t.path)) == [(k, k * 10) for k in range(20)]
+
+
+def test_describe_history_reports_sync_stats(spark, tmp_path):
+    t = _kv_table(spark, str(tmp_path / "t"))
+    m = t.sync_from(_kv(spark, 4, 18, -1), ["k"])
+    rows = {r.op: r for r in t.describe_history().collect()}
+    assert m["sync_stats"]["files_rewritten"] > 0
+    assert rows["sync"].files_rewritten == m["sync_stats"]["files_rewritten"]
+    assert rows["sync"].n_tombstoned_keys == m["sync_stats"]["deleted_keys"] == 4

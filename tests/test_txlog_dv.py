@@ -167,10 +167,14 @@ def test_dv_conflicts_with_concurrent_rewrite(spark, monkeypatch):
     silently no-op."""
     t, path = _mk(spark)
     orig = TxLogTable._mark_sidecar_inflight
+    fired = []
 
     def interleave(abs_dir):
         # second handle compacts the table after our base was captured
-        TxLogTable(spark, path).optimize(target_file_bytes=1 << 30)
+        # (once: the compaction's own staged data dir is leased here too)
+        if not fired:
+            fired.append(True)
+            TxLogTable(spark, path).optimize(target_file_bytes=1 << 30)
         orig(abs_dir)
 
     monkeypatch.setattr(
