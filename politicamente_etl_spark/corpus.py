@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from politicamente_etl_spark.operators import dedup, text
+from politicamente_etl_spark.streaming.windows import run_stream
 
 
 def _state_rows(docs_with_digest: DataFrame, sig: DataFrame) -> DataFrame:
@@ -317,7 +318,7 @@ def stream_ingest(
             "append"
         ).parquet(os.path.join(root_path, "reports"))
 
-    (
+    run_stream(
         spark.readStream.schema(schema)
         .parquet(input_path)
         .writeStream.foreachBatch(_one_batch)
@@ -325,6 +326,4 @@ def stream_ingest(
             "checkpointLocation", os.path.join(root_path, "_stream_checkpoint")
         )
         .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )

@@ -47,14 +47,9 @@ def _register():
         initial data). One more parity with Delta's streaming-source
         option matrix."""
         from politicamente_etl_spark.sources.txlog import TxLogTable
-        from politicamente_etl_spark.sources.txlogstream import (
-            TxLogStreamDataSource,
-        )
+        from politicamente_etl_spark.sources.txlogstream import read_stream
+        from politicamente_etl_spark.streaming.windows import run_stream_to_table
 
-        try:
-            spark.dataSource.register(TxLogStreamDataSource)
-        except Exception:
-            pass  # already registered in this session
         o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         path = os.path.join(tempfile.mkdtemp(prefix="txlog_igdel_"), "t")
         t = TxLogTable.create(
@@ -63,22 +58,9 @@ def _register():
         t.append(o.filter(F.col("o_orderkey") % 2 == 1))
         t.set_constraint("key_pos", "o_orderkey >= 0")  # tail-invisible
         t.delete_where_rowindex("o_orderkey % 5 = 2")
-        name = "txlog_igdel_" + os.path.basename(os.path.dirname(path))
-        q = (
-            spark.readStream.format("txlogstream")
-            .option("path", path)
-            .option("ignore_deletes", "true")
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        streamed = spark.table(name).agg(
+        streamed = run_stream_to_table(
+            read_stream(spark, path, ignore_deletes="true"), "append"
+        ).agg(
             F.lit("streamed").alias("side"),
             F.count("*").cast("long").alias("n_rows"),
             F.sum("o_orderkey").cast("long").alias("key_sum"),

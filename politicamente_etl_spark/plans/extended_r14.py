@@ -269,14 +269,9 @@ def _register():
         sources/txlogstream.py read()/_alias_resolution."""
         from politicamente_etl_spark.plans.catalog import load_events
         from politicamente_etl_spark.sources.txlog import TxLogTable
-        from politicamente_etl_spark.sources.txlogstream import (
-            TxLogStreamDataSource,
-        )
+        from politicamente_etl_spark.sources.txlogstream import read_stream
+        from politicamente_etl_spark.streaming.windows import run_stream_to_table
 
-        try:
-            spark.dataSource.register(TxLogStreamDataSource)
-        except Exception:
-            pass  # already registered in this session
         ev = (
             load_events(spark, sf_dir)
             .filter(F.col("event_id") % 5 == 0)
@@ -293,22 +288,9 @@ def _register():
         t.append(post.filter("eid % 3 = 1"))
         # reversed projection order: relabel-by-position would swap
         t.append(post.filter("eid % 3 = 2").select("uid", "eid"))
-        name = "rentail_" + os.path.basename(os.path.dirname(path))
-        q = (
-            spark.readStream.format("txlogstream")
-            .option("path", path)
-            .option("ignore_changes", "true")
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(name).agg(
+        return run_stream_to_table(
+            read_stream(spark, path, ignore_changes="true"), "append"
+        ).agg(
             F.count("*").cast("long").alias("n_rows"),
             F.sum("eid").cast("long").alias("eid_sum"),
             F.sum("uid").cast("long").alias("uid_sum"),

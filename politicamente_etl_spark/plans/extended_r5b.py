@@ -1118,34 +1118,15 @@ def _register14():
         exactly once. Round-trips the whole storage layer through BOTH
         of Spark's execution surfaces."""
         from politicamente_etl_spark.sources.txlog import TxLogTable
-        from politicamente_etl_spark.sources.txlogstream import (
-            TxLogStreamDataSource,
-        )
+        from politicamente_etl_spark.sources.txlogstream import read_stream
+        from politicamente_etl_spark.streaming.windows import run_stream_to_table
 
-        try:
-            spark.dataSource.register(TxLogStreamDataSource)
-        except Exception:
-            pass  # already registered in this session
         ev = load_events(spark, sf_dir).select("event_id", "event_type")
         path = os.path.join(tempfile.mkdtemp(prefix="txlog_src_"), "t")
         t = TxLogTable.create(spark, path, ev.filter(F.col("event_id") % 2 == 0))
         t.append(ev.filter(F.col("event_id") % 2 == 1))
-        name = "txlog_src_tail_" + os.path.basename(os.path.dirname(path))
-        q = (
-            spark.readStream.format("txlogstream")
-            .option("path", path)
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return (
-            spark.table(name)
+            run_stream_to_table(read_stream(spark, path), "append")
             .groupBy("event_type")
             .agg(
                 F.count("*").cast("long").alias("n_events"),
@@ -1316,14 +1297,9 @@ def _register17():
         exactly-once at both ends is precisely what makes the answer
         batching-invariant, and the oracle checks it."""
         from politicamente_etl_spark.sources.txlog import TxLogTable
-        from politicamente_etl_spark.sources.txlogstream import (
-            TxLogStreamDataSource,
-        )
+        from politicamente_etl_spark.sources.txlogstream import read_stream
+        from politicamente_etl_spark.streaming.windows import run_stream
 
-        try:
-            spark.dataSource.register(TxLogStreamDataSource)
-        except Exception:
-            pass
         ev = load_events(spark, sf_dir).select("event_id", "event_type")
         stage = tempfile.mkdtemp(prefix="txlog_rt_")
         src = TxLogTable.create(
@@ -1346,19 +1322,12 @@ def _register17():
             # simulated redelivery: the txn gate must reject it
             state["t"].append(part, txn_id=f"b{batch_id}")
 
-        q = (
-            spark.readStream.format("txlogstream")
-            .option("path", src.path)
-            .load()
+        run_stream(
+            read_stream(spark, src.path)
             .writeStream.foreachBatch(apply)
             .trigger(availableNow=True)
             .option("checkpointLocation", os.path.join(stage, "_ckpt"))
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return (
             state["t"]
             .snapshot()

@@ -22,11 +22,7 @@ Why this is the right streaming contract:
   parallelism equals the commit's file count at any scale.
 
 Usage:
-    spark.dataSource.register(TxLogStreamDataSource)
-    (spark.readStream.format("txlogstream")
-        .option("path", table_path)
-        .load()
-        .writeStream...)
+    read_stream(spark, table_path, ignore_changes="true").writeStream...
 """
 
 from __future__ import annotations
@@ -34,6 +30,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator, Sequence
 
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -508,3 +505,16 @@ class TxLogStreamDataSource(DataSource):
             field_names=list(schema.fieldNames()),
             declared_version=getattr(self, "_schema_version", None),
         )
+
+
+def read_stream(spark, path: str, **options: str) -> DataFrame:
+    """The streaming DataFrame tailing the txlog table at `path`; `options`
+    are the source's (`ignore_changes`, `ignore_deletes`). Registers the
+    source first: registering the same class again just replaces it."""
+    spark.dataSource.register(TxLogStreamDataSource)
+    return (
+        spark.readStream.format("txlogstream")
+        .option("path", path)
+        .options(**options)
+        .load()
+    )

@@ -7,27 +7,45 @@ tumbling/sliding/session windows, watermarked late-data handling, and
 stateful dedup.
 
 Local testing drives a finite parquet file through the micro-batch engine
-(`run_stream_to_table` + processAllAvailable) and asserts batch
-equivalence: a streaming window aggregate over a replayed file must equal
-the batch `F.window` aggregate — that equivalence is what makes these
-oracle-checkable.
+and asserts batch equivalence: a streaming window aggregate over a
+replayed file must equal the batch `F.window` aggregate — that
+equivalence is what makes these oracle-checkable. Two functions carry
+every query here:
+
+- `run_stream(writer)` is the package's only `start()`: it starts the
+  query, drains it with processAllAvailable and stops it;
+- `stage_batches(spark, df, batch_col, prefix)` replays a frame as a file
+  stream with one micro-batch per `batch_col` value, in value order.
 
 Scale notes: state-store size is bounded by the watermark horizon
 (`withWatermark` lets Spark evict window/dedup state); without it, complete
-mode state grows with key cardinality. Shuffle partitioning of the state
-store follows spark.sql.shuffle.partitions at first start — size it for
-the target key cardinality.
+mode state grows with key cardinality. A stateful query fixes its
+state-store partition count from spark.sql.shuffle.partitions when it
+first starts, and AQE never coalesces state partitions. A plain session
+keeps the default 200, so every micro-batch would run 200-task stages
+over a few thousand rows. `run_stream` therefore sets the conf to
+min(session value, defaultParallelism) just before `start()` and
+restores it right after: `start()` clones the session the stream runs
+on, and the first batch pins the clone's count in the offset log, so
+the caller's session is left as it was and a restart from the same
+checkpoint keeps the first count whatever the conf says then.
 """
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from politicamente_etl_spark.schemas import EVENTS
 from pyspark.sql.types import (
+    IntegralType,
     LongType,
     StructField,
     StructType,
@@ -280,28 +298,15 @@ def stream_events_with_sentinel(
     production stream gets for free from continuously-arriving data —
     the sentinel is a test-harness construct, not a scale workaround.
 
-    Both staged files are written through `normalize_ts`, so the staging
-    dir is uniform TimestampType whatever vintage the source carries
-    (copying the raw ns-vintage file next to a µs sentinel would crash
-    the scan with a footer-type mismatch). Stage dirs are tracked and
-    removed at process exit."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    Both batches are staged through `normalize_ts`, so the staging dir is
+    uniform TimestampType whatever vintage the source carries (copying
+    the raw ns-vintage file next to a µs sentinel would crash the scan
+    with a footer-type mismatch)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = f"{sf_dir}/events.parquet"
     batch = normalize_ts(spark.read.parquet(src))
     max_ts = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
-
-    stage = tempfile.mkdtemp(prefix="events_sentinel_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    # re-land the real events NORMALIZED (not a raw byte copy) so both
-    # files in the stage share one ts vintage; write real data first so
-    # the sentinel's later mtime puts it in the second micro-batch.
-    batch.write.mode("overwrite").parquet(os.path.join(stage, "00_events"))
     sentinel = spark.createDataFrame(
         [
             (-(i + 1), max_ts, -1, t, 0.0, "{}")
@@ -310,19 +315,10 @@ def stream_events_with_sentinel(
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     ).withColumn("ts", F.col("ts") + F.expr(f"interval {horizon_days} days"))
-    sentinel = sentinel.select([f.name for f in batch.schema.fields])
-    sentinel.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage, "zz_sentinel")
+    staged = batch.withColumn("__batch", F.lit(0)).unionByName(
+        sentinel.withColumn("__batch", F.lit(1))
     )
-
-    raw = (
-        spark.readStream.schema(batch.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .load(stage)
-    )
-    return normalize_ts(raw)
+    return stage_batches(spark, staged, "__batch", "events_sentinel_")
 
 
 def enrich_join(events: DataFrame, dim: DataFrame, on: str = "event_type") -> DataFrame:
@@ -375,15 +371,11 @@ def stream_quality_audit(
             .parquet(audit_path)
         )
 
-    q = (
-        streaming_df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_stream(
+        streaming_df.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     try:
         # batch_id is now a partition column; directory-value inference
         # types it int — pin back to long for a stable contract schema.
@@ -431,16 +423,37 @@ def stream_upsert_sink(
         # localCheckpoint: materialize BEFORE overwriting the files we read
         write_managed(merged.localCheckpoint(), target_path)
 
-    q = (
-        streaming_df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_stream(
+        streaming_df.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        )
     )
+    return spark.read.parquet(target_path)
+
+
+def run_stream(writer: DataStreamWriter) -> StreamingQuery:
+    """Start `writer`'s query, drain everything its sources hold and stop
+    it; returns the stopped query (its progress stays readable).
+
+    The state-store partition count is taken from
+    min(spark.sql.shuffle.partitions, defaultParallelism), set only
+    around `start()` (module docstring: the stream runs on a session
+    cloned at start and pins the count in its offset log)."""
+    spark = writer._spark
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(
+        key, str(min(int(old), spark.sparkContext.defaultParallelism))
+    )
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set(key, old)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.read.parquet(target_path)
+    return q
 
 
 def run_stream_to_table(
@@ -449,17 +462,59 @@ def run_stream_to_table(
     """Drive a finite streaming plan to completion through the micro-batch
     engine and return the materialized memory-sink table."""
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    q = (
-        streaming_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
+    run_stream(
+        streaming_df.writeStream.outputMode(mode).format("memory").queryName(name)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return streaming_df.sparkSession.table(name)
+
+
+def _temp_dir(prefix: str) -> str:
+    """A fresh temp dir, removed at process exit."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+def stage_batches(
+    spark: SparkSession, df: DataFrame, batch_col: str, prefix: str
+) -> DataFrame:
+    """Replay `df` as a file stream with one micro-batch per distinct
+    `batch_col` value, in sorted value order; the stream's schema is
+    `df`'s without `batch_col`.
+
+    One write job stages the rows into a temp dir (prefix `prefix`,
+    removed at exit): coalesce(1) hands every row to one writer task and
+    partitionBy(batch_col) splits its output into one file per value.
+    (repartition(batch_col) would spread the writers, but AQE runs its
+    shuffle as a job of its own.) The file source reads files in mtime
+    order under maxFilesPerTrigger=1, so the files' mtimes are pinned in
+    value order. A value with no rows stages no file, and so no
+    micro-batch. recursiveFileLookup turns partition inference off, so
+    the value lives only in the directory names."""
+    stage = _temp_dir(prefix)
+    df.coalesce(1).write.mode("overwrite").partitionBy(batch_col).parquet(stage)
+    typed = int if isinstance(df.schema[batch_col].dataType, IntegralType) else str
+    dirs = {}
+    for name in os.listdir(stage):
+        col, _, value = name.partition("=")
+        if col == batch_col:
+            dirs[typed(value)] = os.path.join(stage, name)
+    for i, value in enumerate(sorted(dirs)):
+        t = 1_700_000_000 + 1000 * i
+        for name in os.listdir(dirs[value]):
+            os.utime(os.path.join(dirs[value], name), (t, t))
+    return (
+        spark.readStream.schema(df.drop(batch_col).schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .load(stage)
+    )
+
+
+def _parity(ev: DataFrame) -> DataFrame:
+    """`ev` with `__batch` = event_id parity: even ids stream first."""
+    return ev.withColumn("__batch", F.pmod("event_id", F.lit(2)))
 
 
 def tws_available() -> bool:
@@ -563,45 +618,14 @@ def stream_cdc_changelog(
 
     Returns the changelog: (batch_id, group, old_n, new_n, change_type).
     Deterministic end-to-end — every row is oracle-checkable."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from politicamente_etl_spark.operators import cdc
+    from politicamente_etl_spark.sources.txlog import TxLogTable
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", group_col
     )
-    stage = tempfile.mkdtemp(prefix="events_cdc_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    a_dir, b_dir = os.path.join(stage, "a"), os.path.join(stage, "b")
-    # coalesce(1): each half must be exactly ONE file, or
-    # maxFilesPerTrigger=1 would split a half into several micro-batches
-    # and the two-batch changelog contract (and its oracle) breaks at
-    # larger scale factors where the write would otherwise fan out.
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(a_dir)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(b_dir)
-    # pin micro-batch order explicitly: the file source orders by
-    # modification time, so stamp half B strictly later.
-    now = 1_700_000_000
-    for d, t in ((a_dir, now), (b_dir, now + 1000)):
-        for name in os.listdir(d):
-            os.utime(os.path.join(d, name), (t, t))
-
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .load(stage)
-    )
-
-    from politicamente_etl_spark.sources.txlog import TxLogTable
+    raw = stage_batches(spark, _parity(ev), "__batch", "events_cdc_")
+    stage = _temp_dir("events_cdc_state_")
 
     empty_view = spark.createDataFrame([], f"{group_col} string, n long")
     view = TxLogTable.create(spark, os.path.join(stage, "_view"), empty_view)
@@ -648,18 +672,11 @@ def stream_cdc_changelog(
         clog.append(changes, txn_id=f"cdc-changes-{batch_id}")
         view.append(delta, txn_id=f"cdc-delta-{batch_id}")
 
-    q = (
+    run_stream(
         raw.writeStream.foreachBatch(apply_batch)
         .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", os.path.join(stage, "_ckpt")
-        )
-        .start()
+        .option("checkpointLocation", os.path.join(stage, "_ckpt"))
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # lazy read of the changelog table (tempdir lives until process
     # exit); unlike the view-in-memory form there is NO collect anywhere
     return clog.snapshot().select(
@@ -686,35 +703,18 @@ def stream_txlog_exactly_once(spark, sf_dir: str) -> DataFrame:
     hold each input row exactly once, which the driver's oracle checks
     against the raw events table.
 
-    Two deterministic micro-batches (events split by parity, one file
-    per half, mtime-pinned — same staging as stream_cdc_changelog).
-    Returns the final snapshot rolled up by event_type with integer
-    checksums, plus the commit count so a silent duplicate commit would
-    flip the row even if the rollup happened to agree."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    Two deterministic micro-batches (events split by parity — same
+    staging as stream_cdc_changelog). Returns the final snapshot rolled
+    up by event_type with integer checksums, plus the commit count so a
+    silent duplicate commit would flip the row even if the rollup
+    happened to agree."""
     from politicamente_etl_spark.sources.txlog import TxLogTable
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "event_type"
     )
-    stage = tempfile.mkdtemp(prefix="events_txlog_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    a_dir, b_dir = os.path.join(stage, "a"), os.path.join(stage, "b")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(a_dir)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(b_dir)
-    now = 1_700_000_000
-    for d, t in ((a_dir, now), (b_dir, now + 1000)):
-        for name in os.listdir(d):
-            os.utime(os.path.join(d, name), (t, t))
-
+    raw = stage_batches(spark, _parity(ev), "__batch", "events_txlog_")
+    stage = _temp_dir("events_txlog_state_")
     table_path = os.path.join(stage, "table")
     state: dict[str, TxLogTable] = {}
 
@@ -730,23 +730,11 @@ def stream_txlog_exactly_once(spark, sf_dir: str) -> DataFrame:
         # simulated at-least-once redelivery: MUST be a no-op
         state["t"].append(rows, txn_id=f"batch-{batch_id}")
 
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .load(stage)
-    )
-    q = (
+    run_stream(
         raw.writeStream.foreachBatch(apply_batch)
         .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(stage, "_ckpt"))
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     t = state["t"]
     n_commits = len(t.history())
     return (
@@ -781,38 +769,12 @@ def stream_hll_register_merge(
     register table (bucket, max_rho): provably equal to the batch
     registers over the whole feed — which is exactly what the driver
     oracle checks."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from politicamente_etl_spark.operators.agg import hll_registers
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", value_col
     )
-    stage = tempfile.mkdtemp(prefix="events_hll_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    a_dir, b_dir = os.path.join(stage, "a"), os.path.join(stage, "b")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(a_dir)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(b_dir)
-    now = 1_700_000_000
-    for d, t in ((a_dir, now), (b_dir, now + 1000)):
-        for name in os.listdir(d):
-            os.utime(os.path.join(d, name), (t, t))
-
-    raw = (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .load(stage)
-    )
-
+    raw = stage_batches(spark, _parity(ev), "__batch", "events_hll_")
     state: dict[str, DataFrame] = {
         "regs": spark.createDataFrame([], "bucket long, max_rho int")
     }
@@ -827,18 +789,11 @@ def stream_hll_register_merge(
             .localCheckpoint()
         )
 
-    ckpt = tempfile.mkdtemp(prefix="events_hll_ckpt_")
-    atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
-    q = (
+    run_stream(
         raw.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", _temp_dir("events_hll_ckpt_"))
         .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return state["regs"]
 
 
@@ -862,58 +817,24 @@ def stream_events_time_halves(
     way. Time-ordering across batches is preserved for any subset: the
     median split point moves, but every batch-a row still precedes every
     batch-b row in event time."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     ev = normalize_ts(
         spark.read.parquet(f"{sf_dir}/events.parquet")
     ).select("event_id", "user_id", "ts", "value")
     if predicate is not None:
-        # One scan instead of three: the median job and both half-writes
-        # below would each re-run scan+filter; pin the (small) qualifying
-        # set once. Unfiltered callers keep the plain scan — re-reading a
+        # One scan instead of two: the median job and the staging write
+        # would each re-run scan+filter; pin the (small) qualifying set
+        # once. Unfiltered callers keep the plain scan — re-reading a
         # single parquet file twice is cheaper than holding it on-heap.
-        ev = ev.localCheckpoint()
+        ev = ev.filter(predicate).localCheckpoint()
     mid = ev.agg(
         F.expr("percentile(unix_micros(ts), 0.5)").cast("long").alias("m")
     ).collect()[0]["m"]
-    stage = tempfile.mkdtemp(prefix="events_halves_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    # ONE write job stages both halves (r9 opt): repartition(flag) puts
-    # each half in its own task, partitionBy(flag) splits the output one
-    # file per half — the txlog _stage_write clustering pattern — instead
-    # of two sequential filter+coalesce(1) write jobs re-reading the
-    # source. recursiveFileLookup on the reader disables partition
-    # inference, so the flag lives only in directory names and the
-    # streamed schema stays exactly ev.schema. An all-ties edge (empty
-    # second half) stages no file for it; a missing and an empty
-    # micro-batch are both no-op state folds, so emissions are identical.
-    (
-        ev.withColumn(
-            "__half",
-            F.when(F.expr(f"unix_micros(ts) <= {mid}"), "a").otherwise("b"),
-        )
-        .repartition("__half")
-        .write.mode("overwrite")
-        .partitionBy("__half")
-        .parquet(stage)
-    )
-    a_dir = os.path.join(stage, "__half=a")
-    b_dir = os.path.join(stage, "__half=b")
-    now = 1_700_000_000
-    for d, t in ((a_dir, now), (b_dir, now + 1000)):
-        if not os.path.isdir(d):
-            continue
-        for name in os.listdir(d):
-            os.utime(os.path.join(d, name), (t, t))
-    return (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .load(stage)
+    # An all-ties edge (empty second half) stages no file for it; a
+    # missing and an empty micro-batch are both no-op state folds, so
+    # emissions are identical.
+    half = F.when(F.expr("unix_micros(ts)") <= F.lit(mid), 0).otherwise(1)
+    return stage_batches(
+        spark, ev.withColumn("__half", half), "__half", "events_halves_"
     )
 
 

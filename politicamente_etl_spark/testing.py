@@ -29,18 +29,26 @@ def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 def spark_jobs(spark, label: str, fn):
     """(fn(), number of Spark jobs fn launched). The jobs run under the
-    job group and description `label`, counted on the status tracker once
-    the listener bus has drained; a label already used counts its earlier
-    jobs too."""
+    job group and description `label` and carry `label` as a job tag;
+    they are counted on the status tracker, by group and by tag, once the
+    listener bus has drained. A stream started inside fn runs its
+    micro-batches on a thread that the job group does not reach but the
+    tag does, so those jobs count too. A label already used counts its
+    earlier jobs too."""
     sc = spark.sparkContext
     sc.setJobGroup(label, label)
+    sc.addJobTag(label)
     try:
         out = fn()
     finally:
+        sc.removeJobTag(label)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(label))
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    ids = set(sc.statusTracker().getJobIdsForGroup(label))
+    ids.update(jsc.statusTracker().getJobIdsForTag(label))
+    return out, len(ids)
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:

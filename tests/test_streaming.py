@@ -342,3 +342,137 @@ def test_transform_with_state_running_totals(spark, tmp_path):
     assert max(per_user[9]) == (1, 1.0)
     # batch-1 emission proves state carry, not an all-data re-read
     assert (2, 5.0) in per_user[7]
+
+
+# ---------------------------------------------------------------------------
+# run_stream / stage_batches: the one runner and the one micro-batch stager
+# ---------------------------------------------------------------------------
+
+
+def _label(what: str) -> str:
+    import uuid
+
+    return f"{what}-{uuid.uuid4().hex[:8]}"
+
+
+def test_spark_jobs_counts_micro_batch_jobs(spark, sf_dir):
+    """The job group does not reach a stream's micro-batch thread, the
+    job tag does: spark_jobs around a stateful stream counts its jobs."""
+    from politicamente_etl_spark.testing import spark_jobs
+
+    ev = W.stream_events(spark, sf_dir)
+    _, jobs = spark_jobs(
+        spark,
+        _label("stream-jobs"),
+        lambda: W.run_stream_to_table(W.stateful_user_counts(ev), "update"),
+    )
+    assert jobs >= 1
+
+
+def test_run_stream_sizes_state_partitions_to_parallelism(
+    spark, sf_dir, tmp_path
+):
+    """Under a 200-partition session a stateful query started through
+    run_stream gets defaultParallelism state partitions, the session conf
+    is left as it was, and a restart from the same checkpoint keeps the
+    first count whatever the conf says then."""
+    key = "spark.sql.shuffle.partitions"
+    par = spark.sparkContext.defaultParallelism
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "event_id", "user_id"
+    )
+    src = tmp_path / "src"
+    ev.filter("event_id % 2 = 0").write.parquet(str(src / "a"))
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+    )
+
+    def state_partitions(conf: str) -> int:
+        spark.conf.set(key, conf)
+        q = W.run_stream(
+            W.stateful_user_counts(stream)
+            .writeStream.format("noop")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+        )
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+    old = spark.conf.get(key)
+    try:
+        assert state_partitions("200") == par
+        assert spark.conf.get(key) == "200"
+        ev.filter("event_id % 2 = 1").write.parquet(str(src / "b"))
+        assert state_partitions(str(max(1, par // 2))) == par
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_stage_batches_one_write_job_in_value_order(spark, sf_dir, tmp_path):
+    """Staging is one write job (the parity stagers ran two), and the
+    batches arrive in batch-value order: integral values sort as numbers,
+    so 2 streams before 10."""
+    from politicamente_etl_spark.testing import spark_jobs
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
+    df = ev.withColumn(
+        "b", F.when(F.col("event_id") % 2 == 0, 10).otherwise(2)
+    )
+    stream, jobs = spark_jobs(
+        spark,
+        _label("stage-batches"),
+        lambda: W.stage_batches(spark, df, "b", "stage_order_"),
+    )
+    assert jobs == 1
+    assert stream.columns == ["event_id"]
+
+    seen: list[set[int]] = []
+    W.run_stream(
+        stream.writeStream.foreachBatch(
+            lambda b, _: seen.append({r.event_id % 2 for r in b.collect()})
+        ).option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    assert seen == [{1}, {0}]
+
+
+def test_stage_batches_skips_values_without_rows(spark, sf_dir, tmp_path):
+    """A batch value with no rows stages no file, so no micro-batch."""
+    import glob
+    import os
+    import tempfile
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
+    prefix = _label("stage_empty") + "_"
+    df = ev.withColumn("half", F.when(F.col("event_id") >= 0, 0).otherwise(1))
+    stream = W.stage_batches(spark, df, "half", prefix)
+    [stage] = glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*"))
+    files = [
+        os.path.relpath(os.path.join(d, f), stage)
+        for d, _, fs in os.walk(stage)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert [os.path.dirname(f) for f in files] == ["half=0"]
+
+    sizes: list[int] = []
+    W.run_stream(
+        stream.writeStream.foreachBatch(
+            lambda b, _: sizes.append(b.count())
+        ).option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    assert sizes == [ev.count()]
+
+
+def test_time_halves_stage_only_predicate_rows(spark, sf_dir):
+    """With a predicate, the time-halves stager streams only the rows
+    that pass it."""
+    keep = F.col("value") >= 100.0
+    out = W.run_stream_to_table(
+        W.stream_events_time_halves(spark, sf_dir, predicate=keep), "append"
+    )
+    n_batch = (
+        spark.read.parquet(f"{sf_dir}/events.parquet").filter(keep).count()
+    )
+    assert out.count() == n_batch
+    assert out.filter(~keep).count() == 0
