@@ -6,8 +6,10 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash → CORRECTNESS_r{N}.json).
 
 All real logic lives in ``politicamente_etl_spark``; this module only
-adapts the query catalog (plans/catalog.py + plans/extended.py) to the
-driver's three-function surface.
+adapts the query catalog (``plans/catalog.CATALOG``, whose entries live in
+plans/catalog.py and the family modules it names in ``FAMILY_MODULES``) to
+the driver's three-function surface. ``queries()`` and ``oracle_sql()``
+iterate the catalog, which imports every family module.
 
 Driver-window rotation: the driver emits correctness rows for exactly the
 first 50 dict entries, so ``queries()`` orders by verification priority.

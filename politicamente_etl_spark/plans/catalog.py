@@ -9,11 +9,19 @@ use the decimal-snap pattern (functions.scalar) so value hashes match
 bit-for-bit.
 
 Reference surface queries live here; the extended LLM-data-pipeline surface
-(text analysis, dedup, similarity, events) is in plans/extended.py.
+(text analysis, dedup, similarity, events) lives in the family modules named
+by `FAMILY_MODULES` (plans/extended*.py). `CATALOG` imports a family module
+only when a name it owns is looked up, so a client that runs one query pays
+for compiling one module, not all of them.
 """
 
 from __future__ import annotations
 
+import importlib
+import os
+import re
+import threading
+from collections.abc import Iterator, Mapping
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -45,19 +53,136 @@ class Query:
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
-CATALOG: dict[str, Query] = {}
+# The family modules, in the order their entries iterate (after this
+# module's own). Each registers its queries when imported; the catalog
+# imports one only when a name it owns is looked up.
+FAMILY_MODULES = (
+    "extended", "extended_r3", "extended_r3b", "extended_r4", "extended_r4b",
+    "extended_r5", "extended_r5b", "extended_r6", "extended_r6b",
+    "extended_r6c", "extended_r6d", "extended_r6e", "extended_r6f",
+    "extended_r6g", "extended_r6h", "extended_r7", "extended_r8",
+    "extended_r9", "extended_r9b", "extended_r9c", "extended_r10",
+    "extended_r10b", "extended_r10c", "extended_r10d", "extended_r10e",
+    "extended_r10f", "extended_r10g", "extended_r10h", "extended_r10i",
+    "extended_r11", "extended_r11b", "extended_r11c", "extended_r11d",
+    "extended_r11e", "extended_r11f", "extended_r11g", "extended_r11h",
+    "extended_r11i", "extended_r12", "extended_r12b", "extended_r12c",
+    "extended_r12d", "extended_r12e", "extended_r12f", "extended_r12g",
+    "extended_r12h", "extended_r12i", "extended_r13", "extended_r13b",
+    "extended_r13c", "extended_r13d", "extended_r13e", "extended_r13f",
+    "extended_r13g", "extended_r13h", "extended_r14", "extended_r14b",
+)
+
+# A family module's registrations as they appear in its source: the name
+# literal right after `@register(`.
+_REGISTER_RE = re.compile(r'@register\(\s*"([^"]+)"')
+
+
+class Catalog(Mapping[str, Query]):
+    """Read-only name -> Query mapping that imports a family module only
+    when a name it owns is looked up.
+
+    Which module owns which name comes from an index built, on the first
+    lookup this module's own entries cannot answer, by scanning the family
+    modules' sources for ``@register("<name>"`` (a few ms; importing all of
+    them compiles ~34k lines). The index only picks which module to import
+    first: when it names no module, or the module it names does not
+    register the name, every module is imported before a lookup misses,
+    so a lookup answers exactly as a fully imported catalog would.
+    Iterating (and ``len``/``items``/``values``) imports every module and
+    yields this module's entries, then each family module's in
+    ``FAMILY_MODULES`` order, each in registration order, whatever order
+    the modules were imported in."""
+
+    def __init__(self) -> None:
+        self._entries: dict[str, Query] = {}
+        # two modules imported on different threads may register at once;
+        # imports never run under this lock (an import lock held by
+        # another registering thread would deadlock against it)
+        self._lock = threading.Lock()
+        self._owners: dict[str, str] | None = None
+
+    def _index(self) -> dict[str, str]:
+        """name -> owning module (full dotted name), first owner wins."""
+        if self._owners is None:
+            here = os.path.dirname(os.path.abspath(__file__))
+            owners: dict[str, str] = {}
+            for mod in FAMILY_MODULES:
+                with open(os.path.join(here, f"{mod}.py"), encoding="utf-8") as fh:
+                    for name in _REGISTER_RE.findall(fh.read()):
+                        owners.setdefault(name, f"{__package__}.{mod}")
+            self._owners = owners
+        return self._owners
+
+    def _load_all(self) -> None:
+        for mod in FAMILY_MODULES:
+            importlib.import_module(f"{__package__}.{mod}")
+
+    def _lookup(self, name: str) -> Query | None:
+        q = self._entries.get(name)
+        if q is None:
+            owner = self._index().get(name)
+            if owner is not None:
+                importlib.import_module(owner)
+                q = self._entries.get(name)
+            if q is None:
+                self._load_all()
+                q = self._entries.get(name)
+        return q
+
+    def __getitem__(self, name: str) -> Query:
+        q = self._lookup(name)
+        if q is None:
+            raise KeyError(name)
+        return q
+
+    def __contains__(self, name: object) -> bool:
+        return self._lookup(name) is not None
+
+    def __iter__(self) -> Iterator[str]:
+        self._load_all()
+        rank = {f"{__package__}.{m}": i for i, m in enumerate(FAMILY_MODULES, 1)}
+        rank[__name__] = 0
+        last = len(rank)
+        with self._lock:
+            entries = list(self._entries.values())
+        # sorted() is stable: within a module, registration order stays
+        entries.sort(key=lambda q: rank.get(q.fn.__module__, last))
+        return iter([q.name for q in entries])
+
+    def __len__(self) -> int:
+        self._load_all()
+        return len(self._entries)
+
+    def _add(self, q: Query) -> None:
+        # Any registration but this module's own must come from the module
+        # the index names: a lookup would otherwise answer differently
+        # depending on which modules happen to be imported. (This module's
+        # entries register when it is imported, before any family module
+        # can, so a family module re-using one hits the duplicate check.)
+        if q.fn.__module__ != __name__:
+            owner = self._index().get(q.name)
+            if owner is not None and owner != q.fn.__module__:
+                raise ValueError(
+                    f"catalog name collision: {q.name!r} belongs to {owner}"
+                )
+        with self._lock:
+            # last-wins overwriting silently dropped an existing query once
+            # (round 7: a draft re-used int8_quantization_report and ate the
+            # r10b original) — duplicates are always a registration bug
+            if q.name in self._entries:
+                raise ValueError(
+                    f"catalog name collision: {q.name!r} is already registered"
+                )
+            self._entries[q.name] = q
+
+
+CATALOG = Catalog()
 
 
 def register(name: str, sql: str | None, bench: bool = False, tags: tuple[str, ...] = ()):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        # last-wins overwriting silently dropped an existing query once
-        # (round 7: a draft re-used int8_quantization_report and ate the
-        # r10b original) — duplicates are always a registration bug
-        if name in CATALOG:
-            raise ValueError(
-                f"catalog name collision: {name!r} is already registered"
-            )
-        CATALOG[name] = Query(name=name, fn=fn, sql=sql, bench=bench, tags=tags)
+        CATALOG._add(Query(name=name, fn=fn, sql=sql, bench=bench, tags=tags))
         return fn
 
     return deco
@@ -543,63 +668,3 @@ def q_insert_if_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = o.filter(F.col("o_orderkey") < 1000)
     new = o.filter((F.col("o_orderkey") >= 500) & (F.col("o_orderkey") < 1500))
     return sinks.insert_if_absent(existing, new, ["o_orderkey"])
-
-
-# Extended surface registers on import (same CATALOG).
-from politicamente_etl_spark.plans import extended as _extended  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r3 as _extended_r3  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r3b as _extended_r3b  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r4 as _extended_r4  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r4b as _extended_r4b  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r5 as _extended_r5  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r5b as _extended_r5b  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r6 as _extended_r6  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r6b as _extended_r6b  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r6c as _extended_r6c  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r6d as _extended_r6d  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r6e as _extended_r6e  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r6f as _extended_r6f  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r6g as _extended_r6g  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r6h as _extended_r6h  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r7 as _extended_r7  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r8 as _extended_r8  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r9 as _extended_r9  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r9b as _extended_r9b  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r9c as _extended_r9c  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r10 as _extended_r10  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r10b as _extended_r10b  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r10c as _extended_r10c  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r10d as _extended_r10d  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r10e as _extended_r10e  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r10f as _extended_r10f  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r10g as _extended_r10g  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r10h as _extended_r10h  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r10i as _extended_r10i  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r11 as _extended_r11  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r11b as _extended_r11b  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r11c as _extended_r11c  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r11d as _extended_r11d  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r11e as _extended_r11e  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r11f as _extended_r11f  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r11g as _extended_r11g  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r11h as _extended_r11h  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r11i as _extended_r11i  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r12 as _extended_r12  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r12b as _extended_r12b  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r12c as _extended_r12c  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r12d as _extended_r12d  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r12e as _extended_r12e  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r12f as _extended_r12f  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r12g as _extended_r12g  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r12h as _extended_r12h  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r12i as _extended_r12i  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r13 as _extended_r13  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r13b as _extended_r13b  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r13c as _extended_r13c  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r13d as _extended_r13d  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r13e as _extended_r13e  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r13f as _extended_r13f  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r13g as _extended_r13g  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r13h as _extended_r13h  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r14 as _extended_r14  # noqa: E402,F401
-from politicamente_etl_spark.plans import extended_r14b as _extended_r14b  # noqa: E402,F401

@@ -1075,8 +1075,11 @@ def _register():
         # r9 opt: fan the one-split bench scan out before the per-row
         # double-fold cosine against the broadcast query set
         # (single-core otherwise; no-op at production split counts).
+        # The queries come from their own scan, not from the spread one:
+        # the filter would be pushed below the repartition and give the
+        # 5-row broadcast side a shuffle of its own.
         emb = core.spread(T(spark, sf_dir, "embeddings"), "vec_id")
-        queries = emb.filter(F.col("vec_id") < 5)
+        queries = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5)
         return sim.cosine_topk(emb, queries, k=10)
 
     @register(

@@ -122,9 +122,8 @@ def _register():
     # (label, dim) grain — plans/extended_r10b.py
     # `int8_quantization_report` (milli fixed-point). A round-7 draft
     # duplicated the concept at global-dim grain and silently overwrote
-    # that CATALOG entry (register() is last-wins); removed in favor of
-    # the richer original. New registrations must grep the catalog for
-    # the name first.
+    # that CATALOG entry (register() was last-wins then; a name collision
+    # now raises ValueError); removed in favor of the richer original.
 
     @register(
         "wav_decode_stats",

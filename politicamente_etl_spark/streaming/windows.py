@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from politicamente_etl_spark.schemas import EVENTS
+from politicamente_etl_spark.sources import readers
 from pyspark.sql.types import (
     IntegralType,
     LongType,
@@ -88,10 +89,11 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Streaming sources need an explicit schema; derive it from the batch
     parquet footer instead of hardcoding a vintage, then normalize ts
-    through the same branch as the batch loader."""
+    through the same branch as the batch loader. The footer schema comes
+    from `load_table`'s cache, which is keyed on the nanosAsLong conf set
+    just before, so only the first call for a file runs an inference job."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = readers.load_table(spark, sf_dir, "events").schema  # pins UTC too
     raw = (
         spark.readStream.schema(schema)
         .format("parquet")

@@ -1556,6 +1556,28 @@ def test_flagship_build_runs_no_spark_job(spark, sf_dir):
     assert jobs == 0
 
 
+def test_cosine_topk_broadcasts_queries_without_shuffle(spark, sf_dir):
+    """The 5 query vectors are scanned and filtered on their own, not
+    sliced from the spread corpus: the filter would be pushed below the
+    repartition and give the broadcast side an exchange (and a job) of its
+    own. A warm call runs at most 4 jobs."""
+    name = "cosine_topk"
+    df = q(name, spark, sf_dir)
+    df.collect()  # executes THIS frame, so the inspected plan is AQE's final
+    lines = df._jdf.queryExecution().executedPlan().toString().split("\n")
+    at = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
+    depth = lines[at].index("BroadcastExchange")
+    below = []
+    for ln in lines[at + 1 :]:
+        body = ln.lstrip(" :|+-")
+        if not body or len(ln) - len(body) <= depth:
+            break
+        below.append(body)
+    assert below and not any("Exchange" in ln for ln in below), "\n".join(lines)
+    _, jobs = spark_jobs(spark, "probe:cosine:warm", lambda: q(name, spark, sf_dir).collect())
+    assert jobs <= 4
+
+
 def _column_built_minhash_pairs(df, n_perm=8, band_size=2):
     """`minhash_near_dup_pairs` built from Column objects node by node —
     the reference form the SQL-string builders in operators/dedup.py

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from politicamente_etl_spark.plans.catalog import CATALOG
 from politicamente_etl_spark.streaming import windows as W
+from politicamente_etl_spark.testing import spark_jobs
 
 
 def test_stream_equals_batch_tumbling(spark, sf_dir):
@@ -27,6 +28,15 @@ def test_stream_equals_batch_tumbling(spark, sf_dir):
         .reset_index(drop=True)
     )
     assert stream_out.equals(batch_out)
+
+
+def test_stream_events_warm_call_runs_no_job(spark, sf_dir):
+    """The stream's schema comes from load_table's footer-schema cache: a
+    warm stream_events runs no Spark job (an uncached footer read runs an
+    inference job on every call)."""
+    W.stream_events(spark, sf_dir)  # warm
+    _, jobs = spark_jobs(spark, "probe:stream_events", lambda: W.stream_events(spark, sf_dir))
+    assert jobs == 0
 
 
 def test_watermark_two_batches(spark, tmp_path):

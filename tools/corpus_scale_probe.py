@@ -32,8 +32,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from politicamente_etl_spark.plans.catalog import CATALOG  # noqa: E402
-import politicamente_etl_spark.plans.extended  # noqa: E402,F401
-import politicamente_etl_spark.plans.extended_r3  # noqa: E402,F401
 from politicamente_etl_spark.session import get_spark  # noqa: E402
 from politicamente_etl_spark.sources.readers import load_table  # noqa: E402
 

@@ -26,7 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from politicamente_etl_spark.plans.catalog import CATALOG, load_events  # noqa: E402
-import politicamente_etl_spark.plans.extended  # noqa: E402,F401
 from politicamente_etl_spark.session import get_spark  # noqa: E402
 
 PROBE_QUERIES = [
